@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Loaders for the test corpus (one parquet per table, see TESTDATA.md).
   * Everything goes through the parquet reader so filter pushdown / column
   * pruning reach the scan; at prod scale the same names would resolve to
-  * partitioned Delta/JDBC sources via [[graft.core.io.TableSource]].
+  * partitioned Delta/JDBC sources via [[graft.etl.Pipeline.Source]].
   */
 object Tables {
   val names: Seq[String] = Seq(

@@ -26,21 +26,31 @@ import org.apache.spark.sql.types._
   */
 object Cleanse {
 
-  /** Default clock = plan-time current_timestamp(), like the reference. */
+  /** Per-query clock = plan-time current_timestamp(), like the reference.
+    * The optimizer inlines a new literal into each query: one clock per
+    * streaming batch, paid for by compiling each query's code afresh. A
+    * clock shared by several queries of one run is a
+    * [[graft.functions.RunTimestamp]] instead, which generated code reads
+    * through a reference (see `Pipeline.processTable`).
+    */
   def now(): Column = current_timestamp()
 
   /** True when the value's string form is obvious garbage for a temporal
-    * column: 1-3 letters, length <= 3, or contains no digit
-    * (ingest.py:521-527 — the isNull arm is handled by callers).
+    * column: length <= 3 (which covers the reference's 1-3 letters arm),
+    * or no ASCII digit (ingest.py:521-527 — the isNull arm is handled by
+    * callers).
     */
   def garbageTemporal(c: Column): Column = {
     val s = c.cast("string")
-    s.rlike("^[A-Za-z]{1,3}$") || length(s) <= 3 || !s.rlike(".*\\d+.*")
+    length(s) <= 3 || !s.rlike("\\d")
   }
 
-  /** Null out garbage in a timestamp-typed column (ingest.py:519-528). */
+  /** Null out garbage in a timestamp-typed column (ingest.py:519-528). A
+    * null input needs no arm of its own: it makes the condition null, and
+    * the CASE falls through to the null input.
+    */
   def nullGarbageTimestamp(c: Column): Column =
-    when(c.isNull || garbageTemporal(c), lit(null)).otherwise(c)
+    when(garbageTemporal(c), lit(null)).otherwise(c)
 
   /** ETL_* columns are never null: default to the clock (ingest.py:530-535). */
   def defaultEtlTimestamp(c: Column, clock: Column): Column = coalesce(c, clock)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSess
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.util.{Failure, Success, Try}
+import graft.functions.RunTimestamp
 
 /** Table-pipeline orchestration: the reference's `process_table` state
   * machine (ingest.py:702-832) re-expressed with pluggable IO and a
@@ -216,6 +217,13 @@ object Pipeline {
 
   /** One table end-to-end: load → conform → (mode-specific filter) →
     * validate → write, with a single observed row count.
+    *
+    * The default `clock` is captured once per call, so the emptiness
+    * probe and the write stamp the same instant. It and the watermark
+    * bound are [[graft.functions.RunTimestamp]]s, which generated code
+    * reads through a reference: the source text, which keys Spark's
+    * codegen cache, stays the same from one cron run to the next, and the
+    * conform stage compiles once per JVM instead of once per run.
     */
   def processTable(
       spark: SparkSession,
@@ -225,7 +233,7 @@ object Pipeline {
       mode: WriteMode,
       watermarks: WatermarkStore,
       historicalLoad: Boolean = false,
-      clock: Column = Cleanse.now(),
+      clock: Column = RunTimestamp.column(Instant.now()),
       wallClock: () => Instant = () => Instant.now()): Report = {
 
     val conformed = Conform.conform(source.load(spark), table, clock)
@@ -244,7 +252,7 @@ object Pipeline {
           "MODIFY_DATE", coalesce(col("MODIFY_DATE"), col("CREATE_DATE")))
         val filtered =
           if (historicalLoad) keyed
-          else keyed.filter(col("MODIFY_DATE") >= lit(java.sql.Timestamp.from(last)))
+          else keyed.filter(col("MODIFY_DATE") >= RunTimestamp.column(last))
         if (filtered.isEmpty) Report(table, 0L, skippedEmpty = true)
         else {
           Conform.validate(filtered, table)

@@ -37,8 +37,9 @@ case class LenientTimestamp(child: Expression, nowEpochMicros: Long) extends Una
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val r = ctx.freshName("r")
+      val now = RunTimestamp.longRef(ctx, "lenientNow", nowEpochMicros)
       s"""
-        Long $r = graft.functions.ParseExprs.tsMicros($c, ${nowEpochMicros}L);
+        Long $r = graft.functions.ParseExprs.tsMicros($c, $now);
         if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
       """
     })
@@ -62,8 +63,9 @@ case class LenientDate(child: Expression, nowEpochMicros: Long) extends UnaryExp
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val r = ctx.freshName("r")
+      val now = RunTimestamp.longRef(ctx, "lenientNow", nowEpochMicros)
       s"""
-        Integer $r = graft.functions.ParseExprs.dateDays($c, ${nowEpochMicros}L);
+        Integer $r = graft.functions.ParseExprs.dateDays($c, $now);
         if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.intValue(); }
       """
     })
@@ -74,8 +76,12 @@ case class LenientDate(child: Expression, nowEpochMicros: Long) extends UnaryExp
 
 object ParseExprs {
   /** The future-clamp clock, captured ONCE at plan construction (driver)
-    * and shipped as a literal — every row, task retry, and duplicated
-    * evaluation of one query clamps against the same instant.
+    * and carried in the expression — every row, task retry, and duplicated
+    * evaluation of one query clamps against the same instant. Generated
+    * code reads it through a reference, not a `…L` literal: Spark caches
+    * compiled classes by source text, and a literal that changes every run
+    * would recompile the whole conform stage on every run (see
+    * [[RunTimestamp]]).
     */
   def nowMicros(): Long = DateTimeUtils.instantToMicros(LenientParse.effectiveNow)
 

@@ -132,19 +132,26 @@ class CleanseSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("garbage predicate property: agrees with the spec on 200 generated strings") {
+    // non-ASCII digits: the reference's rlike `\d` (like Spark's, i.e.
+    // java.util.regex without UNICODE_CHARACTER_CLASS) matches 0-9 only
+    val otherDigits = Gen.oneOf('\u0663', '\u0967', '\uff15')
     val gen = Gen.oneOf(
       Gen.alphaStr.map(_.take(20)).suchThat(_.nonEmpty),
       Gen.listOfN(3, Gen.alphaNumChar).map(_.mkString),
-      Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.oneOf(' ', '-', ':', '/', '.')))
-        .map(_.mkString.take(24)).suchThat(_.nonEmpty))
-    val samples = (0 until 200).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
-    val df = strDf(samples)
+      Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.oneOf(' ', '-', ':', '/', '.'), otherDigits))
+        .map(_.mkString.take(24)).suchThat(_.nonEmpty),
+      Gen.const(null: String))
+    val samples = (0 until 200).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong))) ++
+      Seq("ab\u0663d", null)
+    val got = strDf(samples)
       .select(col("v"), Cleanse.garbageTemporal(col("v")).as("g"))
-      .collect().map(r => r.getString(0) -> r.getBoolean(1))
-    df.foreach { case (s, got) =>
-      val expected = s.matches("^[A-Za-z]{1,3}$") || s.length <= 3 || !s.exists(_.isDigit)
-      assert(got == expected, s"input '$s'")
+      .collect().map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getBoolean(1))))
+    got.foreach { case (s, g) =>
+      val expected = Option(s).map(s =>
+        s.matches("^[A-Za-z]{1,3}$") || s.length <= 3 || !s.exists(c => c >= '0' && c <= '9'))
+      assert(g == expected, s"input '$s'")
     }
+    assert(got.toMap.apply("ab\u0663d") == Some(true), "a non-ASCII digit is not a digit")
   }
 
   test("lenient timestamp parser: formats, NY zone, future clamp, fuzzy fallback") {

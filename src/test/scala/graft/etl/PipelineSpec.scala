@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.file.Files
 import java.time.Instant
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -108,6 +108,87 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Pipeline.DeltaInsert, wm, wallClock = () => Instant.parse("2025-06-01T00:00:00Z"))
     assert(r3.skippedEmpty && r3.rowsWritten == 0L)
     assert(wm.lastRuntime("lead_xref") == before)
+  }
+
+  /** lead_assignment source rows holding every mapped column as a string
+    * of its target type, so conform builds its full expression set (a
+    * padded column is a typed null that the optimizer folds away). Every
+    * third timestamp is m/d/y, which only the lenient parser reads.
+    */
+  private def assignmentRows(path: String, n: Int): Unit = {
+    val target = TableSchemas.schemas("lead_assignment")
+    val mapping = TableSchemas.lead_assignmentMappings
+    val rows = (0 until n).map { i =>
+      Row(mapping.map { case (_, t) =>
+        target(t).dataType match {
+          case TimestampType =>
+            if (i % 3 == 0) f"03/${1 + i % 28}%02d/2024" else f"2024-03-${1 + i % 28}%02d 10:00:00"
+          case DoubleType => s"${i * 10}.5"
+          case BooleanType => if (i % 2 == 0) "true" else "0"
+          case _ => s"v$i"
+        }
+      }: _*)
+    }
+    spark.createDataFrame(rows.asJava,
+      StructType(mapping.map { case (src, _) => StructField(src, StringType) }))
+      .write.mode("overwrite").parquet(path)
+  }
+
+  /** A parquet sink that keeps the last frame it was asked to append. */
+  private final class CapturingSink(path: String) extends Pipeline.Sink {
+    private val inner = Pipeline.ParquetSink(path)
+    var last: DataFrame = _
+    def append(df: DataFrame): Unit = { last = df; inner.append(df) }
+    def truncate(s: SparkSession, schema: StructType): Unit = inner.truncate(s, schema)
+  }
+
+  test("delta_insert compiles its code once: later runs at other clocks hit the codegen cache") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val path = s"${tmp()}/lead_assignment.parquet"
+    assignmentRows(path, 30)
+    val sink = new CapturingSink(tmp() + "/la")
+    val wm = new Pipeline.WatermarkStore(tmp())
+    // each run: its own lenient-parser "now", ETL clock and watermark
+    val compiled = (1 to 3).map { i =>
+      LenientParse.clockOverride = Some(Instant.parse(s"2025-0$i-01T00:00:00Z"))
+      try {
+        val r = Pipeline.processTable(spark, "lead_assignment", Pipeline.ParquetSource(path),
+          sink, Pipeline.DeltaInsert, wm,
+          wallClock = () => Instant.parse(s"202$i-01-01T00:00:00Z"))
+        assert(r.rowsWritten == 30L)
+      } finally LenientParse.clockOverride = None
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    }
+    assert(wm.lastRuntime("lead_assignment") == Instant.parse("2023-01-01T00:00:00Z"))
+    assert(compiled(2) == compiled(0), s"Janino compiles after each run: $compiled")
+
+    // and the write compiles at all: no stage falls back for Janino's
+    // 64 KB method limit
+    val stages = codegenStringSeq(sink.last.queryExecution.executedPlan)
+    assert(stages.nonEmpty)
+    stages.foreach { case (subtree, _, stats) =>
+      assert(stats.maxMethodCodeSize > 0 && stats.maxMethodCodeSize < 65536,
+        s"${stats.maxMethodCodeSize} bytes in\n$subtree")
+    }
+  }
+
+  test("delta_insert stamps one ETL clock per run, captured at the call") {
+    val path = s"${tmp()}/lead_assignment.parquet"
+    assignmentRows(path, 12)
+    val out = tmp() + "/la"
+    val before = Instant.now()
+    Pipeline.processTable(spark, "lead_assignment", Pipeline.ParquetSource(path),
+      Pipeline.ParquetSink(out), Pipeline.DeltaInsert, new Pipeline.WatermarkStore(tmp()))
+    val after = Instant.now()
+    val stamps = spark.read.parquet(out)
+      .select(col("ETL_CREATED_DATE"), col("ETL_LAST_UPDATE_DATE")).distinct().collect()
+    assert(stamps.length == 1 && stamps.head.getTimestamp(0) == stamps.head.getTimestamp(1),
+      stamps.toSeq)
+    val at = stamps.head.getTimestamp(0).toInstant
+    // the clock keeps microseconds; Instant.now() may carry nanoseconds
+    assert(!at.isBefore(before.truncatedTo(java.time.temporal.ChronoUnit.MICROS)) &&
+      !at.isAfter(after), s"$before <= $at <= $after")
   }
 
   test("conform runs unchanged on a streaming source (stream/batch ETL unification)") {

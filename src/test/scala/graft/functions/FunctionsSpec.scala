@@ -481,4 +481,31 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       size(array_intersect(col("a"), col("b"))).as("ref")).collect()
     got.foreach(r => assert(r.getInt(0) == r.getInt(1), s"mismatch: $r"))
   }
+
+  test("RunTimestamp: interpreted eval equals generated code; the optimizer keeps it unfolded") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.TimestampType
+    val at = java.time.Instant.parse("2024-05-06T07:08:09.123456Z")
+    val e = RunTimestamp(org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(at))
+    val generated = GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty).getLong(0)
+    assert(e.eval(InternalRow.empty) == generated)
+    assert(generated == e.epochMicros)
+
+    // in a fused stage, next to terms ConstantFolding does collapse
+    val df = spark.range(3).select(
+      coalesce(lit(null).cast(TimestampType), RunTimestamp.column(at)).as("t"),
+      (RunTimestamp.column(at) > lit(java.sql.Timestamp.from(at.minusSeconds(60)))).as("after"))
+    assert(df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+    val rows = df.collect()
+    assert(rows.forall(r => r.getTimestamp(0).toInstant == at && r.getBoolean(1)))
+    val optimized = df.queryExecution.optimizedPlan.expressions
+    assert(optimized.exists(_.exists(_ == e)), df.queryExecution.optimizedPlan.toString)
+    assert(!optimized.exists(_.exists {
+      case l: Literal => l.dataType == TimestampType && l.value == e.epochMicros
+      case _ => false
+    }), "a RunTimestamp was folded into a timestamp Literal")
+  }
 }
