@@ -43,15 +43,6 @@ object Graph {
 
   /** [[pinByKey]] + the persistent-RDD ids for callers that free the
     * pin explicitly once the rounds are done (the CC/kCore shape).
-    */
-  private[ext] def pinByKeyTracked(df: DataFrame, keys: Column*): (DataFrame, Set[Int]) = {
-    val (out, ids, _) = pinByKeyTrackedN(df, keys: _*)
-    (out, ids)
-  }
-
-  /** [[pinByKeyTracked]] + the pin's derived partition count, for
-    * callers that build a SECOND pin of the same relation keyed
-    * differently (the HITS dual-key shape).
     *
     * Two passes. Pass 1 materializes the relation once under normal
     * AQE planning and reads its real stored size; pass 2 re-keys the
@@ -73,14 +64,10 @@ object Graph {
     * slower (q205/q153) — it traded the round's Exchange for an
     * edge-sized per-round SortExec.
     */
-  private[ext] def pinByKeyTrackedN(df: DataFrame, keys: Column*): (DataFrame, Set[Int], Int) = {
+  private[ext] def pinByKeyTracked(df: DataFrame, keys: Column*): (DataFrame, Set[Int]) = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val (flat, flatIds) = checkpointLock.synchronized {
-      val pre = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.diff(pre).toSet)
-    }
+    val (flat, flatIds) = checkpointTracked(df, eager = true)
     val bytes = sc.getRDDStorageInfo
       .filter(i => flatIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
     // AQE's own parallelismFirst coalescing policy, applied to the pin:
@@ -88,19 +75,25 @@ object Graph {
     // advisorySize], count capped at shuffle.partitions — big relations
     // keep every core busy, small ones don't spray task-overhead across
     // rounds (a raw shuffle.partitions pin measured 2× on sf0.1 graphs)
-    def confBytes(key: String, dflt: String): Long =
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(key, dflt))
-    val advisory = confBytes("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-    val minSize = confBytes("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
+    val advisory = confBytes(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
+    val minSize = confBytes(spark, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
     val maxN = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val target = math.max(minSize,
       math.min(advisory, bytes / math.max(1, sc.defaultParallelism)))
     val n = math.max(1L, math.min(maxN.toLong, (bytes + target - 1) / target)).toInt
-    val out = pinEagerTracked(
-      flat.repartition(n, keys: _*).sortWithinPartitions(keys: _*))
-    freeIds(sc, flatIds) // the sized pin replaces the flat one
-    (out._1, out._2, n)
+    // the sized pin replaces the flat one, which goes on every exit path
+    try pinEagerTracked(flat.repartition(n, keys: _*).sortWithinPartitions(keys: _*))
+    finally freeIds(sc, flatIds)
+  }
+
+  /** A byte-size session conf, parsed as Spark parses it: a leading `-`
+    * negates, so `-1` (a disabled threshold) stays below every size.
+    */
+  private def confBytes(
+      spark: org.apache.spark.sql.SparkSession, key: String, dflt: String): Long = {
+    val v = spark.conf.get(key, dflt).trim
+    val b = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v.stripPrefix("-"))
+    if (v.startsWith("-")) -b else b
   }
 
   /** EAGER localCheckpoint with AQE disabled while the pin's own plan
@@ -125,13 +118,10 @@ object Graph {
   private[ext] def pinEagerTracked(df: DataFrame): (DataFrame, Set[Int]) =
     checkpointLock.synchronized {
       val spark = df.sparkSession
-      val sc = spark.sparkContext
       val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val pre = sc.getPersistentRDDs.keySet
       try {
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val out = df.localCheckpoint()
-        (out, sc.getPersistentRDDs.keySet.diff(pre).toSet)
+        checkpointTracked(df, eager = true)
       } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     }
 
@@ -349,12 +339,33 @@ object Graph {
     * decay or overflow — the same fixed-point discipline as
     * [[pageRank]]'s rankUnit. Aggregates accumulate in DECIMAL(38,0):
     * a 10⁹-degree authority at ppm scale tops out near 10²¹, past a
-    * long but nowhere near the decimal rail.
+    * long but nowhere near the decimal rail. Round 1 needs no join:
+    * every hub starts at 10⁶, so an authority's raw score is 10⁶ · its
+    * in-degree over edges with a non-null source. A null source never
+    * joins (it contributes nothing); a null destination is a null
+    * authority node, and a null-source edge into a scored authority
+    * yields a null hub node.
     *
-    * Scale: the distinct edge relation is locally checkpointed ONCE
-    * and re-read every half-round (2·iters consumers — the q123/q147
-    * multi-consumer-pin lesson); per round the shuffle is
-    * edge-count-bound, state is one (node, score) row per side.
+    * Driver work: three Spark jobs per half-round — the state's
+    * broadcast, the join + partial-aggregate shuffle, and the final
+    * aggregate, run as one EAGER checkpoint whose job also observes the
+    * aggregate's max and row count (`Dataset.observe`). The max
+    * therefore reaches the driver with the blocks, and normalization is
+    * a literal divisor in the next half-round's plan: no max subquery,
+    * no broadcast of it, no re-exchange of the state. The count sizes
+    * that broadcast and replaces a separate emptiness probe. The
+    * distinct edge relation is one lazy, unkeyed checkpoint read by
+    * all 2·iters half-rounds; no session conf is touched.
+    *
+    * Scale: the node state (one row per node of a side) joins the edges
+    * by broadcast while rows × row width fit
+    * `spark.sql.autoBroadcastJoinThreshold`, so the edges are never
+    * shuffled for the join. Past that bound (millions of nodes per
+    * side) it is a plain join, and every half-round re-shuffles the
+    * edges — the price of dropping the per-key edge pins, which cost
+    * two eager pins and a conf flip on every call at catalog sizes.
+    * Only the last two half-round checkpoints stay live (they back the
+    * returned frame); every pin is freed on every exit path.
     */
   def hits(
       edges: DataFrame,
@@ -364,69 +375,58 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"hits: iters in [1,50], got $iters")
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val sc = edges.sparkSession.sparkContext
-    // The distinct edge relation is pinned TWICE, once per half-round
-    // join key (auth rounds join on __s, hub rounds on __d): each
-    // half-round then reads co-partitioned edge blocks and shuffles
-    // only node-sized partial aggregates — round 17 measured the
-    // single unkeyed checkpoint re-exchanging the edges 2·iters times.
-    // eD derives from eS's blocks (one extra edge exchange at pin
-    // time, not a recompute of the dedup chain).
-    val (eS, eSIds, nPart) = pinByKeyTrackedN(
-      edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct(),
-      col("__s"))
-    val (eD, eDIds) = pinEagerTracked(
-      eS.repartition(nPart, col("__d")).sortWithinPartitions(col("__d")))
-    require(eS.count() > 0, "hits: no edges")
-    // ℓ∞-normalize a raw (node, __r) relation to ppm via one
-    // single-row broadcast of the max — no driver round-trip
-    def norm(raw: DataFrame, as: String): DataFrame = raw
-      .crossJoin(broadcast(raw.agg(max(col("__r")).as("__mx"))))
-      .select(col("node"),
-        expr("CAST(__r * 1000000 div __mx AS BIGINT)").as(as))
-    var hub = eS.select(col("__s").as("node")).distinct()
-      .withColumn("h", lit(1000000L))
-    var auth: DataFrame = null
-    // each half-round's raw aggregate feeds BOTH the max broadcast and
-    // the normalized output (two consumers), so it is checkpointed
-    // before norm() — the q147/q218 multi-consumer-pin lesson. Lazy +
-    // count, NOT an eager AQE-less pin: the node-sized round state
-    // re-exchanges onto the edge pin's partitioning each half-round
-    // (cheap), while the round job keeps AQE's partition coalescing —
-    // eager-pinning the state forced raw-shuffle-partition-count
-    // stages over node-sized data, pure task overhead at any SF where
-    // nodes are small. The superseded round's node-sized blocks are
-    // freed one round later (the round-i join reads round-(i−1) state
-    // during its own materialization), and the final round's blocks
-    // stay to back the returned lazy relation.
-    var prevIds = Set.empty[Int]
-    for (i <- 1 to iters) {
-      // rawA's checkpoint stays LAZY: its blocks materialize inside
-      // rawH's one action (the max broadcast and the join both read
-      // the same blocks — localCheckpoint computes them once), so a
-      // full round costs ONE driver action instead of two. Freeing
-      // round i−1 after rawH.count() is still safe: round i's rawA and
-      // rawH are both materialized by then.
-      val (rawA, idsA) = checkpointTracked(
-        eS.join(hub.withColumnRenamed("node", "__s"), "__s")
-          .groupBy(col("__d").as("node"))
-          .agg(sum(col("h").cast(dec)).as("__r")))
-      auth = norm(rawA, "a")
-      val (rawH, idsH) = checkpointTracked(
-        eD.join(auth.withColumnRenamed("node", "__d"), "__d")
-          .groupBy(col("__s").as("node"))
-          .agg(sum(col("a").cast(dec)).as("__r")))
-      rawH.count()
-      hub = norm(rawH, "h")
-      freeIds(sc, prevIds)
-      prevIds = idsA ++ idsH
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val bcastBytes = confBytes(spark, "spark.sql.autoBroadcastJoinThreshold", "10MB")
+    val (e, eIds) = checkpointTracked(
+      edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct())
+    var live = Vector.empty[Set[Int]] // half-round checkpoints, oldest first
+    // eager-checkpoint a raw (node, __r) aggregate; returns it ℓ∞-
+    // normalized to ppm as `as`, and its row count
+    def half(raw: DataFrame, as: String): (DataFrame, Long) = {
+      val obs = new org.apache.spark.sql.Observation()
+      val (ck, ids) = checkpointTracked(
+        raw.observe(obs, max(col("__r")).as("mx"), count(lit(1)).as("n")), eager = true)
+      live :+= ids
+      if (live.size > 2) { freeIds(sc, live.head); live = live.tail }
+      val m = obs.get
+      val mx = Option(m("mx")).fold("NULL")(_.asInstanceOf[java.math.BigDecimal].toPlainString)
+      (ck.select(col("node"),
+        expr(s"CAST(__r * 1000000 div CAST($mx AS DECIMAL(38,0)) AS BIGINT)").as(as)),
+        m("n").asInstanceOf[Long])
     }
-    // every round is materialized; the returned relation reads only the
-    // final rawA/rawH blocks, so the edge pins can go now
-    freeIds(sc, eSIds ++ eDIds)
-    auth.select(lit("auth").as("side"), col("node"), col("a").as("score_ppm"))
-      .unionByName(
-        hub.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
+    // one half-round: `state` (node-keyed, `rows` rows) joins the
+    // edges on `on`, its `score` sums per `by` node
+    def step(state: DataFrame, rows: Long, on: String, by: String,
+        score: String, as: String): (DataFrame, Long) = {
+      val keyed = state.withColumnRenamed("node", on)
+      val side = if (rows * keyed.schema.defaultSize <= bcastBytes) broadcast(keyed) else keyed
+      half(e.join(side, on)
+        .groupBy(col(by).as("node")).agg(sum(col(score).cast(dec)).as("__r")), as)
+    }
+    var ok = false
+    try {
+      // a destination reached only by null sources has a null sum: it
+      // counts toward the emptiness check but is no authority
+      val (a1, nA) = half(e.groupBy(col("__d").as("node"))
+        .agg(sum(when(col("__s").isNotNull, lit(1000000L)).cast(dec)).as("__r")), "a")
+      require(nA > 0, "hits: no edges")
+      var auth = a1.filter(col("a").isNotNull)
+      var (hub, nH) = step(auth, nA, "__d", "__s", "a", "h")
+      for (_ <- 2 to iters) {
+        val (a, na) = step(hub, nH, "__s", "__d", "h", "a")
+        val (h, nh) = step(a, na, "__d", "__s", "a", "h")
+        auth = a; hub = h; nH = nh
+      }
+      ok = true
+      auth.select(lit("auth").as("side"), col("node"), col("a").as("score_ppm"))
+        .unionByName(
+          hub.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
+    } finally {
+      // the returned frame reads only the last two half-rounds' blocks
+      freeIds(sc, eIds)
+      if (!ok) live.foreach(freeIds(sc, _))
+    }
   }
 
   /** Stationary distribution of a finite Markov chain by integer power
@@ -449,8 +449,9 @@ object Graph {
     *
     * Scale: the gated transition relation is checkpointed once
     * (iters consumers); each round is one keyed join + one aggregate
-    * on a |states|²-bounded relation, state is one row per state —
-    * the [[hits]] pin/free discipline throughout.
+    * on a |states|²-bounded relation, state is one row per state. The
+    * superseded round's blocks are freed one round later, and every
+    * pin is freed on every exit path, exceptions included.
     */
   def stationaryDistribution(
       trans: DataFrame,
@@ -462,52 +463,68 @@ object Graph {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
     val sc = trans.sparkSession.sparkContext
-    // the projected transition relation feeds THREE chains before the
-    // rounds start (states' distinct, the known-state gate, and the
-    // dangling anti-join reads the gate again) — unpinned, the whole
-    // upstream derivation (for q261: a window over the events corpus)
-    // re-executed per consumer; pin it once (the q37 multi-consumer
-    // shape), freed with the transition pin after the rounds
-    val (t0, t0Ids) = checkpointTracked(
-      trans.select(col(fromCol).cast("string").as("__f"),
-        col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p")))
-    // states = every from-state; transitions gated to known states;
-    // a state whose every outgoing edge leaves the chain (dangling
-    // after the gate) gets an implicit self-loop so its mass persists
-    // instead of annihilating the normalizer — the pageRank dangling-
-    // node treatment. Blocks stay live for the returned lazy relation
-    // (the pageRank contract).
-    val states = checkpointTracked(
-      t0.select(col("__f").as("state")).distinct())._1
-    val gated = t0.join(states.select(col("state").as("__t")), Seq("__t"))
-    val dangling = states
-      .join(gated.select(col("__f").as("state")).distinct(), Seq("state"), "left_anti")
-      .select(col("state").as("__t"), col("state").as("__f"),
-        lit(1000000000L).as("__p"))
-    // pinned on the per-round join key (the hits shape): rounds read
-    // co-partitioned transition blocks, shuffle only state-sized rows
-    val (e, eIds) = pinByKeyTracked(gated.unionByName(dangling), col("__f"))
-    require(e.count() > 0, "stationaryDistribution: no transitions between known states")
-    var pi = states.withColumn("pi_ppm", lit(1000000L))
-    var prevIds = Set.empty[Int]
-    for (i <- 1 to iters) {
-      val (raw, ids) = checkpointTracked(
-        e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
-          .groupBy(col("__t").as("state"))
-          .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
-            .as("__r")))
-      raw.count()
-      pi = raw
-        .crossJoin(broadcast(raw.agg(sum(col("__r").cast(dec)).as("__s"))))
-        .select(col("state"), expr("CAST(__r * 1000000 div __s AS BIGINT)").as("pi_ppm"))
-      freeIds(sc, prevIds)
-      prevIds = ids
+    // ids leave these sets only via freeIds: `pins` never back the
+    // result, `kept` (states + the live round) do unless a call throws
+    var pins = Set.empty[Int]
+    var kept = Set.empty[Int]
+    var ok = false
+    try {
+      // the projected transition relation feeds THREE chains before the
+      // rounds start (states' distinct, the known-state gate, and the
+      // dangling anti-join reads the gate again) — unpinned, the whole
+      // upstream derivation (for q261: a window over the events corpus)
+      // re-executed per consumer; pin it once (the q37 multi-consumer
+      // shape), freed with the transition pin after the rounds
+      val (t0, t0Ids) = checkpointTracked(
+        trans.select(col(fromCol).cast("string").as("__f"),
+          col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p")))
+      pins ++= t0Ids
+      // states = every from-state; transitions gated to known states;
+      // a state whose every outgoing edge leaves the chain (dangling
+      // after the gate) gets an implicit self-loop so its mass persists
+      // instead of annihilating the normalizer — the pageRank dangling-
+      // node treatment. Blocks stay live for the returned lazy relation
+      // (the pageRank contract).
+      val (states, statesIds) = checkpointTracked(
+        t0.select(col("__f").as("state")).distinct())
+      kept ++= statesIds
+      val gated = t0.join(states.select(col("state").as("__t")), Seq("__t"))
+      val dangling = states
+        .join(gated.select(col("__f").as("state")).distinct(), Seq("state"), "left_anti")
+        .select(col("state").as("__t"), col("state").as("__f"),
+          lit(1000000000L).as("__p"))
+      // pinned on the per-round join key: rounds read co-partitioned
+      // transition blocks, shuffle only state-sized rows
+      val (e, eIds) = pinByKeyTracked(gated.unionByName(dangling), col("__f"))
+      pins ++= eIds
+      require(e.count() > 0, "stationaryDistribution: no transitions between known states")
+      var pi = states.withColumn("pi_ppm", lit(1000000L))
+      var prevIds = Set.empty[Int]
+      for (i <- 1 to iters) {
+        val (raw, ids) = checkpointTracked(
+          e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
+            .groupBy(col("__t").as("state"))
+            .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
+              .as("__r")))
+        kept ++= ids
+        raw.count()
+        pi = raw
+          .crossJoin(broadcast(raw.agg(sum(col("__r").cast(dec)).as("__s"))))
+          .select(col("state"), expr("CAST(__r * 1000000 div __s AS BIGINT)").as("pi_ppm"))
+        freeIds(sc, prevIds)
+        kept --= prevIds
+        prevIds = ids
+      }
+      ok = true
+      states.join(pi, Seq("state"), "left")
+        .select(col("state"), coalesce(col("pi_ppm"), lit(0L)).as("pi_ppm"))
+    } finally {
+      // every round is materialized by now on success; the result reads
+      // states + the final round's blocks, never the transition pin or
+      // the t0 projection
+      freeIds(sc, pins)
+      if (!ok) freeIds(sc, kept)
     }
-    // every round materialized; the result reads states + the final
-    // round's blocks, never the transition pin or the t0 projection
-    freeIds(sc, eIds ++ t0Ids)
-    states.join(pi, Seq("state"), "left")
-      .select(col("state"), coalesce(col("pi_ppm"), lit(0L)).as("pi_ppm"))
   }
 
   /** Degree assortativity coefficient (Newman PRL'02): the Pearson
@@ -1193,17 +1210,22 @@ object Graph {
           "(CAST(4 AS DECIMAL(38,0)) * m * m) AS BIGINT)").as("q_ppm"))
   }
 
-  /** Lazy localCheckpoint + the persistent-RDD ids it registered, captured
+  /** localCheckpoint + the persistent-RDD ids it registered, captured
     * under [[checkpointLock]] so concurrent graft checkpoints don't
-    * mis-attribute each other's ids. Blocks materialize at the caller's
-    * next action, outside the lock (no Spark job runs while it is held).
+    * mis-attribute each other's ids. Lazy by default: the blocks
+    * materialize at the caller's next action, outside the lock (under
+    * AQE the call itself still runs the plan's shuffle stages). `eager`
+    * runs the materializing job here, under the lock — the only way a
+    * `Dataset.observe` on `df` delivers its metrics with the blocks. A
+    * failing checkpoint frees what it registered before rethrowing.
     */
-  private[ext] def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
+  private[ext] def checkpointTracked(df: DataFrame, eager: Boolean = false): (DataFrame, Set[Int]) =
     checkpointLock.synchronized {
       val sc = df.sparkSession.sparkContext
       val pre = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager = false)
-      (out, sc.getPersistentRDDs.keySet.diff(pre).toSet)
+      def fresh = sc.getPersistentRDDs.keySet.diff(pre).toSet
+      try (df.localCheckpoint(eager), fresh)
+      catch { case t: Throwable => freeIds(sc, fresh); throw t }
     }
 
   /** Explicitly drop checkpoint blocks the ContextCleaner would otherwise

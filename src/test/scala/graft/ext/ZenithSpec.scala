@@ -87,6 +87,73 @@ class ZenithSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(auth.last._3 < 1000000L && hub.last._3 < 1000000L)
   }
 
+  /** Plain-Scala HITS: BigInt ppm scores, floor division, ℓ∞ per
+    * half-round. A null source never joins a hub; a null destination is
+    * an authority node; a null-source edge into a scored authority is a
+    * hub node.
+    */
+  private def referenceHits(edges: Seq[(Option[Long], Option[Long])], iters: Int)
+      : Set[(String, Option[Long], Long)] = {
+    val e = edges.distinct
+    val ppm = BigInt(1000000)
+    def norm(raw: Map[Option[Long], BigInt]): Map[Option[Long], BigInt] =
+      if (raw.isEmpty) raw
+      else { val mx = raw.values.max; raw.map { case (n, r) => n -> r * ppm / mx } }
+    var hub: Map[Option[Long], BigInt] = e.map(_._1 -> ppm).toMap
+    var auth = Map.empty[Option[Long], BigInt]
+    for (_ <- 1 to iters) {
+      auth = norm(e.filter(x => x._1.isDefined && hub.contains(x._1))
+        .groupMapReduce(_._2)(x => hub(x._1))(_ + _))
+      hub = norm(e.filter(x => x._2.isDefined && auth.contains(x._2))
+        .groupMapReduce(_._1)(x => auth(x._2))(_ + _))
+    }
+    auth.map { case (n, v) => ("auth", n, v.toLong) }.toSet ++
+      hub.map { case (n, v) => ("hub", n, v.toLong) }.toSet
+  }
+
+  test("hits: matches a BigInt reference on random graphs across partitions and join strategies") {
+    import spark.implicits._
+    val confs = Seq(
+      Map("spark.sql.shuffle.partitions" -> "1"),
+      Map("spark.sql.shuffle.partitions" -> "7"),
+      Map("spark.sql.shuffle.partitions" -> "7", "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    val keys = confs.flatMap(_.keys).distinct
+    val saved = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try for (seed <- Seq(11L, 12L)) {
+      val rnd = new scala.util.Random(seed)
+      def node = if (rnd.nextInt(12) == 0) None else Some(rnd.nextInt(9).toLong)
+      val base = Seq.fill(30)((node, node))
+      // duplicates, self-loops and null endpoints all present; node 9 is
+      // reached only by a null source
+      val edges = base ++ base.take(6) ++
+        Seq((Some(3L), Some(3L)), (None, Some(4L)), (Some(5L), None), (None, Some(9L)))
+      val df = edges.toDF("s", "d")
+      for (conf <- confs; iters <- Seq(1, 2, 5)) {
+        keys.foreach(k => saved(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        val got = Graph.hits(df, "s", "d", iters).collect()
+          .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2)))
+        assert(got.length == got.toSet.size)
+        assert(got.toSet == referenceHits(edges, iters), s"seed $seed, iters $iters, $conf")
+      }
+    } finally keys.foreach(k => saved(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+  }
+
+  test("hits and stationaryDistribution free every pin when the input is empty") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def pinned = sc.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    val e1 = intercept[IllegalArgumentException](
+      Graph.hits(Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d", iters = 2))
+    assert(e1.getMessage.contains("no edges"))
+    assert(pinned.diff(before).isEmpty, "hits left checkpoint blocks registered")
+    val e2 = intercept[IllegalArgumentException](Graph.stationaryDistribution(
+      Seq.empty[(String, String, Long)].toDF("f", "t", "p"), "f", "t", "p", iters = 2))
+    assert(e2.getMessage.contains("no transitions"))
+    assert(pinned.diff(before).isEmpty, "stationaryDistribution left checkpoint blocks registered")
+  }
+
   test("mapMrrAtK: hand-folded AP terms, no-hit and beyond-k behavior") {
     import spark.implicits._
     // q1: rel at ranks 1 and 3 -> apnum = 1e6 + 666666, /2;

@@ -216,6 +216,14 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("q249 HITS build stays within 3 Spark jobs per half-round plus set-up") {
+    // iters = 4: 8 half-rounds × 3 jobs, plus the edge derivation; a
+    // per-round max subquery or a keyed edge pin pushes it past 30
+    val q = Catalog.all.find(_.name == "q249_hits_rank").get
+    val (_, jobs) = org.apache.spark.JobCount(spark.sparkContext)(q.build(spark, dir))
+    assert(jobs <= 30, s"q249 build ran $jobs Spark jobs")
+  }
+
   test("q129 bipartite projection joins on the left key, no cartesian") {
     val p = planOf("q129_bipartite_project")
     assert(!p.contains("CartesianProduct"), p)

@@ -73,4 +73,21 @@ class StorageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pruned.count() == expected)
     assert(expected > 0, "fixture should contain events on 2024-01-03")
   }
+
+  test("Tables.load infers a table's schema once, and again after the file is rewritten") {
+    import spark.implicits._
+    val tdir = s"$wh/tables"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$tdir/t.parquet")
+    val sc = spark.sparkContext
+    val (first, jobs1) = org.apache.spark.JobCount(sc)(graft.Tables.load(spark, tdir, "t"))
+    assert(jobs1 == 1, "the first load infers the footer schema with one Spark job")
+    val (second, jobs2) = org.apache.spark.JobCount(sc)(graft.Tables.load(spark, tdir, "t"))
+    assert(jobs2 == 0, "a second load reuses the inferred schema")
+    assert(second.schema == first.schema && second.collect().toSeq == first.collect().toSeq)
+    Seq((2L, 3.5, "b")).toDF("k", "x", "v").write.mode("overwrite").parquet(s"$tdir/t.parquet")
+    val (third, jobs3) = org.apache.spark.JobCount(sc)(graft.Tables.load(spark, tdir, "t"))
+    assert(jobs3 == 1, "a rewritten file is inferred again")
+    assert(third.columns.toSeq == Seq("k", "x", "v"))
+    assert(third.as[(Long, Double, String)].collect().toSeq == Seq((2L, 3.5, "b")))
+  }
 }
