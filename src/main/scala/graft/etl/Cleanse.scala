@@ -23,6 +23,16 @@ import org.apache.spark.sql.types._
   * `clock` is injectable everywhere the reference uses
   * `current_timestamp()` so tests and oracle runs are deterministic
   * (SURVEY.md §7.4.3).
+  *
+  * No rule carries an arm that is an identity on its input. Each conform
+  * stage is its own `Project`, and Ingest's watermark filter sits on the
+  * conformed `MODIFY_DATE`: the optimizer pushes that predicate through
+  * every stage by substituting the stage's expression for each column
+  * reference. A stage that reads its input k times multiplies the
+  * filter by k, so an arm that changes nothing still costs a copy of the
+  * whole chain below it. With the reference's identity arms,
+  * `lead_assignment`'s filter grows past 1,600 expression nodes, and
+  * generating its Java source takes most of the Ingest driver's time.
   */
 object Cleanse {
 
@@ -45,13 +55,6 @@ object Cleanse {
     length(s) <= 3 || !s.rlike("\\d")
   }
 
-  /** Null out garbage in a timestamp-typed column (ingest.py:519-528). A
-    * null input needs no arm of its own: it makes the condition null, and
-    * the CASE falls through to the null input.
-    */
-  def nullGarbageTimestamp(c: Column): Column =
-    when(garbageTemporal(c), lit(null)).otherwise(c)
-
   /** ETL_* columns are never null: default to the clock (ingest.py:530-535). */
   def defaultEtlTimestamp(c: Column, clock: Column): Column = coalesce(c, clock)
 
@@ -59,17 +62,18 @@ object Cleanse {
     * lenient fallback (ingest.py:552-570). Native `to_timestamp` wins on
     * anything it can parse; the lenient parser (a native expression,
     * graft.functions.LenientTimestamp — not a UDF, so the whole conform
-    * projection stays one codegen stage) only sees its rejects.
+    * projection stays one codegen stage) only sees its rejects. The
+    * reference's outer `null → null` arm is left out: `try_to_timestamp`
+    * and the null-intolerant lenient parser both map null to null.
     */
   def toTimestampLenient(c: Column): Column = {
     val cleaned = when(garbageTemporal(c), lit(null)).otherwise(c)
     // try_to_timestamp, not to_timestamp: under ANSI mode (Spark 4
     // default) the non-try variant THROWS on malformed input, while the
     // reference's Spark 3 semantics return null (ingest.py:566).
-    when(cleaned.isNull, lit(null))
-      .otherwise(coalesce(
-        try_to_timestamp(cleaned),
-        graft.functions.ParseFunctions.lenientTimestamp(cleaned.cast("string"))))
+    coalesce(
+      try_to_timestamp(cleaned),
+      graft.functions.ParseFunctions.lenientTimestamp(cleaned.cast("string")))
   }
 
   /** Date conform: native-first, lenient fallback (ingest.py:573-582). */
@@ -116,12 +120,14 @@ object Cleanse {
 
   /** Final sanity sweep: any timestamp whose string form has characters
     * outside [0-9-:. ] (or is null) becomes null — or the clock for
-    * ETL_* columns (ingest.py:763-778).
+    * ETL_* columns (ingest.py:763-778). Only the ETL_* sweep tests for
+    * null: elsewhere a null makes the condition null, and the CASE falls
+    * through to the null input.
     */
   def finalTimestampSweep(c: Column, isEtl: Boolean, clock: Column): Column = {
-    val dirty = c.isNull ||
-      regexp_replace(c.cast("string"), "[0-9\\-:. ]", "").rlike(".+")
-    when(dirty, if (isEtl) clock else lit(null)).otherwise(c)
+    val outOfAlphabet = regexp_replace(c.cast("string"), "[0-9\\-:. ]", "").rlike(".+")
+    if (isEtl) when(c.isNull || outOfAlphabet, clock).otherwise(c)
+    else when(outOfAlphabet, lit(null)).otherwise(c)
   }
 
   /** The per-type conform dispatch (ingest.py:538-622): returns the

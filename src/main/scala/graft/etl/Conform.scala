@@ -11,6 +11,12 @@ import org.apache.spark.sql.types._
   * instead of one per column, which is the difference between a 100 ms
   * and a multi-second analysis phase at 101 columns, and keeps
   * whole-stage codegen fused at any scale.
+  *
+  * The stages still stack as several `Project`s, and a filter on the
+  * conformed frame is inlined through all of them, so a stage that only
+  * restates its input is not free (see the [[Cleanse]] header). The
+  * reference's identity stages are left out: see [[cleanInvalidTimestamps]]
+  * and [[finalSweep]].
   */
 object Conform {
 
@@ -42,19 +48,17 @@ object Conform {
     df.select(renamed ++ padding: _*)
   }
 
-  /** Null out garbage in every currently-timestamp-typed column and
-    * default ETL_* timestamps to the clock (ingest.py:507-536).
+  /** Default ETL_* timestamps to the clock (ingest.py:507-536). The
+    * reference also nulls out "garbage" in every timestamp-typed column;
+    * that is an identity here: a timestamp's string form is at least 19
+    * characters and holds digits, so [[Cleanse.garbageTemporal]] never
+    * holds for it, and a null stays null.
     */
   def cleanInvalidTimestamps(df: DataFrame, clock: Column): DataFrame = {
-    val exprs = df.schema.fields.toSeq.map { f =>
-      f.dataType match {
-        case _: TimestampType =>
-          val cleaned = Cleanse.nullGarbageTimestamp(col(f.name))
-          val e = if (f.name.startsWith("ETL_")) Cleanse.defaultEtlTimestamp(cleaned, clock)
-                  else cleaned
-          e.as(f.name)
-        case _ => col(f.name)
-      }
+    val exprs = df.schema.fields.toSeq.map {
+      case f if f.dataType == TimestampType && f.name.startsWith("ETL_") =>
+        Cleanse.defaultEtlTimestamp(col(f.name), clock).as(f.name)
+      case f => col(f.name)
     }
     df.select(exprs: _*)
   }
@@ -113,18 +117,20 @@ object Conform {
   def reorder(df: DataFrame, table: String): DataFrame =
     df.select(TableSchemas.schemas(table).fields.toSeq.map(f => col(f.name)): _*)
 
-  /** Final timestamp sanity sweep after reorder (ingest.py:762-778). */
+  /** Final timestamp sanity sweep after reorder (ingest.py:762-778). The
+    * reference runs [[cleanInvalidTimestamps]] first; its only effect,
+    * null ETL_* → clock, is the ETL_* sweep's null arm already.
+    */
   def finalSweep(df: DataFrame, table: String, clock: Column): DataFrame = {
     val schema = TableSchemas.schemas(table)
-    val cleaned = cleanInvalidTimestamps(df, clock)
-    val exprs = cleaned.schema.fields.toSeq.map { f =>
+    val exprs = df.schema.fields.toSeq.map { f =>
       schema.find(_.name == f.name) match {
         case Some(t) if t.dataType.isInstanceOf[TimestampType] =>
           Cleanse.finalTimestampSweep(col(f.name), f.name.startsWith("ETL_"), clock).as(f.name)
         case _ => col(f.name)
       }
     }
-    cleaned.select(exprs: _*)
+    df.select(exprs: _*)
   }
 
   /** Presence + type-class validation; throws with ALL errors listed

@@ -215,6 +215,16 @@ object Pipeline {
 
   final case class Report(table: String, rowsWritten: Long, skippedEmpty: Boolean = false)
 
+  /** The rows `DeltaInsert` loads: `MODIFY_DATE := coalesce(MODIFY_DATE,
+    * CREATE_DATE)`, kept from the watermark `since` on (everything when
+    * `since` is None, the historical load).
+    */
+  private[etl] def deltaRows(conformed: DataFrame, since: Option[Instant]): DataFrame = {
+    val keyed = conformed.withColumn(
+      "MODIFY_DATE", coalesce(col("MODIFY_DATE"), col("CREATE_DATE")))
+    since.fold(keyed)(last => keyed.filter(col("MODIFY_DATE") >= RunTimestamp.column(last)))
+  }
+
   /** One table end-to-end: load → conform → (mode-specific filter) →
     * validate → write, with a single observed row count.
     *
@@ -247,12 +257,8 @@ object Pipeline {
         Report(table, obs.get("rows").asInstanceOf[Long])
 
       case DeltaInsert =>
-        val last = watermarks.lastRuntime(table)
-        val keyed = conformed.withColumn(
-          "MODIFY_DATE", coalesce(col("MODIFY_DATE"), col("CREATE_DATE")))
-        val filtered =
-          if (historicalLoad) keyed
-          else keyed.filter(col("MODIFY_DATE") >= RunTimestamp.column(last))
+        val filtered = deltaRows(conformed,
+          if (historicalLoad) None else Some(watermarks.lastRuntime(table)))
         if (filtered.isEmpty) Report(table, 0L, skippedEmpty = true)
         else {
           Conform.validate(filtered, table)
@@ -264,9 +270,56 @@ object Pipeline {
     }
   }
 
+  /** Name prefix of the threads [[perTable]] starts. */
+  private[graft] val TableThreadPrefix = "graft-table-"
+
+  /** Runs `work` once per table, the tables concurrently, and returns each
+    * table's outcome in table order once every table has settled. A
+    * table's work must touch nothing another table's does (its own source,
+    * sink, watermark file and observation name); the same name twice is
+    * refused up front, as it would be two writers in one directory.
+    *
+    * The pool is made for this call and holds min(tables, available
+    * processors) threads. They are started from the calling thread, so
+    * they inherit its Spark local properties (job group, description,
+    * scheduler pool): `cancelJobGroup` and job attribution see the tables'
+    * jobs as the caller's. Every thread has ended when this returns.
+    * A fatal error is not captured: the first in table order is rethrown,
+    * once the other tables have settled.
+    */
+  private[graft] def perTable[T](tables: Seq[String])(work: String => T): Seq[Try[T]] = {
+    val dups = tables.diff(tables.distinct).distinct
+    require(dups.isEmpty,
+      s"duplicate table names [${dups.mkString(", ")}]: each table runs once per call")
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val size = math.max(1, math.min(tables.size, Runtime.getRuntime.availableProcessors))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(size, (r: Runnable) => {
+      val t = new Thread(r, s"$TableThreadPrefix${threads.size + 1}")
+      threads.add(t)
+      t
+    })
+    try {
+      val futures = tables.map(t => pool.submit(() => Try(work(t))))
+      futures.map(f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
+  }
+
   /** Multi-table runner with per-table config gate and selectable error
     * policy: isolate-and-continue (sync.py:169-179) or fail-fast
     * (ingest.py:829-832).
+    *
+    * The enabled tables run concurrently ([[perTable]]: at most
+    * min(tables, available processors) at a time). Fail-fast therefore
+    * lets every table settle, then rethrows the first failure in table
+    * order with the other failures attached as suppressed exceptions. A
+    * failed table never advances its watermark. Unlike the reference, the
+    * tables after a failed one still load: they take exactly the rows the
+    * next run would have taken, so delivery stays at-least-once.
     */
   def run(
       spark: SparkSession,
@@ -277,12 +330,16 @@ object Pipeline {
       mode: WriteMode,
       watermarks: WatermarkStore,
       historicalLoad: Boolean = false,
-      failFast: Boolean = true): Seq[(String, Try[Report])] =
-    tables.filter(t => enabled.getOrElse(t, false)).map { t =>
-      val r = Try(processTable(spark, t, source(t), sink(t), mode, watermarks, historicalLoad))
-      (r, failFast) match {
-        case (Failure(e), true) => throw e
-        case _ => t -> r
-      }
+      failFast: Boolean = true): Seq[(String, Try[Report])] = {
+    val on = tables.filter(t => enabled.getOrElse(t, false))
+    val out = on.zip(perTable(on)(t =>
+      processTable(spark, t, source(t), sink(t), mode, watermarks, historicalLoad)))
+    if (failFast) out.collect { case (_, Failure(e)) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ =>
     }
+    out
+  }
 }

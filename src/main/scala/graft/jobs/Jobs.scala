@@ -82,6 +82,15 @@ private[jobs] object JobArgs {
   *     atomic overwrite + time travel on plain parquet — the Delta
   *     semantics of sync.py:112-114 without the jar)
   *   [--jdbc-driver CLS --jdbc-user U --jdbc-password P --fetchsize N]
+  *
+  * The tables sync concurrently, min(tables, available processors) at a
+  * time (`Pipeline.perTable`); each still fails on its own. A repeated
+  * table name is refused up front. Source connections add up across the
+  * running tables: Spark's extraction holds one JDBC connection per
+  * running task, so concurrent tables can hold up to min(Σ partitions,
+  * running tasks) connections where one table held min(partitions,
+  * running tasks), plus one driver-side connection per running table
+  * for its bounds and count queries.
   */
 object SyncJob {
 
@@ -153,7 +162,7 @@ object SyncJob {
       }
     }
     probe(url, props) // fail fast, before any per-table work
-    conf("tables").split(",").toSeq.flatMap { table =>
+    Pipeline.perTable(conf("tables").split(",").toSeq) { table =>
       try {
         val partition = partSpec.map { case (c, bounds, n) =>
           val (lo, hi) = bounds.getOrElse(autoBounds(url, props, table, c))
@@ -190,7 +199,7 @@ object SyncJob {
             s"""{"job":"sync","table":"$table","error":${JobArgs.jsonStr(e.getMessage)}}""")
           None
       }
-    }
+    }.flatMap(_.get)
   }
 
   def main(args: Array[String]): Unit = {
@@ -202,7 +211,8 @@ object SyncJob {
 /** Stage 2 — RAW zone → conform/cleanse/validate → warehouse staging
   * (the reference's ingest.py): per-table conform pipeline with
   * append / truncate-then-append / watermark-incremental modes,
-  * fail-fast error policy (ingest.py:829-832).
+  * fail-fast error policy (ingest.py:829-832). The tables load
+  * concurrently; see `Pipeline.run` for the failure order.
   *
   *   --source-dir DIR --sink-dir DIR --watermark-dir DIR
   *   [--tables lead_assignment,lead_xref,lead] [--mode append|delta_insert]

@@ -248,6 +248,59 @@ class CleanseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(planDepth < 12, s"optimized plan has $planDepth nodes")
   }
 
+  test("conform equals the reference's stacked timestamp chain on 4,000 seeded rows per table") {
+    val clockAt = Instant.parse("2025-06-01T12:00:00Z")
+    // "1:2" is a time of day to try_to_timestamp; only the garbage rule
+    // (length <= 3) keeps it null
+    val tsPool: Seq[Any] = Seq(null, "", "a", "ab", "abc", "Z", "x1", "12", "1:2",
+      "2024-03-01 10:00:00", "2024-03-01T10:00:00Z", "2024-03-01 10:00:00.123456",
+      "03/15/2024", "15/03/2024", "Mar 1, 2024 10:30", "20240301", "13/45/2024",
+      "2031-06-01 00:00:00", "2031-06-01", "2025-06-01 12:00:01",
+      "10000-01-01", "10000-01-01 00:00:00", "+10000-01-01T00:00:00",
+      "\u0662\u0660\u0662\u0664-\u0660\u0663-\u0660\u0661", "2024-0\u0663-01", "ab\u0663d",
+      "updated on 2024-03-01 oops", "no digits here", "0001-01-01 00:00:00")
+    val typedPool: Seq[java.sql.Timestamp] = Seq(null,
+      java.sql.Timestamp.from(Instant.parse("2024-03-01T15:00:00Z")),
+      java.sql.Timestamp.from(Instant.parse("2031-01-01T00:00:00Z")),
+      java.sql.Timestamp.from(Instant.parse("+10000-01-01T00:00:00Z")),
+      java.sql.Timestamp.from(Instant.parse("0001-01-03T00:00:00Z")))
+    def gen(target: DataType, r: scala.util.Random): Any = target match {
+      case TimestampType | DateType =>
+        if (r.nextInt(4) == 0)
+          f"${1900 + r.nextInt(200)}-${1 + r.nextInt(12)}%02d-${1 + r.nextInt(28)}%02d " +
+            f"${r.nextInt(24)}%02d:${r.nextInt(60)}%02d:00"
+        else tsPool(r.nextInt(tsPool.size))
+      case _ => Seq(null, "", "x", "true", "0", "no", s"${r.nextInt(1000)}.5",
+        s"v${r.nextInt(100)}", "\u0663")(r.nextInt(9))
+    }
+    for (table <- Seq("lead", "lead_xref", "lead_assignment")) {
+      val target = TableSchemas.schemas(table)
+      val mapping = TableSchemas.columnMappings(table).toSeq.sortBy(_._1)
+      // one mapped timestamp column lands typed, as a typed RAW zone holds it
+      val typedCol = mapping.collectFirst { case (s, t) if target(t).dataType == TimestampType => s }.get
+      val r = new scala.util.Random(table.hashCode)
+      val rows = (0 until 4000).map(_ => Row(mapping.map { case (s, t) =>
+        if (s == typedCol) typedPool(r.nextInt(typedPool.size)) else gen(target(t).dataType, r)
+      }: _*))
+      val raw = spark.createDataFrame(rows.asJava, StructType(mapping.map { case (s, _) =>
+        StructField(s, if (s == typedCol) TimestampType else StringType) }))
+      LenientParse.clockOverride = Some(clockAt)
+      val (got, want) =
+        try {
+          val clock = graft.functions.RunTimestamp.column(clockAt)
+          (Conform.conform(raw, table, clock).collect(),
+            ReferenceConform.conform(raw, table, clock).collect())
+        } finally LenientParse.clockOverride = None
+      def bag(rs: Array[Row]) = rs.groupBy(identity).view.mapValues(_.length).toMap
+      val (g, w) = (bag(got), bag(want))
+      assert(got.length == 4000 && want.length == 4000)
+      val same = g == w
+      assert(same, s"$table: ${(g.keySet diff w.keySet).size} rows differ, e.g. " +
+        s"${(g.keySet diff w.keySet).headOption} where the reference has " +
+        s"${(w.keySet diff g.keySet).headOption}")
+    }
+  }
+
   test("schemaDiff: added/removed/retyped columns; case-insensitive; nullability ignored") {
     import org.apache.spark.sql.types._
     val expected = StructType(Seq(
@@ -283,5 +336,100 @@ class CleanseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("collision") && e.getMessage.contains("Id/ID"), e.getMessage)
     val e2 = intercept[IllegalArgumentException] { Conform.schemaDiff(dup, clean) }
     assert(e2.getMessage.contains("collision"), e2.getMessage)
+  }
+}
+
+/** The timestamp conform as the reference stacks it (ingest.py:507-536,
+  * 552-570, 762-778): every stage, identities included. The oracle for
+  * [[Conform.conform]], which leaves the identities out.
+  */
+private object ReferenceConform {
+  import org.apache.spark.sql.Column
+
+  def nullGarbageTimestamp(c: Column): Column =
+    when(Cleanse.garbageTemporal(c), lit(null)).otherwise(c)
+
+  def toTimestampLenient(c: Column): Column = {
+    val cleaned = when(Cleanse.garbageTemporal(c), lit(null)).otherwise(c)
+    when(cleaned.isNull, lit(null))
+      .otherwise(coalesce(
+        try_to_timestamp(cleaned),
+        graft.functions.ParseFunctions.lenientTimestamp(cleaned.cast("string"))))
+  }
+
+  def finalTimestampSweep(c: Column, isEtl: Boolean, clock: Column): Column = {
+    val dirty = c.isNull ||
+      regexp_replace(c.cast("string"), "[0-9\\-:. ]", "").rlike(".+")
+    when(dirty, if (isEtl) clock else lit(null)).otherwise(c)
+  }
+
+  def conformExpr(
+      c: Column,
+      field: StructField,
+      jsonCols: Set[String],
+      boolStringCols: Set[String]): Column = {
+    val e =
+      if (jsonCols.contains(field.name)) Cleanse.jsonPassthrough(c)
+      else field.dataType match {
+        case _: TimestampType => toTimestampLenient(c)
+        case _: DateType => Cleanse.toDateLenient(c)
+        case d: DecimalType => c.try_cast(d)
+        case _: DoubleType => c.try_cast(DoubleType)
+        case _: BooleanType => Cleanse.parseBoolean(c)
+        case _: StringType if boolStringCols.contains(field.name) =>
+          Cleanse.canonicalizeBooleanString(c)
+        case _ => c.cast(StringType)
+      }
+    e.as(field.name)
+  }
+
+  def cleanInvalidTimestamps(df: DataFrame, clock: Column): DataFrame = {
+    val exprs = df.schema.fields.toSeq.map { f =>
+      f.dataType match {
+        case _: TimestampType =>
+          val cleaned = nullGarbageTimestamp(col(f.name))
+          val e = if (f.name.startsWith("ETL_")) Cleanse.defaultEtlTimestamp(cleaned, clock)
+                  else cleaned
+          e.as(f.name)
+        case _ => col(f.name)
+      }
+    }
+    df.select(exprs: _*)
+  }
+
+  def transformColumns(df: DataFrame, table: String, clock: Column): DataFrame = {
+    val schema = TableSchemas.schemas(table)
+    val json = TableSchemas.jsonColumns(table)
+    val boolStr = TableSchemas.booleanStringColumns
+    val byName = schema.fields.map(f => f.name -> f).toMap
+    val cleaned = cleanInvalidTimestamps(df, clock)
+    val exprs = cleaned.schema.fields.toSeq.map { f =>
+      byName.get(f.name) match {
+        case Some(target) => conformExpr(col(f.name), target, json, boolStr)
+        case None => col(f.name)
+      }
+    }
+    cleaned.select(exprs: _*)
+  }
+
+  def finalSweep(df: DataFrame, table: String, clock: Column): DataFrame = {
+    val schema = TableSchemas.schemas(table)
+    val cleaned = cleanInvalidTimestamps(df, clock)
+    val exprs = cleaned.schema.fields.toSeq.map { f =>
+      schema.find(_.name == f.name) match {
+        case Some(t) if t.dataType.isInstanceOf[TimestampType] =>
+          finalTimestampSweep(col(f.name), f.name.startsWith("ETL_"), clock).as(f.name)
+        case _ => col(f.name)
+      }
+    }
+    cleaned.select(exprs: _*)
+  }
+
+  def conform(df: DataFrame, table: String, clock: Column): DataFrame = {
+    val renamed = Conform.renameAndPad(df, table)
+    val transformed = transformColumns(renamed, table, clock)
+    val special = Conform.specialHandling(transformed, table, clock)
+    val withMeta = Conform.addMetadata(special, table, clock)
+    finalSweep(Conform.reorder(withMeta, table), table, clock)
   }
 }

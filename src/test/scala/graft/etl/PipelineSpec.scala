@@ -191,6 +191,94 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       !at.isAfter(after), s"$before <= $at <= $after")
   }
 
+  test("delta_insert's watermark filter does not inline the conform many times over") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val path = s"${tmp()}/lead_assignment.parquet"
+    assignmentRows(path, 3)
+    val conformed = Conform.conform(spark.read.parquet(path), "lead_assignment",
+      graft.functions.RunTimestamp.column(Instant.parse("2025-01-01T00:00:00Z")))
+    val plan = Pipeline.deltaRows(conformed, Some(Instant.parse("2024-01-01T00:00:00Z")))
+      .queryExecution.optimizedPlan
+    val conditions = plan.collect { case f: Filter => f.condition }
+    assert(conditions.nonEmpty, plan)
+    // the optimizer pushes the filter through each conform stage by
+    // substitution; a stage reading its input k times multiplies it by k
+    // (1,675 nodes with the reference's identity stages stacked)
+    val nodes = conditions.map(_.collect { case e => e }.size).sum
+    assert(nodes <= 400, s"$nodes expression nodes in the pushed filter")
+  }
+
+  private def liveTableThreads(): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_.startsWith(Pipeline.TableThreadPrefix))
+
+  test("run() loads tables concurrently; fail-fast rethrows the first failure after all settle") {
+    val tables = Seq("lead_assignment", "lead_xref", "lead")
+    val ranOn = new java.util.concurrent.ConcurrentHashMap[String, String]
+    def source(failing: Map[String, Exception]): String => Pipeline.Source = t =>
+      new Pipeline.Source {
+        def load(s: SparkSession) = {
+          ranOn.put(t, Thread.currentThread.getName)
+          failing.get(t).foreach(e => throw e)
+          s.createDataFrame(Seq(Row(s"g-$t", "2024-01-01 00:00:00", "2024-01-02 00:00:00")).asJava,
+            StructType(Seq("leadxrefguid", "createdate", "modifydate")
+              .map(StructField(_, StringType))))
+        }
+      }
+    def run(failing: Map[String, Exception], wm: Pipeline.WatermarkStore, sinkDir: String,
+        failFast: Boolean = true) =
+      Pipeline.run(spark, tables, tables.map(_ -> true).toMap, source(failing),
+        t => Pipeline.ParquetSink(s"$sinkDir/$t"), Pipeline.DeltaInsert, wm, failFast = failFast)
+    val epoch = Instant.parse("1900-01-01T00:00:00Z")
+
+    // the middle table fails: its error surfaces, the other two still load
+    val down = new IllegalStateException("lead_xref source is down")
+    val wm = new Pipeline.WatermarkStore(tmp())
+    val sinkDir = tmp()
+    val e = intercept[IllegalStateException](run(Map("lead_xref" -> down), wm, sinkDir))
+    assert((e eq down) && e.getSuppressed.isEmpty)
+    assert(wm.lastRuntime("lead_xref") == epoch)
+    assert(!new java.io.File(s"$sinkDir/lead_xref").exists)
+    Seq("lead_assignment", "lead").foreach { t =>
+      assert(wm.lastRuntime(t) != epoch, t)
+      assert(spark.read.parquet(s"$sinkDir/$t").count() == 1L, t)
+    }
+    assert(ranOn.keySet.asScala == tables.toSet)
+    assert(ranOn.values.asScala.forall(_.startsWith(Pipeline.TableThreadPrefix)), ranOn)
+    assert(liveTableThreads().isEmpty, liveTableThreads())
+
+    // two failures: the first in table order is thrown, the other suppressed
+    val first = new IllegalStateException("lead_assignment down")
+    val last = new IllegalArgumentException("lead down")
+    val e2 = intercept[IllegalStateException](
+      run(Map("lead_assignment" -> first, "lead" -> last), new Pipeline.WatermarkStore(tmp()), tmp()))
+    assert((e2 eq first) && e2.getSuppressed.toSeq == Seq(last))
+
+    // isolate-and-continue returns every table's own outcome, in order
+    val out = run(Map("lead_xref" -> down), new Pipeline.WatermarkStore(tmp()), tmp(),
+      failFast = false)
+    assert(out.map(_._1) == tables)
+    assert(out.map(_._2.map(_.rowsWritten)) ==
+      Seq(scala.util.Success(1L), scala.util.Failure(down), scala.util.Success(1L)))
+    assert(liveTableThreads().isEmpty, liveTableThreads())
+  }
+
+  test("run() refuses a table named twice before any table work") {
+    val loads = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalArgumentException](Pipeline.run(
+      spark,
+      tables = Seq("lead_xref", "lead", "lead_xref"),
+      enabled = Map("lead_xref" -> true, "lead" -> true),
+      source = _ => new Pipeline.Source {
+        def load(s: SparkSession) = { loads.incrementAndGet(); s.emptyDataFrame }
+      },
+      sink = t => Pipeline.ParquetSink(s"${tmp()}/$t"),
+      mode = Pipeline.Append(),
+      watermarks = new Pipeline.WatermarkStore(tmp())))
+    assert(e.getMessage.contains("duplicate table names [lead_xref]"), e.getMessage)
+    assert(loads.get == 0)
+  }
+
   test("conform runs unchanged on a streaming source (stream/batch ETL unification)") {
     import org.apache.spark.sql.streaming.Trigger
     val inDir = tmp()

@@ -611,6 +611,54 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(inc2.map(_._2.skippedEmpty) == Seq(true))
   }
 
+  test("SyncJob and IngestJob refuse a table named twice") {
+    val raw = tmp()
+    val e = intercept[IllegalArgumentException](SyncJob.run(spark, Map(
+      "jdbc-url" -> url, "tables" -> "lead_xref,lead_xref", "dest" -> raw)))
+    assert(e.getMessage.contains("duplicate table names [lead_xref]"), e.getMessage)
+    assert(!new java.io.File(s"$raw/lead_xref.parquet").exists)
+    val staged = tmp()
+    val e2 = intercept[IllegalArgumentException](IngestJob.run(spark, Map(
+      "source-dir" -> raw, "sink-dir" -> staged, "tables" -> "lead,lead_xref,lead")))
+    assert(e2.getMessage.contains("duplicate table names [lead]"), e2.getMessage)
+    assert(new java.io.File(staged).list().isEmpty)
+  }
+
+  test("SyncJob and IngestJob jobs carry the caller's job group across the table threads") {
+    val conn = DriverManager.getConnection(url)
+    try Seq("lead" -> "leadguid", "lead_assignment" -> "leadassignmentguid").foreach {
+      case (t, key) =>
+        val st = conn.createStatement()
+        st.executeUpdate(
+          s"CREATE TABLE $t ($key VARCHAR(36), createdate VARCHAR(32), modifydate VARCHAR(32))")
+        st.executeUpdate(s"INSERT INTO $t SELECT * FROM lead_xref")
+    } finally conn.close()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val (raw, staged) = (tmp(), tmp())
+    val tables = "lead_assignment,lead_xref,lead"
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (_, jobs) = try org.apache.spark.JobCount(sc) {
+      sc.setJobGroup("etl-cycle", "one cron cycle")
+      try {
+        val synced = SyncJob.run(spark, Map(
+          "jdbc-url" -> url, "tables" -> tables, "dest" -> raw, "snapshot" -> "on"))
+        assert(synced.map(_._3) == Seq(25L, 25L, 25L))
+        val ingested = IngestJob.run(spark, Map(
+          "source-dir" -> raw, "sink-dir" -> staged, "watermark-dir" -> tmp(),
+          "tables" -> tables, "mode" -> "delta_insert", "snapshot" -> "on"))
+        assert(ingested.map(_._1) == tables.split(",").toSeq)
+        assert(ingested.map(_._2.rowsWritten) == Seq(25L, 25L, 25L))
+      } finally sc.clearJobGroup()
+    } finally sc.removeSparkListener(listener)
+    assert(jobs > 0 && groups.size == jobs)
+    assert(groups.asScala.toSet == Set("etl-cycle"), groups)
+  }
+
   test("SyncJob --snapshot: versioned RAW zone, atomic re-sync, IngestJob consumes the pin") {
     import org.apache.spark.sql.functions.col
     val raw = tmp()
