@@ -2,6 +2,7 @@ package graft.etl
 
 import java.time.{Instant, ZoneId}
 import java.time.format.DateTimeFormatter
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -16,8 +17,11 @@ import graft.functions.RunTimestamp
   *   - the reference runs `count()` three times mid-pipeline
   *     (ingest.py:715,720,727), each a full recomputation of the lineage;
   *     here one `Observation` rides the write job — zero extra scans;
-  *   - emptiness probe is `df.isEmpty` (one-row limit job), not
-  *     `rdd.isEmpty()` (ingest.py:807) which forces RDD conversion;
+  *   - no emptiness probe: the reference's `rdd.isEmpty()` (ingest.py:807)
+  *     is a second job that plans and scans the same lineage again. An
+  *     incremental load writes once, and the [[Sink]] contract (an empty
+  *     frame publishes nothing) makes an empty delta leave no trace; the
+  *     write's observed count then reports it skipped;
   *   - the reference's broken `snowflake_config`/`final_count` names
   *     (ingest.py:784,800 — NameErrors at runtime) are implemented as
   *     the evident intent: one sink config, counters that exist.
@@ -55,6 +59,32 @@ object Pipeline {
     case "csv" => Map("header" -> "true")
     case "xml" => Map("rowTag" -> "row")
     case _ => Map.empty
+  }
+
+  /** Rows a plain `spark.read.format(format).load(dir)` sees, summed on
+    * the driver from the files' footers with no Spark job, over the files
+    * Spark's listing keeps (names starting with `_` or `.` are skipped,
+    * partition directories are not). Parquet and orc footers hold a row
+    * count; csv, json and xml hold none, so they give None.
+    */
+  def footerRows(spark: SparkSession, dir: String, format: String): Option[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows: Path => Long = format match {
+      case "parquet" => SnapshotStore.parquetRows(_, conf)
+      case "orc" => p =>
+        val r = org.apache.orc.OrcFile.createReader(p, org.apache.orc.OrcFile.readerOptions(conf))
+        try r.getNumberOfRows finally r.close()
+      case _ => return None
+    }
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def files(d: Path): Seq[Path] = fs.listStatus(d).toSeq
+      .filterNot { st =>
+        val n = st.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+      }
+      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st.getPath))
+    Some(files(root).map(rows).sum)
   }
 
   /** Format-parameterized file source — the reference's RAW zone is Delta
@@ -121,24 +151,86 @@ object Pipeline {
 
   /** Where conformed rows go. Append + truncate cover the reference's
     * Snowflake modes (ingest.py:782-820); Parquet stands in for tests.
+    *
+    * `append` of an empty frame publishes nothing: no file, version or
+    * row a reader of the target could see. [[processTable]]'s incremental
+    * load relies on it to write once, with no emptiness probe before the
+    * write. The file sinks meet it through [[stageThenPublish]].
     */
   trait Sink {
     def append(df: DataFrame): Unit
     def truncate(spark: SparkSession, schema: StructType): Unit
   }
 
+  /** Name prefix of the directory a file sink stages an append in. */
+  private[etl] val StagingPrefix = "_staging-"
+
+  /** Appends `df` to the file dataset at `path`, publishing nothing when
+    * `df` is empty. `write` saves its frame to the directory it is given;
+    * here that is `<path>/_staging-<uuid>`, which Spark's file listing
+    * skips like any name starting with `_`, so no reader of `path` sees
+    * a file of it. When the write observed at least one row, every file
+    * Spark laid out in the staging directory (part files, partition
+    * directories, `_SUCCESS`, and the `.crc` files a checksummed file
+    * system keeps beside them) moves to the same relative path under
+    * `path`, replacing the previous `_SUCCESS`. The staging directory is
+    * deleted in every case, a failed write included, and a `path` this
+    * call created is removed again when nothing was published.
+    */
+  private[etl] def stageThenPublish(df: DataFrame, path: String)(
+      write: (DataFrame, String) => Unit): Unit = {
+    val dest = new Path(path)
+    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val existed = fs.exists(dest)
+    val staging = new Path(dest, StagingPrefix + java.util.UUID.randomUUID)
+    val obs = Observation()
+    var published = false
+    try {
+      write(df.observe(obs, count(lit(1)).as("rows")), staging.toString)
+      if (obs.get("rows").asInstanceOf[Long] > 0L) {
+        moveTree(fs, staging, dest)
+        published = true
+      }
+    } finally {
+      fs.delete(staging, true)
+      if (!existed && !published && fs.exists(dest) && fs.listStatus(dest).isEmpty)
+        fs.delete(dest, false)
+    }
+  }
+
+  /** Moves every file under `from` to its relative path under `to`. On a
+    * checksummed file system (`file:`) listing hides the `.crc` files and
+    * `rename` carries each along with its data file.
+    */
+  private def moveTree(fs: FileSystem, from: Path, to: Path): Unit =
+    fs.listStatus(from).foreach { st =>
+      val target = new Path(to, st.getPath.getName)
+      if (st.isDirectory) { fs.mkdirs(target); moveTree(fs, st.getPath, target) }
+      else {
+        if (fs.exists(target)) fs.delete(target, false)
+        if (!fs.rename(st.getPath, target))
+          throw new java.io.IOException(s"could not move ${st.getPath} to $target")
+      }
+    }
+
   final case class ParquetSink(path: String) extends Sink {
     def append(df: DataFrame): Unit =
-      df.write.mode(SaveMode.Append).parquet(path)
+      stageThenPublish(df, path)((d, p) => d.write.mode(SaveMode.Append).parquet(p))
     def truncate(spark: SparkSession, schema: StructType): Unit =
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** Format-parameterized file sink (parquet | orc | delta-when-jarred). */
+  /** Format-parameterized file sink (parquet | orc | csv | json |
+    * delta-when-jarred). A Delta table publishes through its own log, so
+    * files moved into its directory would stay invisible: `delta` appends
+    * directly, and an empty frame commits a version with no rows.
+    */
   final case class FileSink(path: String, format: String = "parquet") extends Sink {
+    private def save(df: DataFrame, dir: String): Unit =
+      df.write.mode(SaveMode.Append).options(writeOptions(format)).format(format).save(dir)
     def append(df: DataFrame): Unit =
-      df.write.mode(SaveMode.Append).options(writeOptions(format)).format(format).save(path)
+      if (format == "delta") save(df, path) else stageThenPublish(df, path)(save)
     def truncate(spark: SparkSession, schema: StructType): Unit =
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .write.mode(SaveMode.Overwrite).options(writeOptions(format)).format(format).save(path)
@@ -156,8 +248,8 @@ object Pipeline {
       path: String, parts: Seq[String], format: String = "parquet") extends Sink {
     require(parts.nonEmpty, "PartitionedSink: no partition columns")
     def append(df: DataFrame): Unit =
-      df.write.mode(SaveMode.Append).partitionBy(parts: _*)
-        .options(writeOptions(format)).format(format).save(path)
+      stageThenPublish(df, path)((d, p) => d.write.mode(SaveMode.Append)
+        .partitionBy(parts: _*).options(writeOptions(format)).format(format).save(p))
     def truncate(spark: SparkSession, schema: StructType): Unit =
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .write.mode(SaveMode.Overwrite).partitionBy(parts: _*)
@@ -175,6 +267,11 @@ object Pipeline {
     * plain JDBC): append = K2/K4; truncate = the K3 "overwrite with an
     * empty frame + truncate option" trick, which truncates in place
     * (dialect TRUNCATE TABLE) instead of a drop/recreate round-trip.
+    *
+    * An empty append inserts no row, so it needs no staging. A missing
+    * target table is created from the frame's schema first (Spark's JDBC
+    * append does that), so an empty append to a missing table leaves an
+    * empty table behind.
     */
   final case class JdbcSink(url: String, table: String, props: java.util.Properties)
       extends Sink {
@@ -228,8 +325,12 @@ object Pipeline {
   /** One table end-to-end: load → conform → (mode-specific filter) →
     * validate → write, with a single observed row count.
     *
-    * The default `clock` is captured once per call, so the emptiness
-    * probe and the write stamp the same instant. It and the watermark
+    * `DeltaInsert` writes once: an empty delta publishes nothing (the
+    * [[Sink]] contract), reports `skippedEmpty` from the write's observed
+    * count and leaves the watermark where it was.
+    *
+    * The default `clock` is captured once per call, so every row of a
+    * run carries the same instant. It and the watermark
     * bound are [[graft.functions.RunTimestamp]]s, which generated code
     * reads through a reference: the source text, which keys Spark's
     * codegen cache, stays the same from one cron run to the next, and the
@@ -259,13 +360,13 @@ object Pipeline {
       case DeltaInsert =>
         val filtered = deltaRows(conformed,
           if (historicalLoad) None else Some(watermarks.lastRuntime(table)))
-        if (filtered.isEmpty) Report(table, 0L, skippedEmpty = true)
+        Conform.validate(filtered, table)
+        sink.append(filtered.observe(obs, count(lit(1)).as("rows")))
+        val rows = obs.get("rows").asInstanceOf[Long]
+        if (rows == 0L) Report(table, 0L, skippedEmpty = true)
         else {
-          Conform.validate(filtered, table)
-          val observed = filtered.observe(obs, count(lit(1)).as("rows"))
-          sink.append(observed)
           watermarks.update(table, wallClock())
-          Report(table, obs.get("rows").asInstanceOf[Long])
+          Report(table, rows)
         }
     }
   }

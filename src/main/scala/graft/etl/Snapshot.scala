@@ -399,7 +399,20 @@ final class SnapshotStore(root: String,
     * files consistently with zero rewrites.
     */
   def commitAppend(df: DataFrame, statsColumn: Option[String] = None,
-      mergeSchema: Boolean = false, txn: Option[(String, Long)] = None): Long = {
+      mergeSchema: Boolean = false, txn: Option[(String, Long)] = None): Long =
+    appendImpl(df, statsColumn, mergeSchema, txn, skipEmpty = false).get
+
+  /** [[commitAppend]] that publishes nothing when `df` holds no rows:
+    * the staged files' footers count zero, so they are deleted and no
+    * version is committed (None). The [[Pipeline.Sink]] contract.
+    */
+  private[etl] def commitAppendNonEmpty(df: DataFrame,
+      mergeSchema: Boolean): Option[Long] =
+    appendImpl(df, None, mergeSchema, None, skipEmpty = true)
+
+  private def appendImpl(df: DataFrame, statsColumn: Option[String],
+      mergeSchema: Boolean, txn: Option[(String, Long)],
+      skipEmpty: Boolean): Option[Long] = {
     // Stats AUTHORITY: the table's stats column is a table property.
     // Old manifest entries' min/max were computed for the OLD column —
     // relabeling them under a new `#stats` name would make readRange /
@@ -497,10 +510,18 @@ final class SnapshotStore(root: String,
             val e = if (parts.isEmpty)
                 stageEntries(df, effective, mapping._1, bloomCol)
               else stagePartitioned(df, parts, effective, mapping._1, bloomCol)
+            if (skipEmpty && e.forall(f => SnapshotStore.parquetRows(
+                new org.apache.hadoop.fs.Path(rootPath.resolve(f.path).toString),
+                SnapshotStore.hadoopConf) == 0L)) {
+              // data/<uuid>/...: the staging directory of this append
+              e.map(f => Paths.get(f.path).subpath(0, 2)).distinct.foreach(d =>
+                org.apache.hadoop.fs.FileUtil.fullyDelete(rootPath.resolve(d).toFile))
+              return None
+            }
             staged = Some((e, effective, parts, mapping._1))
             e
         }
-        return {
+        return Some {
           if (expected == 0L)
             publishEntries(entries, published, effective, txn,
               partCols = parts, expectedVersion = Some(0L))
@@ -3622,6 +3643,78 @@ final class SnapshotStore(root: String,
     } finally r.close()
   }
 
+  /** Rows visible at a version, counted on the driver from metadata with
+    * no Spark job: the footer record count of every data file the
+    * manifest lists, minus the positions its deletion vectors tombstone.
+    * It counts what the manifest points at, so it checks a commit
+    * independently of the writer's own counters.
+    *
+    * One DV sidecar can hold the positions of several data files (one
+    * merge-on-read write hitting many files), and a copy-on-write
+    * rewrite can since have replaced some of them, so a sidecar's rows
+    * are attributed per file: a row group whose `file` column statistics
+    * have min = max belongs to that one file (footer only); a sidecar
+    * part with a mixed row group has its `file` column read (one short
+    * string per tombstone).
+    */
+  def footerRowCount(asOfVersion: Option[Long] = None): Long = {
+    val v = asOfVersion.orElse(latestVersion).getOrElse(
+      throw new IllegalArgumentException(
+        s"SnapshotStore.footerRowCount: no committed versions at $root"))
+    val m = readFullManifest(v)
+    val conf = SnapshotStore.hadoopConf
+    def abs(rel: String): Path = rootPath.resolve(rel).normalize
+    val rows = m.entries.map(e => SnapshotStore.parquetRows(
+      new org.apache.hadoop.fs.Path(abs(e.path).toString), conf)).sum
+    // (sidecar, data file) pairs whose tombstones apply at this version
+    val applied = m.entries.flatMap(e => e.dv.map(d => (abs(d), abs(e.path)))).toSet
+    val tombstones = applied.map(_._1).toSeq.map { dv =>
+      // a sidecar's `file` values are relative to the store that wrote
+      // it: <owner>/data/<uuid>.dv (see positionJoin)
+      val owner = dv.getParent.getParent
+      dvPositionsByFile(dv, conf).collect {
+        case (f, n) if applied((dv, owner.resolve(f).normalize)) => n
+      }.sum
+    }.sum
+    rows - tombstones
+  }
+
+  /** Tombstone count per `file` value of one DV sidecar dataset. */
+  private def dvPositionsByFile(dv: Path,
+      conf: org.apache.hadoop.conf.Configuration): Map[String, Long] = {
+    val parts = {
+      val s = Files.list(dv)
+      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      finally s.close()
+    }
+    parts.flatMap { part =>
+      val hp = new org.apache.hadoop.fs.Path(part.toString)
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val single = try r.getFooter.getBlocks.asScala.toSeq.map { block =>
+        block.getColumns.asScala.find(_.getPath.toDotString == "file")
+          .map(_.getStatistics).collect {
+            case st if st != null && st.hasNonNullValue && st.getNumNulls == 0 &&
+                st.genericGetMin == st.genericGetMax =>
+              st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
+                .toStringUsingUTF8 -> block.getRowCount
+          }
+      } finally r.close()
+      if (single.forall(_.isDefined)) single.flatten
+      else {
+        val c = new org.apache.hadoop.conf.Configuration(conf)
+        c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+          "message dv { optional binary file (STRING); }")
+        val reader = org.apache.parquet.hadoop.ParquetReader
+          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport, hp)
+          .withConf(c).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => g.getString("file", 0) -> 1L).toSeq
+        finally reader.close()
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
   /** Spec-compat publish of bare paths (no stats). */
   private[etl] def publish(files: Seq[String], schema: StructType): Long =
     publishEntries(files.map(FileEntry(_, None, None)), schema, None)
@@ -4104,6 +4197,21 @@ final class ConcurrentCommitException(msg: String, val retryable: Boolean = true
 
 object SnapshotStore {
 
+  /** Hadoop configuration of the driver-side footer reads: the store is
+    * local/NFS only, so the defaults serve every store in the JVM.
+    */
+  private[etl] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The record count a parquet file's footer holds: one footer read, no
+    * data page.
+    */
+  private[etl] def parquetRows(p: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    try r.getRecordCount finally r.close()
+  }
+
   /** Hive's sentinel directory name for a NULL partition value. */
   val HiveNullPartition = "__HIVE_DEFAULT_PARTITION__"
 
@@ -4183,14 +4291,15 @@ object SnapshotStore {
   /** [[Pipeline.Sink]] over a [[SnapshotStore]] — drop-in for the
     * ParquetSink/FileSink positions in `processTable`, upgrading the
     * RAW zone to atomic versioned semantics: K2/K4 append lands as a
-    * new version extending the old file list; K3 truncate publishes an
+    * new version extending the old file list (none for an empty frame,
+    * the [[Pipeline.Sink]] contract); K3 truncate publishes an
     * empty manifest instead of deleting history; `overwrite` is the
     * full-refresh path (sync.py:112-114 parity).
     */
   final case class SnapshotSink(store: SnapshotStore,
       mergeSchema: Boolean = false) extends Pipeline.Sink {
     def append(df: DataFrame): Unit =
-      store.commitAppend(df, mergeSchema = mergeSchema)
+      store.commitAppendNonEmpty(df, mergeSchema)
     def truncate(spark: SparkSession, schema: StructType): Unit =
       store.commitTruncate(schema)
     def overwrite(df: DataFrame): Long = store.commitOverwrite(df)

@@ -69,8 +69,14 @@ private[jobs] object JobArgs {
 }
 
 /** Stage 1 — database → columnar RAW zone (the reference's sync.py):
-  * per-table JDBC read → parquet overwrite → re-read count
-  * reconciliation, per-table error isolation (sync.py:169-179).
+  * per-table JDBC read → parquet overwrite → count reconciliation from
+  * the written files' footers, per-table error isolation
+  * (sync.py:169-179). The written count is read on the driver with no
+  * Spark job: the committed snapshot's `footerRowCount`, or the footer
+  * sum of the written parquet/orc files. csv and json keep no row count
+  * and are re-read with Spark. Either way it counts what landed, not
+  * what the writer says it wrote, and a mismatch with the source count
+  * is a `count drift` verdict.
   *
   *   --jdbc-url URL --tables t1,t2 --dest DIR
   *   [--partition-col col:lo:hi:n | col:n]  (ALWAYS set in production —
@@ -90,7 +96,8 @@ private[jobs] object JobArgs {
   * running task, so concurrent tables can hold up to min(Σ partitions,
   * running tasks) connections where one table held min(partitions,
   * running tasks), plus one driver-side connection per running table
-  * for its bounds and count queries.
+  * for its bounds and count queries. The log lines print once every
+  * table has settled, in table order.
   */
 object SyncJob {
 
@@ -162,8 +169,9 @@ object SyncJob {
       }
     }
     probe(url, props) // fail fast, before any per-table work
-    Pipeline.perTable(conf("tables").split(",").toSeq) { table =>
-      try {
+    val outcomes = Pipeline.perTable(conf("tables").split(",").toSeq) { table =>
+      val log = Seq.newBuilder[Either[String, String]] // Left: stderr
+      val synced = try {
         val partition = partSpec.map { case (c, bounds, n) =>
           val (lo, hi) = bounds.getOrElse(autoBounds(url, props, table, c))
           (c, lo, hi, n)
@@ -180,26 +188,31 @@ object SyncJob {
             "--snapshot: the manifest store is parquet-backed; drop --format")
           val store = new graft.etl.SnapshotStore(s"$dest/$table")
           val v = store.commitOverwrite(df) // the ONLY Spark extraction
-          val n = store.read(spark, Some(v)).count()
-          println(s"""{"job":"sync","table":"$table","snapshot_version":$v}""")
-          n
+          log += Right(s"""{"job":"sync","table":"$table","snapshot_version":$v}""")
+          store.footerRowCount(Some(v))
         } else {
+          val out = s"$dest/$table.$fmt"
           df.write.mode("overwrite").options(Pipeline.writeOptions(fmt))
-            .format(fmt).save(s"$dest/$table.$fmt") // the ONLY Spark extraction
-          spark.read.options(Pipeline.readOptions(fmt))
-            .format(fmt).load(s"$dest/$table.$fmt").count()
+            .format(fmt).save(out) // the ONLY Spark extraction
+          Pipeline.footerRows(spark, out, fmt).getOrElse(
+            spark.read.options(Pipeline.readOptions(fmt)).format(fmt).load(out).count())
         }
         if (written != sourceCount)
-          System.err.println(s"""{"job":"sync","table":"$table","warn":"count drift $sourceCount -> $written"}""")
-        println(s"""{"job":"sync","table":"$table","source_rows":$sourceCount,"written_rows":$written}""")
+          log += Left(s"""{"job":"sync","table":"$table","warn":"count drift $sourceCount -> $written"}""")
+        log += Right(s"""{"job":"sync","table":"$table","source_rows":$sourceCount,"written_rows":$written}""")
         Some((table, sourceCount, written))
       } catch {
         case e: Exception => // isolate-and-continue, sync.py:169-179
-          System.err.println(
-            s"""{"job":"sync","table":"$table","error":${JobArgs.jsonStr(e.getMessage)}}""")
+          log += Left(s"""{"job":"sync","table":"$table","error":${JobArgs.jsonStr(e.getMessage)}}""")
           None
       }
-    }.flatMap(_.get)
+      (synced, log.result())
+    }
+    outcomes.foreach(_.foreach(_._2.foreach {
+      case Left(line) => System.err.println(line)
+      case Right(line) => println(line)
+    }))
+    outcomes.flatMap(_.get._1)
   }
 
   def main(args: Array[String]): Unit = {
@@ -284,6 +297,9 @@ object IngestJob {
   *   --src STORE_ROOT --snapshot on [--target-mb 128]
   *     [--cluster-by COL | --zorder-by COL1,COL2] [--vacuum-keep N]
   *     [--vacuum-min-age-ms MS]
+  *
+  * The reported rows are counted from the output's footers on the driver
+  * (csv and json, which keep no count, are re-read with Spark).
   */
 object CompactJob {
   def run(spark: SparkSession, conf: Map[String, String]): (Long, Int) = {
@@ -299,7 +315,7 @@ object CompactJob {
       val v = store.compactLatest(spark, parts, conf.get("cluster-by"), zorder)
       conf.get("vacuum-keep").map(_.toInt).foreach(k =>
         store.vacuum(k, conf.getOrElse("vacuum-min-age-ms", "0").toLong))
-      val rows = store.read(spark).count()
+      val rows = store.footerRowCount()
       println(s"""{"job":"compact","snapshot":true,"src_bytes":$bytes,""" +
         s""""out_files":$parts,"version":$v,"rows":$rows}""")
       return (rows, parts)
@@ -314,7 +330,8 @@ object CompactJob {
     spark.read.options(Pipeline.readOptions(fmt)).format(fmt).load(src)
       .repartition(parts)
       .write.mode("overwrite").options(Pipeline.writeOptions(fmt)).format(fmt).save(dest)
-    val rows = spark.read.options(Pipeline.readOptions(fmt)).format(fmt).load(dest).count()
+    val rows = Pipeline.footerRows(spark, dest, fmt).getOrElse(
+      spark.read.options(Pipeline.readOptions(fmt)).format(fmt).load(dest).count())
     println(s"""{"job":"compact","src_bytes":$bytes,"out_files":$parts,"rows":$rows}""")
     (rows, parts)
   }

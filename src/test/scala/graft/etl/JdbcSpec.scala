@@ -86,4 +86,14 @@ class JdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
     sink.append(df.limit(7))
     assert(Pipeline.JdbcSource(url, "dst", props).load(spark).count() == 7)
   }
+
+  test("JdbcSink: an empty append inserts no row; a missing table is created empty") {
+    val none = Pipeline.JdbcSource(url, "src", props).load(spark).filter("id < 0")
+    Pipeline.JdbcSink(url, "src", props).append(none)
+    assert(Pipeline.JdbcSource(url, "src", props).load(spark).count() == 100)
+    Pipeline.JdbcSink(url, "empty_dst", props).append(none)
+    val created = Pipeline.JdbcSource(url, "empty_dst", props).load(spark)
+    assert(created.count() == 0 && created.columns.map(_.toLowerCase).toSeq ==
+      Seq("id", "name", "amount"))
+  }
 }

@@ -352,4 +352,93 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("CREATE_DATE"))
     assert(e.getMessage.contains("LEGACY_LEAD_ID")) // one of the missing ones
   }
+
+  /** Every file under `dir` (hidden ones included) with its length and
+    * modification time; empty when `dir` does not exist. */
+  private def tree(dir: String): Map[String, (Long, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Map.empty
+    else {
+      val w = Files.walk(root)
+      try w.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+        root.relativize(p).toString -> (Files.size(p), Files.getLastModifiedTime(p).toMillis)).toMap
+      finally w.close()
+    }
+  }
+
+  /** Staging directories left under `dir`, empty ones included. */
+  private def stagingDirs(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Nil
+    else {
+      val w = Files.walk(root)
+      try w.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(Pipeline.StagingPrefix)).toSeq
+      finally w.close()
+    }
+  }
+
+  test("an empty delta publishes nothing: no new file, no staging directory, the watermark kept") {
+    xrefRows(("g-1", "2024-01-01 00:00:00", "2024-01-05 00:00:00"))
+    val src = Pipeline.ParquetSource(s"$srcDir/lead_xref.parquet")
+    val base = tmp()
+    val store = new SnapshotStore(s"$base/snapshot")
+    val sinks: Seq[(String, Pipeline.Sink)] = Seq(
+      "parquet" -> Pipeline.ParquetSink(s"$base/parquet"),
+      "orc" -> Pipeline.FileSink(s"$base/orc", "orc"),
+      "json" -> Pipeline.FileSink(s"$base/json", "json"),
+      "parted" -> Pipeline.PartitionedSink(s"$base/parted", Seq("CREATED_BY")),
+      "snapshot" -> SnapshotStore.SnapshotSink(store))
+    val t1 = Instant.parse("2025-03-01T00:00:00Z")
+    sinks.foreach { case (dir, sink) =>
+      val wm = new Pipeline.WatermarkStore(tmp())
+      val r1 = Pipeline.processTable(spark, "lead_xref", src, sink,
+        Pipeline.DeltaInsert, wm, wallClock = () => t1)
+      assert(r1 == Pipeline.Report("lead_xref", 1L), dir)
+      val before = tree(s"$base/$dir")
+      assert(before.keys.exists(k => k.contains("part-")), s"$dir: $before")
+      val r2 = Pipeline.processTable(spark, "lead_xref", src, sink,
+        Pipeline.DeltaInsert, wm, wallClock = () => Instant.parse("2025-04-01T00:00:00Z"))
+      assert(r2 == Pipeline.Report("lead_xref", 0L, skippedEmpty = true), dir)
+      assert(tree(s"$base/$dir") == before, dir)
+      assert(stagingDirs(s"$base/$dir").isEmpty, dir)
+      assert(wm.lastRuntime("lead_xref") == t1, dir)
+    }
+    assert(store.versions == Seq(0L))
+
+    // an empty append to a target that does not exist yet leaves nothing
+    val empty = spark.range(0).selectExpr("id", "cast(id AS STRING) AS p")
+    val fresh = new SnapshotStore(s"$base/fresh-snapshot")
+    Seq(Pipeline.ParquetSink(s"$base/fresh-parquet"),
+      Pipeline.FileSink(s"$base/fresh-csv", "csv"),
+      Pipeline.PartitionedSink(s"$base/fresh-parted", Seq("p")),
+      SnapshotStore.SnapshotSink(fresh)).foreach(_.append(empty))
+    assert(Seq("fresh-parquet", "fresh-csv", "fresh-parted")
+      .forall(d => !Files.exists(java.nio.file.Paths.get(base, d))))
+    assert(fresh.latestVersion.isEmpty && tree(s"$base/fresh-snapshot").isEmpty)
+  }
+
+  test("a write that fails mid-job leaves no staging residue and publishes nothing") {
+    val base = tmp()
+    val good = spark.range(0, 40, 1, 4).selectExpr("id", "cast(id % 3 AS STRING) AS p")
+    // one task of four throws after the others may have written
+    val bad = good.withColumn("id",
+      when(col("id") === 37L, raise_error(lit("boom"))).otherwise(col("id")))
+    val sinks: Seq[(String, String => Pipeline.Sink)] = Seq(
+      "parquet" -> (d => Pipeline.ParquetSink(d)),
+      "orc" -> (d => Pipeline.FileSink(d, "orc")),
+      "parted" -> (d => Pipeline.PartitionedSink(d, Seq("p"))))
+    sinks.foreach { case (name, sinkAt) =>
+      val dir = s"$base/$name"
+      sinkAt(dir).append(good)
+      val before = tree(dir)
+      val e = intercept[Exception](sinkAt(dir).append(bad))
+      assert(e.getMessage.contains("boom") || String.valueOf(e.getCause).contains("boom"), e)
+      assert(tree(dir) == before, name)
+      assert(stagingDirs(dir).isEmpty, name)
+      // a failed write into a target that did not exist leaves no directory
+      intercept[Exception](sinkAt(s"$dir-fresh").append(bad))
+      assert(!new java.io.File(s"$dir-fresh").exists, name)
+    }
+  }
 }

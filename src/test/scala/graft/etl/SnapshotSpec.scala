@@ -2941,4 +2941,38 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.latestVersion.contains(0L))
     assert(store.read(spark).count() == 1L)
   }
+
+  test("footerRowCount equals a Spark count() through merge-on-read deletion vectors") {
+    import spark.implicits._
+    val store = new SnapshotStore(tmp())
+    def same(v: Option[Long] = None): Unit = {
+      val n = store.read(spark, v).count()
+      assert(store.footerRowCount(v) == n, s"version $v: Spark counts $n")
+    }
+    // six files of 20 rows, ids 1..120, with id ranges in the manifest
+    store.commitOverwrite(frame(1 to 120, "a").repartitionByRange(6, $"id"),
+      statsColumn = Some("id"))
+    val v0 = store.latestVersion
+    same()
+    // one sidecar whose tombstones span several files
+    store.deleteWhere(spark, $"id" % 7 === 0L, mergeOnRead = true)
+    same()
+    // a second sidecar stacked on files that already carry one
+    store.deleteWhere(spark, $"id" % 5 === 0L, mergeOnRead = true)
+    same()
+    // copy-on-write rewrites only the file holding id 3: the sidecars'
+    // tombstones in that file no longer apply, those in the others do
+    store.deleteWhere(spark, $"id" === 3L)
+    val entries = store.manifestAt()._3
+    assert(entries.exists(_.hasDv) && entries.exists(!_.hasDv), entries)
+    same()
+    assert(store.footerRowCount() == (1 to 120)
+      .count(i => i % 7 != 0 && i % 5 != 0 && i != 3).toLong)
+    // time travel counts what the old manifest points at
+    same(v0)
+    assert(store.footerRowCount(v0) == 120L)
+    // a merge-on-read delete that hits a single file
+    store.deleteWhere(spark, $"id" === 118L, mergeOnRead = true)
+    same()
+  }
 }

@@ -53,9 +53,9 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SyncJob: exactly ONE Spark JDBC extraction per table (count is pushed down)") {
     // the reference's S2: the reconciliation count runs IN the database
-    // (sync.py:45-55); the write is the only Spark pull. Evidence: of
-    // all query executions the job triggers, exactly one plan scans a
-    // JDBCRelation (the write), and the other scan is the file re-read.
+    // (sync.py:45-55); the write is the only Spark pull, and the written
+    // count comes from the file footers. Evidence: the job triggers
+    // exactly one query execution, and its plan scans a JDBCRelation.
     val plans = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -66,17 +66,14 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.listenerManager.register(listener)
     try {
-      val out = SyncJob.run(spark, Map(
-        "jdbc-url" -> url, "tables" -> "lead_xref", "dest" -> tmp()))
+      // JobCount drains the listener bus, which delivers the
+      // execution-listener events, before it returns
+      val (out, _) = org.apache.spark.JobCount(spark.sparkContext)(SyncJob.run(spark, Map(
+        "jdbc-url" -> url, "tables" -> "lead_xref", "dest" -> tmp())))
       assert(out == Seq(("lead_xref", 25L, 25L))) // reconciliation unchanged
-      // the listener bus is async: wait for BOTH executions (write +
-      // re-read) to arrive before counting
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(plans.size >= 2, s"expected >=2 query executions, saw ${plans.size}")
       val jdbcScans = plans.asScala.count(_.contains("JDBCRelation"))
-      assert(jdbcScans == 1,
-        s"expected exactly 1 JDBC extraction, saw $jdbcScans:\n${plans.asScala.mkString("\n---\n")}")
+      assert(plans.size == 1 && jdbcScans == 1,
+        s"expected exactly 1 execution, a JDBC extraction:\n${plans.asScala.mkString("\n---\n")}")
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -847,4 +844,149 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
         quarantine = Some("quar_rejects"))
     }
   }
+
+  /** A Derby database of its own holding the three RAW tables, the first
+    * (`lead_assignment`) much larger than the other two, so that its
+    * Sync and Ingest finish last. */
+  private val cycleUrl = "jdbc:derby:memory:jobscycle;create=true"
+  private val cycleTables = Seq("lead_assignment" -> 3000, "lead_xref" -> 25, "lead" -> 25)
+  private val cycleKey = Map("lead_assignment" -> "leadassignmentguid",
+    "lead_xref" -> "leadxrefguid", "lead" -> "leadguid")
+  private lazy val cycleDb: Unit = {
+    val conn = DriverManager.getConnection(cycleUrl)
+    try cycleTables.foreach { case (t, n) =>
+      conn.createStatement().executeUpdate(
+        s"CREATE TABLE $t (${cycleKey(t)} VARCHAR(36), createdate VARCHAR(32), modifydate VARCHAR(32))")
+      val ps = conn.prepareStatement(s"INSERT INTO $t VALUES (?, ?, ?)")
+      (0 until n).foreach { i =>
+        ps.setString(1, s"$t-$i"); ps.setString(2, "2024-01-01 10:00:00")
+        ps.setString(3, s"2024-01-${10 + i % 20} 09:30:00"); ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally conn.close()
+  }
+
+  /** One cron cycle: Sync into the snapshot RAW zone, then incremental Ingest. */
+  private def cronCycle(raw: String, staged: String, wm: String)
+      : (Seq[(String, Long, Long)], Seq[(String, graft.etl.Pipeline.Report)]) = {
+    cycleDb
+    val tables = cycleTables.map(_._1).mkString(",")
+    (SyncJob.run(spark, Map(
+      "jdbc-url" -> cycleUrl, "tables" -> tables, "dest" -> raw, "snapshot" -> "on")),
+      IngestJob.run(spark, Map(
+        "source-dir" -> raw, "sink-dir" -> staged, "watermark-dir" -> wm,
+        "tables" -> tables, "mode" -> "delta_insert", "snapshot" -> "on")))
+  }
+
+  test("SyncJob and IngestJob print their per-table lines in table order") {
+    val (raw, staged, wm) = (tmp(), tmp(), tmp())
+    val order = cycleTables.map(_._1)
+    (1 to 2).foreach { run =>
+      val buf = new java.io.ByteArrayOutputStream
+      Console.withOut(buf)(cronCycle(raw, staged, wm))
+      val lines = buf.toString("UTF-8").linesIterator.filter(_.startsWith("{\"job\"")).toSeq
+      def tables(job: String, key: String) = lines
+        .filter(l => l.contains(s"\"job\":\"$job\"") && l.contains(key))
+        .map(_.split("\"table\":\"")(1).takeWhile(_ != '"'))
+      assert(tables("sync", "written_rows") == order, s"run $run:\n${lines.mkString("\n")}")
+      assert(tables("sync", "snapshot_version") == order, s"run $run:\n${lines.mkString("\n")}")
+      assert(tables("ingest", "rows") == order, s"run $run:\n${lines.mkString("\n")}")
+    }
+  }
+
+  test("a three-table Sync + incremental Ingest cron cycle runs at most 6 Spark jobs") {
+    val (raw, staged, wm) = (tmp(), tmp(), tmp())
+    val (synced0, ingested0) = cronCycle(raw, staged, wm) // the full load
+    assert(synced0.map(_._3) == cycleTables.map(_._2.toLong))
+    assert(ingested0.map(_._2.rowsWritten) == cycleTables.map(_._2.toLong))
+    // churn: three rows of each table modified now
+    val now = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+    val conn = DriverManager.getConnection(cycleUrl)
+    try cycleTables.foreach { case (t, _) =>
+      conn.createStatement().executeUpdate(
+        s"UPDATE $t SET modifydate = '$now' WHERE ${cycleKey(t)} IN ('$t-1', '$t-2', '$t-3')")
+    } finally conn.close()
+    val ((synced, ingested), jobs) =
+      org.apache.spark.JobCount(spark.sparkContext)(cronCycle(raw, staged, wm))
+    assert(synced.map(_._3) == cycleTables.map(_._2.toLong))
+    assert(ingested.map(_._2.rowsWritten) == Seq(3L, 3L, 3L))
+    // one extraction per table, one write per table: no count or probe job
+    assert(jobs <= 6, s"the cycle ran $jobs Spark jobs")
+  }
+
+  test("SyncJob: a manifest pointing at fewer rows than the source count is a count drift") {
+    java.sql.DriverManager.registerDriver(new DriftDriver)
+    // a source whose pushed COUNT(*) sees one row more than its extraction
+    val drifting = "jdbc:graftdrift:memory:jobsdb"
+    Seq(Map("snapshot" -> "on"), Map.empty[String, String]).foreach { extra =>
+      val err = new java.io.ByteArrayOutputStream
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val out = try SyncJob.run(spark, Map(
+          "jdbc-url" -> drifting, "tables" -> "lead_xref", "dest" -> tmp()) ++ extra)
+        finally System.setErr(saved)
+      assert(out == Seq(("lead_xref", 26L, 25L)), extra)
+      assert(err.toString("UTF-8").linesIterator.contains(
+        """{"job":"sync","table":"lead_xref","warn":"count drift 26 -> 25"}"""), err.toString("UTF-8"))
+    }
+  }
+
+  test("CompactJob reports the rows a Spark count() reads back") {
+    import spark.implicits._
+    val root = tmp()
+    val store = new graft.etl.SnapshotStore(root)
+    (0 until 3).foreach(r => store.commitAppend(
+      (1L to 600L).filter(_ % 3 == r).map(i => (i, s"p$i")).toDF("id", "p").coalesce(1)))
+    store.deleteWhere(spark, $"id" % 11 === 0L, mergeOnRead = true)
+    val (rows, _) = CompactJob.run(spark, Map("src" -> root, "snapshot" -> "on"))
+    assert(rows == store.read(spark).count() && rows == 600L - 54L)
+    Seq("parquet", "orc", "csv", "json").foreach { fmt =>
+      val (src, dest) = (tmp(), tmp() + "/out")
+      (1 to 500).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(5)
+        .write.mode("overwrite").options(graft.etl.Pipeline.writeOptions(fmt)).format(fmt).save(src)
+      val (n, _) = CompactJob.run(spark, Map("src" -> src, "dest" -> dest, "format" -> fmt))
+      val read = spark.read.options(graft.etl.Pipeline.readOptions(fmt)).format(fmt).load(dest)
+      assert(n == read.count() && n == 500L, fmt)
+    }
+  }
+}
+
+/** Derby behind the `jdbc:graftdrift:` prefix, whose `SELECT COUNT(*)`
+  * statements count one row more than the table holds: a source that
+  * gains a row between a pushed count and the extraction.
+  */
+class DriftDriver extends java.sql.Driver {
+  import java.lang.reflect.{InvocationTargetException, Method, Proxy}
+  private val Prefix = "jdbc:graftdrift:"
+  def acceptsURL(url: String): Boolean = url != null && url.startsWith(Prefix)
+  def connect(url: String, info: java.util.Properties): java.sql.Connection =
+    if (!acceptsURL(url)) null
+    else {
+      val conn = DriverManager.getConnection("jdbc:derby:" + url.stripPrefix(Prefix), info)
+      proxy(classOf[java.sql.Connection], conn, {
+        case ("createStatement", a) if a.isEmpty =>
+          val st = conn.createStatement()
+          proxy(classOf[java.sql.Statement], st, {
+            case ("executeQuery", Array(sql: String)) if sql.startsWith("SELECT COUNT(*)") =>
+              st.executeQuery(sql.replace("COUNT(*)", "COUNT(*) + 1"))
+          })
+      })
+    }
+  private def proxy[T](iface: Class[T], target: T,
+      over: PartialFunction[(String, Array[AnyRef]), AnyRef]): T =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](iface),
+      (_: Any, m: Method, args: Array[AnyRef]) => {
+        val a = Option(args).getOrElse(Array.empty[AnyRef])
+        over.applyOrElse((m.getName, a), (_: (String, Array[AnyRef])) =>
+          try m.invoke(target, a: _*)
+          catch { case e: InvocationTargetException => throw e.getCause })
+      }).asInstanceOf[T]
+  def getMajorVersion: Int = 1
+  def getMinorVersion: Int = 0
+  def getPropertyInfo(url: String, info: java.util.Properties): Array[java.sql.DriverPropertyInfo] =
+    Array.empty
+  def jdbcCompliant: Boolean = false
+  def getParentLogger: java.util.logging.Logger =
+    java.util.logging.Logger.getLogger("graft.jobs.DriftDriver")
 }
