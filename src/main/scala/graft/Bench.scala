@@ -1,17 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 32 = the driver's configuration (the round-1 baseline was
     // accidentally authored at local[4], which made driver-measured
     // numbers look 1.5x regressed — keep both sides measuring alike)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, parquet reader, shuffle machinery) so
     // the alphabetically-first query doesn't absorb startup cost.

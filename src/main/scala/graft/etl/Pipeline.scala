@@ -3,6 +3,7 @@ package graft.etl
 import java.time.{Instant, ZoneId}
 import java.time.format.DateTimeFormatter
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{GraftBusBridge, SparkContext}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -175,18 +176,25 @@ object Pipeline {
     * system keeps beside them) moves to the same relative path under
     * `path`, replacing the previous `_SUCCESS`. The staging directory is
     * deleted in every case, a failed write included, and a `path` this
-    * call created is removed again when nothing was published.
+    * call created is removed again when nothing was published. A failed
+    * write first waits for its own tasks to stop ([[awaitTasks]]).
     */
   private[etl] def stageThenPublish(df: DataFrame, path: String)(
       write: (DataFrame, String) => Unit): Unit = {
+    val sc = df.sparkSession.sparkContext
     val dest = new Path(path)
-    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = dest.getFileSystem(sc.hadoopConfiguration)
     val existed = fs.exists(dest)
-    val staging = new Path(dest, StagingPrefix + java.util.UUID.randomUUID)
+    val name = StagingPrefix + java.util.UUID.randomUUID
+    val staging = new Path(dest, name)
     val obs = Observation()
     var published = false
     try {
-      write(df.observe(obs, count(lit(1)).as("rows")), staging.toString)
+      // the staging name tags the write's jobs, so a failure can find them
+      sc.addJobTag(name)
+      try write(df.observe(obs, count(lit(1)).as("rows")), staging.toString)
+      catch { case t: Throwable => awaitTasks(sc, name); throw t }
+      finally sc.removeJobTag(name)
       if (obs.get("rows").asInstanceOf[Long] > 0L) {
         moveTree(fs, staging, dest)
         published = true
@@ -196,6 +204,24 @@ object Pipeline {
       if (!existed && !published && fs.exists(dest) && fs.listStatus(dest).isEmpty)
         fs.delete(dest, false)
     }
+  }
+
+  /** Blocks until no task of a job tagged `tag` is running, for at most
+    * 30 s. A job fails as soon as one of its tasks does; its other tasks
+    * are only flagged as killed, and one that is opening its output can
+    * still create directories under the staging path after the failure
+    * reaches the caller. The listener bus is drained first, so the status
+    * tracker has seen every job, stage and task event posted so far (a
+    * failed stage is recorded with the tasks still running in it); a
+    * drain that times out leaves the poll to the bound.
+    */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    Try(GraftBusBridge.drain(sc))
+    val t = sc.statusTracker
+    def running = t.getJobIdsForTag(tag).exists(j => t.getJobInfo(j).exists(
+      _.stageIds.exists(s => t.getStageInfo(s).exists(_.numActiveTasks > 0))))
+    val deadline = System.nanoTime + 30L * 1000000000L
+    while (running && System.nanoTime < deadline) Thread.sleep(10)
   }
 
   /** Moves every file under `from` to its relative path under `to`. On a
@@ -410,17 +436,17 @@ object Pipeline {
     }
   }
 
-  /** Multi-table runner with per-table config gate and selectable error
-    * policy: isolate-and-continue (sync.py:169-179) or fail-fast
-    * (ingest.py:829-832).
+  /** Multi-table runner with a per-table config gate: returns every
+    * enabled table's own outcome, in table order (the isolate-and-continue
+    * policy of sync.py:169-179); [[settle]] adds the fail-fast policy
+    * (ingest.py:829-832) once the caller has reported each table.
     *
     * The enabled tables run concurrently ([[perTable]]: at most
-    * min(tables, available processors) at a time). Fail-fast therefore
-    * lets every table settle, then rethrows the first failure in table
-    * order with the other failures attached as suppressed exceptions. A
-    * failed table never advances its watermark. Unlike the reference, the
-    * tables after a failed one still load: they take exactly the rows the
-    * next run would have taken, so delivery stays at-least-once.
+    * min(tables, available processors) at a time), and every table
+    * settles before this returns. A failed table never advances its
+    * watermark. Unlike the reference, the tables after a failed one still
+    * load: they take exactly the rows the next run would have taken, so
+    * delivery stays at-least-once.
     */
   def run(
       spark: SparkSession,
@@ -430,17 +456,21 @@ object Pipeline {
       sink: String => Sink,
       mode: WriteMode,
       watermarks: WatermarkStore,
-      historicalLoad: Boolean = false,
-      failFast: Boolean = true): Seq[(String, Try[Report])] = {
+      historicalLoad: Boolean = false): Seq[(String, Try[Report])] = {
     val on = tables.filter(t => enabled.getOrElse(t, false))
-    val out = on.zip(perTable(on)(t =>
+    on.zip(perTable(on)(t =>
       processTable(spark, t, source(t), sink(t), mode, watermarks, historicalLoad)))
-    if (failFast) out.collect { case (_, Failure(e)) => e } match {
+  }
+
+  /** Fail-fast over settled outcomes: the reports when every table
+    * loaded, else the first failure in table order, thrown with the
+    * other failures attached as suppressed exceptions.
+    */
+  def settle(out: Seq[(String, Try[Report])]): Seq[(String, Report)] =
+    out.collect { case (_, Failure(e)) => e } match {
       case first +: rest =>
         rest.filterNot(_ eq first).foreach(first.addSuppressed)
         throw first
-      case _ =>
+      case _ => out.collect { case (t, Success(r)) => (t, r) }
     }
-    out
-  }
 }

@@ -1,6 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, GraftStreamBridge}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed graph connectivity for dedup clustering.
@@ -31,24 +34,20 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Pin a STATIC relation of an iterative operator in memory,
-    * pre-partitioned by the key its per-round join uses, and
-    * materialize it. Unpersist is the caller's job when the relation
-    * does not back the returned frame (otherwise the ContextCleaner +
-    * the session's 1min periodic GC reclaim it, the standing
-    * checkpoint-block contract).
-    */
-  private[ext] def pinByKey(df: DataFrame, keys: Column*): DataFrame =
-    pinByKeyTracked(df, keys: _*)._1
-
-  /** [[pinByKey]] + the persistent-RDD ids for callers that free the
-    * pin explicitly once the rounds are done (the CC/kCore shape).
+  /** Pin a STATIC relation of an iterative operator: materialized,
+    * hash-partitioned on `keys` and sorted by them within each
+    * partition, with that layout DECLARED on the returned frame (see
+    * [[declare]]), so a per-round join or aggregate keyed the same way
+    * reads the pin with no Exchange and no Sort. The pin is its frame:
+    * [[free]] it when it does not back the returned frame (otherwise
+    * the ContextCleaner + the session's 1min periodic GC reclaim it,
+    * the standing checkpoint-block contract).
     *
-    * Two passes. Pass 1 materializes the relation once under normal
-    * AQE planning and reads its real stored size; pass 2 re-keys the
-    * BLOCKS (not the lineage) into `clamp(bytes/advisory, 1,
-    * shuffle.partitions)` hash partitions, SORTED by the key, via
-    * [[pinEagerTracked]]. Partition-count rationale (guide §2): the
+    * Two passes, both planned as the session plans everything else.
+    * Pass 1 materializes the relation once and reads its real stored
+    * size; pass 2 re-keys the BLOCKS (not the lineage) into
+    * `clamp(bytes/advisory, 1, shuffle.partitions)` hash partitions,
+    * SORTED by the key. Partition-count rationale (guide §2): the
     * co-partitioned per-round join must match the pin's partitioning
     * exactly, so AQE can never coalesce those round stages — a pin at
     * raw shuffle.partitions forced 3×32-task stages per round over an
@@ -57,19 +56,25 @@ object Graph {
     * measured size — one partition per advisoryPartitionSizeInBytes,
     * the same target AQE coalesces to — keeps rounds at the task
     * count the data warrants at ANY scale, capped at
-    * shuffle.partitions (the per-deploy knob). The SORT is captured
-    * into the checkpoint's outputOrdering, so per-round sort-merge
-    * joins read the pinned side with no Exchange AND no Sort (the
-    * bucketed+sorted-table shape); partitioning alone measured 20-50%
-    * slower (q205/q153) — it traded the round's Exchange for an
-    * edge-sized per-round SortExec.
+    * shuffle.partitions (the per-deploy knob). The declared SORT lets
+    * per-round sort-merge joins read the pinned side with no Sort
+    * either (the bucketed+sorted-table shape); partitioning alone
+    * measured 20-50% slower (q205/q153) — it traded the round's
+    * Exchange for an edge-sized per-round SortExec.
+    *
+    * Pass 2 is a LAZY checkpoint: adaptive planning runs its shuffle
+    * stage at the call, so the flat pass-1 blocks are consumed (and
+    * freed) here, while the sorted blocks materialize inside the first
+    * job that reads the pin — one Spark job for the pass, as an eager
+    * checkpoint of a shuffle-free plan would be.
     */
-  private[ext] def pinByKeyTracked(df: DataFrame, keys: Column*): (DataFrame, Set[Int]) = {
+  private[ext] def pinByKey(df: DataFrame, keys: String*): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val (flat, flatIds) = checkpointTracked(df, eager = true)
+    val flat = df.localCheckpoint(eager = true)
+    val flatId = root(flat).rdd.id
     val bytes = sc.getRDDStorageInfo
-      .filter(i => flatIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
+      .filter(_.id == flatId).map(i => i.memSize + i.diskSize).sum
     // AQE's own parallelismFirst coalescing policy, applied to the pin:
     // partition target = bytes/parallelism clamped to [minPartitionSize,
     // advisorySize], count capped at shuffle.partitions — big relations
@@ -81,9 +86,73 @@ object Graph {
     val target = math.max(minSize,
       math.min(advisory, bytes / math.max(1, sc.defaultParallelism)))
     val n = math.max(1L, math.min(maxN.toLong, (bytes + target - 1) / target)).toInt
+    val k = keys.map(col)
     // the sized pin replaces the flat one, which goes on every exit path
-    try pinEagerTracked(flat.repartition(n, keys: _*).sortWithinPartitions(keys: _*))
-    finally freeIds(sc, flatIds)
+    try declare(flat.repartition(n, k: _*).sortWithinPartitions(k: _*).localCheckpoint(eager = false),
+      keys, n, sorted = true)
+    finally free(flat)
+  }
+
+  /** The static relations of [[pageRank]] and [[personalizedPageRank]]:
+    * the distinct edges pinned on `__src`, and their out-degrees. The
+    * degree aggregate reads the pinned edges with no Exchange, so its
+    * blocks keep the edges' partitions; it is pinned with that layout
+    * declared (unsorted: a hash aggregate emits no order) and feeds two
+    * joins per round plus the rank init. Both back the caller's result.
+    */
+  private def pinEdgesAndDegrees(
+      edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
+    val e = pinByKey(
+      edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct(), "__src")
+    try (e, declare(e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")).localCheckpoint(),
+      Seq("__src"), root(e).rdd.getNumPartitions, sorted = false))
+    catch { case t: Throwable => free(e); throw t }
+  }
+
+  /** Re-root a checkpointed `pin` under the layout of the plan that
+    * built it: `keys` hash-partitioned into `n` partitions
+    * (`SinglePartition` when n = 1, as `repartition(1, …)` plans it),
+    * plus ascending key order when `sorted`. Adaptive execution hands a
+    * checkpoint an opaque partitioning, so the layout is stated here
+    * instead of read back from the executed plan, and no session conf
+    * is touched. A declaration the blocks do not honour would let a
+    * keyed join pair rows from different partitions, so the RDD's
+    * partition count must equal `n`; a mismatch frees the pin and
+    * fails. The one exception is an EMPTY pin: adaptive planning
+    * replaces an empty relation by a zero-partition scan, which has no
+    * layout to declare, so it is returned as it is.
+    */
+  private[ext] def declare(pin: DataFrame, keys: Seq[String], n: Int, sorted: Boolean): DataFrame = {
+    val l = root(pin)
+    val got = l.rdd.getNumPartitions
+    if (got == 0) pin
+    else if (got != n) {
+      free(pin)
+      throw new IllegalStateException(
+        s"pin on ${keys.mkString(", ")}: declared $n partitions, materialized $got")
+    } else {
+      val attrs = keys.map(k => l.output.find(_.name == k).get)
+      val partitioning = if (n == 1) SinglePartition else HashPartitioning(attrs, n)
+      val ordering = if (sorted) attrs.map(SortOrder(_, Ascending)) else Nil
+      // makeCopy carries the second parameter list over (session, and
+      // the origin plan's statistics that broadcast decisions read)
+      GraftStreamBridge.ofRows(pin.sparkSession, l.makeCopy(Array(
+        l.output, l.rdd, partitioning, ordering, Boolean.box(l.isStreaming), l.stream)))
+    }
+  }
+
+  /** Drop pins' blocks now rather than when a driver GC proves their
+    * RDDs unreachable. A pin is a frame whose logical root is a
+    * checkpoint's LogicalRDD — what `localCheckpoint`, [[pinByKey]] and
+    * [[declare]] return — and its blocks are that root's RDD; any other
+    * frame is refused.
+    */
+  private[ext] def free(pins: DataFrame*): Unit = pins.foreach(root(_).rdd.unpersist(false))
+
+  private def root(pin: DataFrame): LogicalRDD = pin.queryExecution.logical match {
+    case l: LogicalRDD => l
+    case p => throw new IllegalArgumentException(
+      s"not a pin: the frame's logical root is ${p.nodeName}, not a LogicalRDD")
   }
 
   /** A byte-size session conf, parsed as Spark parses it: a leading `-`
@@ -96,35 +165,6 @@ object Graph {
     if (v.startsWith("-")) -b else b
   }
 
-  /** EAGER localCheckpoint with AQE disabled while the pin's own plan
-    * is built and executed, so the LogicalRDD captures the plan's real
-    * output partitioning (`hashpartitioning(key, shuffle.partitions)`)
-    * and every downstream join keyed the same way skips its Exchange.
-    * Under AQE the executed plan is an AdaptiveSparkPlanExec, which
-    * reports UnknownPartitioning(0) into the checkpoint — round 17
-    * shipped that shape and its after-plans still re-exchanged the
-    * pinned relation every round (measured in [[graft.PinProbe]]:
-    * variant A re-exchanges, variant B does not). AQE is restored in a
-    * `finally`; the whole pin (a session-global conf flip + one Spark
-    * job) runs under [[checkpointLock]], which serializes graft
-    * checkpointers — concurrent NON-graft queries on the same session
-    * would plan AQE-less during the window (the bench and oracle
-    * drivers are single-threaded; callers sharing a session with alien
-    * query threads should serialize externally, the standing caveat).
-    * Never persist() here: the CacheManager matches cached plans by
-    * equality ACROSS invocations, which would let a later run of the
-    * same query skip recomputing the inputs entirely.
-    */
-  private[ext] def pinEagerTracked(df: DataFrame): (DataFrame, Set[Int]) =
-    checkpointLock.synchronized {
-      val spark = df.sparkSession
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        checkpointTracked(df, eager = true)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-
   /** Connected components of an undirected graph given as an edge list.
     * Returns one row per node that appears in any edge: (id, comp) where
     * comp is the smallest node id in the component. Self-loops are
@@ -135,45 +175,30 @@ object Graph {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 25): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
     // localCheckpoint blocks are freed by the ContextCleaner only
     // after a DRIVER GC proves the RDD unreachable — on a big heap that
     // can be "never", so each superseded round's blocks are unpersisted
     // EXPLICITLY the moment the next round is materialized. The
-    // checkpoint is LAZY (eager = false): persist registration happens
-    // synchronously at the call — that's what the id diff captures —
-    // while the blocks themselves materialize at the round's count()
-    // action, outside the lock. (The EAGER pins in [[pinEagerTracked]]
-    // DO run their one materialization job under the lock: it also
-    // brackets the session-wide AQE flip, so concurrent graft
-    // checkpointers serialize across that job.) CAVEAT (unfixable at
-    // the public-API level — RDD ids carry no ownership): a NON-graft
-    // thread calling localCheckpoint on the same SparkContext inside
-    // the (tiny) lock window would have its id mis-captured, and
-    // unpersisting a checkpointed RDD is unrecoverable (the blocks ARE
-    // the data once lineage is truncated). Callers sharing a session
-    // with alien checkpointing threads should serialize externally.
-    def checkpointed(df: DataFrame): (DataFrame, Set[Int]) = checkpointTracked(df)
-    def free(ids: Set[Int]): Unit = freeIds(sc, ids)
-
+    // checkpoints are LAZY: the blocks materialize at the round's
+    // count() action.
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
     // undirected: keep both orientations so one join propagates both
     // ways; pinned CO-PARTITIONED on the round join key so each round
     // exchanges only the node-sized label state, never the edges
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = pinByKey(
       e.union(e.select(col("d").as("s"), col("s").as("d")))
         .filter(col("s") =!= col("d"))
-        .distinct(), col("s"))
+        .distinct(), "s")
     // Initial labels fold the first relax in: comp = min(id, neighbors).
     // The plain id-labeled start would spend a whole round reaching this.
-    var (lbl, lblIds) = checkpointed(
-      bidir.groupBy(col("s").as("id"))
-        .agg(least(min(col("d")), col("s")).as("comp")))
-    // every label-generation checkpoint id currently persisted — ids
-    // leave this set ONLY via free(), so a mid-round failure (e.g. the
-    // count() aborting after the new round's checkpoint registered)
-    // still frees everything in the finally
-    var liveIds = lblIds
+    var lbl = bidir.groupBy(col("s").as("id"))
+      .agg(least(min(col("d")), col("s")).as("comp"))
+      .localCheckpoint(false)
+    // every label generation currently pinned — pins leave this set
+    // ONLY via free(), so a mid-round failure (e.g. the count()
+    // aborting after the new round's checkpoint registered) still
+    // frees everything in the finally
+    var live = Set(lbl)
     var iter = 0
     var changed = 1L
     var converged = false
@@ -189,30 +214,29 @@ object Graph {
           .union(offers)
           .groupBy("id").agg(min("comp").as("comp"), max("__old").as("__old"))
         // every comp value is itself a node id, so the jump join is total
-        val (jumped, jumpedIds) = checkpointed( // truncate lineage: consumed twice
-          relaxed
-            .join(
-              relaxed.select(col("id").as("comp"), col("comp").as("__cc")),
-              Seq("comp"))
-            .select(col("id"), col("__cc").as("comp"), col("__old")))
-        liveIds ++= jumpedIds
+        val jumped = relaxed // truncate lineage: consumed twice
+          .join(
+            relaxed.select(col("id").as("comp"), col("comp").as("__cc")),
+            Seq("comp"))
+          .select(col("id"), col("__cc").as("comp"), col("__old"))
+          .localCheckpoint(false)
+        live += jumped
         changed = jumped.filter(col("comp") =!= col("__old")).count()
-        free(lblIds) // previous round fully consumed — drop its blocks now
-        liveIds --= lblIds
-        lbl = jumped.select("id", "comp")
-        lblIds = jumpedIds
+        free(lbl) // previous round fully consumed — drop its blocks now
+        live -= lbl
+        lbl = jumped
         iter += 1
       }
       require(changed == 0,
         s"connectedComponents: no fixpoint after $maxIter rounds (graph diameter > 2^$maxIter?)")
       converged = true
-      lbl
+      lbl.select("id", "comp")
     } finally {
       // explicit-free invariant holds on error paths too: the edge
       // relation is always done with; label-generation blocks are kept
       // only when they back the returned fixpoint
-      free(bidirIds)
-      if (!converged) free(liveIds)
+      free(bidir)
+      if (!converged) free(live.toSeq: _*)
     }
   }
 
@@ -267,38 +291,29 @@ object Graph {
     require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L &&
       rankUnit <= 1000000000000L,
       s"pageRank: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
-    val sc = edges.sparkSession.sparkContext
     // static relations pinned CO-PARTITIONED on the per-round join key
-    // (eager AQE-less checkpoints — see [[pinEagerTracked]]): each of
-    // the `iters` rounds then exchanges only the node-sized rank
-    // state, never the edge relation (guide-§2.4 shape — the edge
-    // Exchange used to run every round). deg is derived from the pinned
-    // edges (already clustered on __src, so its groupBy needs no
-    // exchange) and pinned itself: it feeds two joins per round plus
-    // the rank init, and the pin carries hashpartitioning(__src) into
-    // all of them.
-    val e = pinByKey(
-      edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-        .distinct(), col("__src"))
-    val deg = pinEagerTracked(
-      e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")))._1
-    val n = deg.count()
-    require(n > 0, "pageRank: no edges")
-    require(rankUnit / n >= 100L,
-      s"pageRank: rankUnit=$rankUnit gives only ${rankUnit / n} units of rank per node " +
-        s"for $n nodes (need >= 100, or floor-truncation silently decays every rank " +
-        "toward 0); raise rankUnit (e.g. 10^9 for graphs past ~10^4 nodes)")
-    var r = deg.select(col("__src").as("node"), lit(rankUnit / n).as("rank_ppm"))
-    val baseR = (rankUnit / 1000000L * (1000000L - dampPpm)) / n
+    // (see [[pinEdgesAndDegrees]]): each of the `iters` rounds then
+    // exchanges only the node-sized rank state, never the edge relation
+    // (guide-§2.4 shape — the edge Exchange used to run every round)
+    val (e, deg) = pinEdgesAndDegrees(edges, srcCol, dstCol)
     // Each round adds 3 joins to the rank lineage; at iters=50 an
     // uncheckpointed chain would nest a 150-join analyzer tree and a
     // task retry would recompute the whole history. Cadence checkpoint:
     // every 5 rounds truncate the lineage (materialized by an explicit
     // count) and free the superseded round's blocks — the same
     // explicit-free invariant as connectedComponents. The final round's
-    // blocks are kept: they back the returned (lazy) relation.
-    var ckIds = Set.empty[Int]
+    // blocks are kept: they back the returned (lazy) relation, as do e
+    // and deg, so those are freed only when the call throws.
+    var cks = Vector.empty[DataFrame] // live cadence checkpoints, oldest first
     try {
+      val n = deg.count()
+      require(n > 0, "pageRank: no edges")
+      require(rankUnit / n >= 100L,
+        s"pageRank: rankUnit=$rankUnit gives only ${rankUnit / n} units of rank per node " +
+          s"for $n nodes (need >= 100, or floor-truncation silently decays every rank " +
+          "toward 0); raise rankUnit (e.g. 10^9 for graphs past ~10^4 nodes)")
+      var r = deg.select(col("__src").as("node"), lit(rankUnit / n).as("rank_ppm"))
+      val baseR = (rankUnit / 1000000L * (1000000L - dampPpm)) / n
       for (i <- 1 to iters) {
         val inflow = e
           .join(r.withColumnRenamed("node", "__src"), "__src")
@@ -312,16 +327,15 @@ object Graph {
             (lit(baseR) + expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L"))
               .as("rank_ppm"))
         if (i % 5 == 0 && i < iters) {
-          val (ck, ids) = checkpointTracked(r)
-          ck.count()
-          freeIds(sc, ckIds)
-          ckIds = ids
-          r = ck
+          cks :+= r.localCheckpoint(false)
+          r = cks.last
+          r.count()
+          if (cks.size > 1) { free(cks.head); cks = cks.tail }
         }
       }
       r
     } catch {
-      case t: Throwable => freeIds(sc, ckIds); throw t
+      case t: Throwable => free(Seq(e, deg) ++ cks: _*); throw t
     }
   }
 
@@ -376,19 +390,18 @@ object Graph {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val bcastBytes = confBytes(spark, "spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val (e, eIds) = checkpointTracked(
-      edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct())
-    var live = Vector.empty[Set[Int]] // half-round checkpoints, oldest first
+    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct()
+      .localCheckpoint(false)
+    var live = Vector.empty[DataFrame] // half-round checkpoints, oldest first
     // eager-checkpoint a raw (node, __r) aggregate; returns it ℓ∞-
     // normalized to ppm as `as`, and its row count
     def half(raw: DataFrame, as: String): (DataFrame, Long) = {
       val obs = new org.apache.spark.sql.Observation()
-      val (ck, ids) = checkpointTracked(
-        raw.observe(obs, max(col("__r")).as("mx"), count(lit(1)).as("n")), eager = true)
-      live :+= ids
-      if (live.size > 2) { freeIds(sc, live.head); live = live.tail }
+      val ck = raw.observe(obs, max(col("__r")).as("mx"), count(lit(1)).as("n"))
+        .localCheckpoint(eager = true)
+      live :+= ck
+      if (live.size > 2) { free(live.head); live = live.tail }
       val m = obs.get
       val mx = Option(m("mx")).fold("NULL")(_.asInstanceOf[java.math.BigDecimal].toPlainString)
       (ck.select(col("node"),
@@ -424,8 +437,8 @@ object Graph {
           hub.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
     } finally {
       // the returned frame reads only the last two half-rounds' blocks
-      freeIds(sc, eIds)
-      if (!ok) live.foreach(freeIds(sc, _))
+      free(e)
+      if (!ok) free(live: _*)
     }
   }
 
@@ -462,11 +475,10 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"stationaryDistribution: iters in [1,50], got $iters")
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val sc = trans.sparkSession.sparkContext
-    // ids leave these sets only via freeIds: `pins` never back the
+    // pins leave these sets only via free: `pins` never back the
     // result, `kept` (states + the live round) do unless a call throws
-    var pins = Set.empty[Int]
-    var kept = Set.empty[Int]
+    var pins = Set.empty[DataFrame]
+    var kept = Set.empty[DataFrame]
     var ok = false
     try {
       // the projected transition relation feeds THREE chains before the
@@ -475,19 +487,18 @@ object Graph {
       // upstream derivation (for q261: a window over the events corpus)
       // re-executed per consumer; pin it once (the q37 multi-consumer
       // shape), freed with the transition pin after the rounds
-      val (t0, t0Ids) = checkpointTracked(
-        trans.select(col(fromCol).cast("string").as("__f"),
-          col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p")))
-      pins ++= t0Ids
+      val t0 = trans.select(col(fromCol).cast("string").as("__f"),
+          col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p"))
+        .localCheckpoint(false)
+      pins += t0
       // states = every from-state; transitions gated to known states;
       // a state whose every outgoing edge leaves the chain (dangling
       // after the gate) gets an implicit self-loop so its mass persists
       // instead of annihilating the normalizer — the pageRank dangling-
       // node treatment. Blocks stay live for the returned lazy relation
       // (the pageRank contract).
-      val (states, statesIds) = checkpointTracked(
-        t0.select(col("__f").as("state")).distinct())
-      kept ++= statesIds
+      val states = t0.select(col("__f").as("state")).distinct().localCheckpoint(false)
+      kept += states
       val gated = t0.join(states.select(col("state").as("__t")), Seq("__t"))
       val dangling = states
         .join(gated.select(col("__f").as("state")).distinct(), Seq("state"), "left_anti")
@@ -495,25 +506,25 @@ object Graph {
           lit(1000000000L).as("__p"))
       // pinned on the per-round join key: rounds read co-partitioned
       // transition blocks, shuffle only state-sized rows
-      val (e, eIds) = pinByKeyTracked(gated.unionByName(dangling), col("__f"))
-      pins ++= eIds
+      val e = pinByKey(gated.unionByName(dangling), "__f")
+      pins += e
       require(e.count() > 0, "stationaryDistribution: no transitions between known states")
       var pi = states.withColumn("pi_ppm", lit(1000000L))
-      var prevIds = Set.empty[Int]
+      var prev = Option.empty[DataFrame]
       for (i <- 1 to iters) {
-        val (raw, ids) = checkpointTracked(
-          e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
-            .groupBy(col("__t").as("state"))
-            .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
-              .as("__r")))
-        kept ++= ids
+        val raw = e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
+          .groupBy(col("__t").as("state"))
+          .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
+            .as("__r"))
+          .localCheckpoint(false)
+        kept += raw
         raw.count()
         pi = raw
           .crossJoin(broadcast(raw.agg(sum(col("__r").cast(dec)).as("__s"))))
           .select(col("state"), expr("CAST(__r * 1000000 div __s AS BIGINT)").as("pi_ppm"))
-        freeIds(sc, prevIds)
-        kept --= prevIds
-        prevIds = ids
+        free(prev.toSeq: _*)
+        kept --= prev
+        prev = Some(raw)
       }
       ok = true
       states.join(pi, Seq("state"), "left")
@@ -522,8 +533,8 @@ object Graph {
       // every round is materialized by now on success; the result reads
       // states + the final round's blocks, never the transition pin or
       // the t0 projection
-      freeIds(sc, pins)
-      if (!ok) freeIds(sc, kept)
+      free(pins.toSeq: _*)
+      if (!ok) free(kept.toSeq: _*)
     }
   }
 
@@ -554,10 +565,10 @@ object Graph {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
-    val bidir = checkpointTracked(
-      e.union(e.select(col("d").as("s"), col("s").as("d")))
-        .filter(col("s") =!= col("d"))
-        .distinct())._1
+    val bidir = e.union(e.select(col("d").as("s"), col("s").as("d")))
+      .filter(col("s") =!= col("d"))
+      .distinct()
+      .localCheckpoint(false)
     val deg = bidir.groupBy(col("s").as("node")).agg(count(lit(1)).as("deg"))
     bidir
       .join(deg.select(col("node").as("s"), col("deg").as("__du")), Seq("s"))
@@ -606,9 +617,9 @@ object Graph {
     // two-consumer shape that otherwise replays the scan+distinct+
     // degree-join chain twice and read bimodally in the bench (the
     // q147 pattern). Pin it so consumers replay blocks, not lineage.
-    val kept = checkpointTracked(
-      e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
-        .select(col("__l"), col("__r")))._1
+    val kept = e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
+      .select(col("__l"), col("__r"))
+      .localCheckpoint(false)
     kept.select(col("__l"), col("__r").as("a"))
       .join(kept.select(col("__l"), col("__r").as("b")), Seq("__l"))
       .filter(col("a") < col("b"))
@@ -757,17 +768,16 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30,
       s"bfsDistances: maxHops in [1, 30] required, got $maxHops")
-    val sc = edges.sparkSession.sparkContext
     val e = edges.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).as("u"), col(bCol).as("v"))
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = pinByKey(
       e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), col("u"))
-    var (frontier, frontierIds) = checkpointTracked(
-      seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull).distinct())
-    var (dist, distIds) = checkpointTracked(
-      frontier.select(col("id"), lit(0).as("dist")))
-    var liveIds = bidirIds ++ frontierIds ++ distIds
+        .filter(col("u") =!= col("v")).distinct(), "u")
+    var frontier = seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull).distinct()
+      .localCheckpoint(false)
+    var dist = frontier.select(col("id"), lit(0).as("dist")).localCheckpoint(false)
+    var live = Set(bidir, frontier, dist)
+    var returned = false
     try {
       var h = 1
       var frontierSize = 1L
@@ -778,33 +788,33 @@ object Graph {
       // round (round i−2's state drops after round i's count proves
       // round i−1's dist materialized); the final round's dist gets
       // one settling count after the loop, before its inputs free.
-      var staleIds = Set.empty[Int]
+      var stale = Set.empty[DataFrame]
       while (h <= maxHops && frontierSize > 0) {
-        val (next, nextIds) = checkpointTracked(
-          frontier.join(bidir, frontier("id") === bidir("u"))
-            .select(col("v").as("id")).distinct()
-            .join(dist, Seq("id"), "left_anti"))
-        liveIds ++= nextIds
+        val next = frontier.join(bidir, frontier("id") === bidir("u"))
+          .select(col("v").as("id")).distinct()
+          .join(dist, Seq("id"), "left_anti")
+          .localCheckpoint(false)
+        live += next
         frontierSize = next.count() // materializes the round (and dist)
-        freeIds(sc, staleIds)
-        liveIds --= staleIds
-        val (nd, ndIds) = checkpointTracked(
-          dist.unionAll(next.select(col("id"), lit(h).as("dist"))))
-        liveIds ++= ndIds
-        staleIds = frontierIds ++ distIds
-        frontier = next; frontierIds = nextIds
-        dist = nd; distIds = ndIds
+        free(stale.toSeq: _*)
+        live --= stale
+        val nd = dist.unionAll(next.select(col("id"), lit(h).as("dist"))).localCheckpoint(false)
+        live += nd
+        stale = Set(frontier, dist)
+        frontier = next
+        dist = nd
         h += 1
       }
       dist.count() // settle the final lazy union before its inputs free
-      freeIds(sc, staleIds)
-      liveIds --= staleIds
+      free(stale.toSeq: _*)
+      live --= stale
+      returned = true
       dist
     } finally {
-      // the returned frame's blocks (distIds) stay live; everything
-      // superseded or auxiliary is freed here even on abort — except
-      // bidir, which the caller's action no longer needs either
-      freeIds(sc, liveIds -- distIds)
+      // the returned frame's blocks (dist) stay live; everything
+      // superseded or auxiliary is freed here — and on an abort no
+      // frame escapes, so dist goes too
+      free((if (returned) live - dist else live).toSeq: _*)
     }
   }
 
@@ -838,9 +848,9 @@ object Graph {
     val deg = e.groupBy(col("__l")).agg(count(lit(1)).as("__d"))
     // `kept` has THREE consumers (both self-join sides + the per-item
     // counts) — pin it once instead of replaying the chain three times.
-    val kept = checkpointTracked(
-      e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
-        .select(col("__l"), col("__r")))._1
+    val kept = e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
+      .select(col("__l"), col("__r"))
+      .localCheckpoint(false)
     val pairs = kept.select(col("__l"), col("__r").as("a"))
       .join(kept.select(col("__l"), col("__r").as("b")), Seq("__l"))
       .filter(col("a") < col("b"))
@@ -880,8 +890,10 @@ object Graph {
     * removes at least one node per non-stable round, but in practice
     * collapses in a handful of rounds: each round removes the ENTIRE
     * current shell, not one node. The only driver-side value is the
-    * per-round surviving-node count. Self-loops are ignored; edges are
-    * undirected; nodes with no edges are never in any core (k >= 1).
+    * per-round surviving-node count. Every pin is freed on every exit
+    * path, a failed or cancelled round included. Self-loops are
+    * ignored; edges are undirected; nodes with no edges are never in
+    * any core (k >= 1).
     */
   def kCore(
       edges: DataFrame,
@@ -891,38 +903,42 @@ object Graph {
       maxRounds: Int = 20): DataFrame = {
     require(k >= 1, s"kCore: k >= 1 required, got $k")
     require(maxRounds >= 1, s"kCore: maxRounds >= 1 required, got $maxRounds")
-    val sc = edges.sparkSession.sparkContext
     val e = edges
       .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-    val (bidir, bidirIds) = pinByKeyTracked(
-      e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct(), col("u"))
-    var (active, activeIds) = checkpointTracked(bidir.select(col("u").as("node")).distinct())
-    var n = active.count()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxRounds && !stable) {
-      val (next, nextIds) = checkpointTracked(
-        bidir
+    val bidir = pinByKey(
+      e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct(), "u")
+    var active = bidir.select(col("u").as("node")).distinct().localCheckpoint(false)
+    // the result is its own eager checkpoint, so every pin this call
+    // registers — held here until freed — goes on every exit path
+    var live = Set(bidir, active)
+    try {
+      var n = active.count()
+      var rounds = 0
+      var stable = false
+      while (rounds < maxRounds && !stable) {
+        val next = bidir
           .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
           .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
           .groupBy(col("u").as("node")).agg(count(lit(1)).as("__d"))
           .filter(col("__d") >= k)
-          .select(col("node")))
-      val m = next.count()
-      freeIds(sc, activeIds)
-      active = next; activeIds = nextIds
-      stable = m == n
-      n = m
-      rounds += 1
-    }
-    val out = bidir
-      .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
-      .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
-      .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
-    val materialized = out.localCheckpoint()
-    freeIds(sc, activeIds ++ bidirIds)
-    materialized
+          .select(col("node"))
+          .localCheckpoint(false)
+        live += next
+        val m = next.count()
+        free(active)
+        live -= active
+        active = next
+        stable = m == n
+        n = m
+        rounds += 1
+      }
+      bidir
+        .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
+        .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
+        .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
+        .localCheckpoint()
+    } finally free(live.toSeq: _*)
   }
 
   /** Synchronous label-propagation community detection (Raghavan,
@@ -949,16 +965,15 @@ object Graph {
       rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 64, s"labelPropagation: 1 <= rounds <= 64, got $rounds")
-    val sc = edges.sparkSession.sparkContext
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
     // pinned on the round join key (the CC co-partition shape)
-    val (bidir, bidirIds) = pinByKeyTracked(
+    val bidir = pinByKey(
       e.union(e.select(col("d").as("s"), col("s").as("d")))
         .filter(col("s") =!= col("d"))
-        .distinct(), col("d"))
-    var (lbl, lblIds) = checkpointTracked(
-      bidir.select(col("s").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl")))
+        .distinct(), "d")
+    var lbl = bidir.select(col("s").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl"))
+      .localCheckpoint(false)
     try {
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
       for (_ <- 1 to rounds) {
@@ -970,14 +985,13 @@ object Graph {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
           .select(col("id"), col("lbl"))
-        val (ck, ids) = checkpointTracked(next)
-        ck.count() // materialize before freeing the round it reads
-        freeIds(sc, lblIds)
-        lbl = ck
-        lblIds = ids
+          .localCheckpoint(false)
+        next.count() // materialize before freeing the round it reads
+        free(lbl)
+        lbl = next
       }
       lbl.select(col("id").as("node"), col("lbl").as("community"))
-    } finally freeIds(sc, bidirIds)
+    } finally free(bidir)
   }
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala WWW'02: the
@@ -1013,29 +1027,24 @@ object Graph {
     require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L &&
       rankUnit <= 1000000000000L,
       s"personalizedPageRank: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
-    val sc = edges.sparkSession.sparkContext
     // co-partitioned static relations — the pageRank pin shape
-    val e = pinByKey(
-      edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-        .distinct(), col("__src"))
-    val deg = pinEagerTracked(
-      e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")))._1
-    val sd = seeds.select(col(seedCol).as("__src")).distinct()
-      .join(deg.select(col("__src")), Seq("__src"), "left_semi")
-    val nSeeds = sd.count()
-    require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
-    require(rankUnit / nSeeds >= 100L,
-      s"personalizedPageRank: rankUnit=$rankUnit gives only ${rankUnit / nSeeds} units " +
-        s"per seed for $nSeeds seeds (need >= 100); raise rankUnit")
-    val seedMark = broadcast(sd.select(col("__src").as("node"), lit(1L).as("__seed")))
-    val baseS = (rankUnit / 1000000L * (1000000L - dampPpm)) / nSeeds
-    var r = deg.select(col("__src").as("node"))
-      .join(seedMark, Seq("node"), "left")
-      .select(col("node"),
-        when(col("__seed").isNotNull, lit(rankUnit / nSeeds)).otherwise(lit(0L))
-          .as("rank_ppm"))
-    var ckIds = Set.empty[Int]
+    val (e, deg) = pinEdgesAndDegrees(edges, srcCol, dstCol)
+    var cks = Vector.empty[DataFrame] // live cadence checkpoints, oldest first
     try {
+      val sd = seeds.select(col(seedCol).as("__src")).distinct()
+        .join(deg.select(col("__src")), Seq("__src"), "left_semi")
+      val nSeeds = sd.count()
+      require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
+      require(rankUnit / nSeeds >= 100L,
+        s"personalizedPageRank: rankUnit=$rankUnit gives only ${rankUnit / nSeeds} units " +
+          s"per seed for $nSeeds seeds (need >= 100); raise rankUnit")
+      val seedMark = broadcast(sd.select(col("__src").as("node"), lit(1L).as("__seed")))
+      val baseS = (rankUnit / 1000000L * (1000000L - dampPpm)) / nSeeds
+      var r = deg.select(col("__src").as("node"))
+        .join(seedMark, Seq("node"), "left")
+        .select(col("node"),
+          when(col("__seed").isNotNull, lit(rankUnit / nSeeds)).otherwise(lit(0L))
+            .as("rank_ppm"))
       for (i <- 1 to iters) {
         val inflow = e
           .join(r.withColumnRenamed("node", "__src"), "__src")
@@ -1051,16 +1060,15 @@ object Graph {
               expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L"))
               .as("rank_ppm"))
         if (i % 5 == 0 && i < iters) {
-          val (ck, ids) = checkpointTracked(r)
-          ck.count()
-          freeIds(sc, ckIds)
-          ckIds = ids
-          r = ck
+          cks :+= r.localCheckpoint(false)
+          r = cks.last
+          r.count()
+          if (cks.size > 1) { free(cks.head); cks = cks.tail }
         }
       }
       r
     } catch {
-      case t: Throwable => freeIds(sc, ckIds); throw t
+      case t: Throwable => free(Seq(e, deg) ++ cks: _*); throw t
     }
   }
 
@@ -1099,20 +1107,19 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30,
       s"weightedShortestPaths: maxHops in [1, 30] required, got $maxHops")
-    val sc = edges.sparkSession.sparkContext
     val e0 = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull && col(weightCol).isNotNull)
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
         col(weightCol).cast("long").as("w"))
-    val (adj, adjIds) = pinByKeyTracked(
+    val adj = pinByKey(
       e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"), col("w")))
         .filter(col("u") =!= col("v"))
-        .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), col("u"))
-    var (dist, distIds) = checkpointTracked(
-      seeds.select(col(seedCol).cast("long").as("id")).filter(col("id").isNotNull)
-        .distinct().select(col("id"), lit(0L).as("dist")))
-    var (frontier, frontierIds) = checkpointTracked(dist)
-    var liveIds = adjIds ++ distIds ++ frontierIds
+        .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), "u")
+    var dist = seeds.select(col(seedCol).cast("long").as("id")).filter(col("id").isNotNull)
+      .distinct().select(col("id"), lit(0L).as("dist"))
+      .localCheckpoint(false)
+    var frontier = dist.localCheckpoint(false)
+    var live = Set(adj, dist, frontier)
     var returned = false
     try {
       var h = 1
@@ -1120,45 +1127,40 @@ object Graph {
       // one action per round — the bfsDistances lazy-dist discipline
       // (see there): the new dist stays lazy, materialized by the next
       // round's improved.count(); frees defer one round
-      var staleIds = Set.empty[Int]
+      var stale = Set.empty[DataFrame]
       while (h <= maxHops && frontierSize > 0) {
         val relaxed = frontier.join(adj, frontier("id") === adj("u"))
           .select(col("v").as("id"), (col("dist") + col("w")).as("__cand"))
           .groupBy(col("id")).agg(min(col("__cand")).as("__cand"))
-        val (improved, improvedIds) = checkpointTracked(
-          relaxed.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left")
-            .filter(col("__old").isNull || col("__cand") < col("__old"))
-            .select(col("id"), col("__cand").as("dist")))
-        liveIds ++= improvedIds
+        val improved = relaxed.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left")
+          .filter(col("__old").isNull || col("__cand") < col("__old"))
+          .select(col("id"), col("__cand").as("dist"))
+          .localCheckpoint(false)
+        live += improved
         frontierSize = improved.count() // materializes the round (and dist)
-        freeIds(sc, staleIds)
-        liveIds --= staleIds
-        val (nd, ndIds) = checkpointTracked(
-          dist.join(improved.select(col("id")), Seq("id"), "left_anti")
-            .unionAll(improved))
-        liveIds ++= ndIds
-        staleIds = frontierIds ++ distIds
-        frontier = improved; frontierIds = improvedIds
-        dist = nd; distIds = ndIds
+        free(stale.toSeq: _*)
+        live --= stale
+        val nd = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
+          .unionAll(improved)
+          .localCheckpoint(false)
+        live += nd
+        stale = Set(frontier, dist)
+        frontier = improved
+        dist = nd
         h += 1
       }
       dist.count() // settle the final lazy union before its inputs free
-      freeIds(sc, staleIds)
-      liveIds --= staleIds
+      free(stale.toSeq: _*)
+      live --= stale
       returned = true
       dist.select(col("id").as("node"), col("dist"))
     } finally {
       // On success the returned frame's blocks stay live; on an abort
       // no frame escapes, so the current dist checkpoint is freed too
       // (otherwise its blocks leak on the failure path).
-      freeIds(sc, if (returned) liveIds -- distIds else liveIds)
+      free((if (returned) live - dist else live).toSeq: _*)
     }
   }
-
-  /** Serializes the persistent-RDD id diff in [[checkpointTracked]]
-    * across graft threads (see the CAVEAT in [[connectedComponents]]).
-    */
-  private val checkpointLock = new Object
 
   /** Newman modularity of a node partition (Newman & Girvan, PRE'04):
     * per community c, the contribution e_c/m − (d_c/2m)² where e_c is
@@ -1209,28 +1211,4 @@ object Graph {
           "CAST(d_c AS DECIMAL(38,0)) * d_c) * 1000000 div " +
           "(CAST(4 AS DECIMAL(38,0)) * m * m) AS BIGINT)").as("q_ppm"))
   }
-
-  /** localCheckpoint + the persistent-RDD ids it registered, captured
-    * under [[checkpointLock]] so concurrent graft checkpoints don't
-    * mis-attribute each other's ids. Lazy by default: the blocks
-    * materialize at the caller's next action, outside the lock (under
-    * AQE the call itself still runs the plan's shuffle stages). `eager`
-    * runs the materializing job here, under the lock — the only way a
-    * `Dataset.observe` on `df` delivers its metrics with the blocks. A
-    * failing checkpoint frees what it registered before rethrowing.
-    */
-  private[ext] def checkpointTracked(df: DataFrame, eager: Boolean = false): (DataFrame, Set[Int]) =
-    checkpointLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val pre = sc.getPersistentRDDs.keySet
-      def fresh = sc.getPersistentRDDs.keySet.diff(pre).toSet
-      try (df.localCheckpoint(eager), fresh)
-      catch { case t: Throwable => freeIds(sc, fresh); throw t }
-    }
-
-  /** Explicitly drop checkpoint blocks the ContextCleaner would otherwise
-    * hold until a driver GC proves them unreachable.
-    */
-  private[ext] def freeIds(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 }

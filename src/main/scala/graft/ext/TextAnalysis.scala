@@ -719,9 +719,9 @@ object TextAnalysis {
     // run every round's pair-count job single-threaded. Spread it across
     // the cluster once at checkpoint — round-robin is fine, the rounds
     // are pure per-row maps + a global aggregate.
-    var (docs, docsIds) = Graph.checkpointTracked(
-      trainable.select(concat(lit(D), array_join(toks, D + D), lit(D)).as("s"))
-        .repartition(math.min(8, ss.sparkContext.defaultParallelism)))
+    var docs = trainable.select(concat(lit(D), array_join(toks, D + D), lit(D)).as("s"))
+      .repartition(math.min(8, sc.defaultParallelism))
+      .localCheckpoint(false)
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     // One relation-wide job per round, not two: each round's best-pair
@@ -733,7 +733,7 @@ object TextAnalysis {
     // table is the output), so it is not even constructed — together
     // that is R+1 full passes over the training relation instead of
     // 2R+1 for the same merges.
-    var pendingFree = Set.empty[Int]
+    var pendingFree = Option.empty[org.apache.spark.sql.DataFrame]
     try {
       var r = 1
       var exhausted = false
@@ -751,25 +751,24 @@ object TextAnalysis {
           .orderBy(col("n").desc, col("a"), col("b"))
           .limit(1)
           .collect() // materializes the current generation's checkpoint
-        Graph.freeIds(sc, pendingFree) // previous generation fully consumed
-        pendingFree = Set.empty
+        Graph.free(pendingFree.toSeq: _*) // previous generation fully consumed
+        pendingFree = None
         if (best.isEmpty) exhausted = true
         else {
           val a = best.head.getString(0)
           val b = best.head.getString(1)
           merges += ((r.toLong, a, b, a + " " + b, best.head.getLong(2)))
           if (r < rounds) {
-            val (next, nextIds) = Graph.checkpointTracked(docs.select(
+            pendingFree = Some(docs)
+            docs = docs.select(
               replace(col("s"),
-                lit(D + a + D + D + b + D), lit(D + a + " " + b + D)).as("s")))
-            pendingFree = docsIds
-            docs = next
-            docsIds = nextIds
+                lit(D + a + D + D + b + D), lit(D + a + " " + b + D)).as("s"))
+              .localCheckpoint(false)
           }
         }
         r += 1
       }
-    } finally Graph.freeIds(sc, docsIds ++ pendingFree)
+    } finally Graph.free(docs +: pendingFree.toSeq: _*)
     import ss.implicits._
     merges.toSeq.toDF("round", "a", "b", "merged", "n")
   }

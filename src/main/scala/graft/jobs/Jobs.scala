@@ -225,7 +225,9 @@ object SyncJob {
   * (the reference's ingest.py): per-table conform pipeline with
   * append / truncate-then-append / watermark-incremental modes,
   * fail-fast error policy (ingest.py:829-832). The tables load
-  * concurrently; see `Pipeline.run` for the failure order.
+  * concurrently; every settled table prints its line (successes to
+  * stdout, errors to stderr) in table order before `Pipeline.settle`
+  * rethrows the first failure.
   *
   *   --source-dir DIR --sink-dir DIR --watermark-dir DIR
   *   [--tables lead_assignment,lead_xref,lead] [--mode append|delta_insert]
@@ -259,16 +261,17 @@ object IngestJob {
       sink = t => Pipeline.FileSink(s"$dst/$t", fmt),
       mode = mode,
       watermarks = new Pipeline.WatermarkStore(conf.getOrElse("watermark-dir", s"$dst/_watermarks")),
-      historicalLoad = conf.get("historical").contains("true"),
-      failFast = true)
+      historicalLoad = conf.get("historical").contains("true"))
+    // every settled table reports before a failure is rethrown: the
+    // tables that loaded have advanced their watermarks
     out.foreach {
       case (t, Success(r)) =>
         println(s"""{"job":"ingest","table":"$t","rows":${r.rowsWritten},"skipped_empty":${r.skippedEmpty}}""")
       case (t, Failure(e)) =>
-        System.err.println(
+        Console.err.println(
           s"""{"job":"ingest","table":"$t","error":${JobArgs.jsonStr(e.getMessage)}}""")
     }
-    out.collect { case (t, Success(r)) => (t, r) }
+    Pipeline.settle(out)
   }
 
   def main(args: Array[String]): Unit = {

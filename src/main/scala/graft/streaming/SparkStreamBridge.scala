@@ -37,7 +37,8 @@ object GraftStreamBridge {
 
   /** `Dataset.ofRows` is `private[sql]` — the INSERT INTO command needs
     * it to execute the statement's (already-analyzed) source query as
-    * an ordinary DataFrame.
+    * an ordinary DataFrame, and `graft.ext.Graph` to re-root a pin
+    * under its declared layout.
     */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

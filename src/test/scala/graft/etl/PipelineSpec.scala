@@ -225,17 +225,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
               .map(StructField(_, StringType))))
         }
       }
-    def run(failing: Map[String, Exception], wm: Pipeline.WatermarkStore, sinkDir: String,
-        failFast: Boolean = true) =
+    def run(failing: Map[String, Exception], wm: Pipeline.WatermarkStore, sinkDir: String) =
       Pipeline.run(spark, tables, tables.map(_ -> true).toMap, source(failing),
-        t => Pipeline.ParquetSink(s"$sinkDir/$t"), Pipeline.DeltaInsert, wm, failFast = failFast)
+        t => Pipeline.ParquetSink(s"$sinkDir/$t"), Pipeline.DeltaInsert, wm)
     val epoch = Instant.parse("1900-01-01T00:00:00Z")
 
     // the middle table fails: its error surfaces, the other two still load
     val down = new IllegalStateException("lead_xref source is down")
     val wm = new Pipeline.WatermarkStore(tmp())
     val sinkDir = tmp()
-    val e = intercept[IllegalStateException](run(Map("lead_xref" -> down), wm, sinkDir))
+    val e = intercept[IllegalStateException](Pipeline.settle(run(Map("lead_xref" -> down), wm, sinkDir)))
     assert((e eq down) && e.getSuppressed.isEmpty)
     assert(wm.lastRuntime("lead_xref") == epoch)
     assert(!new java.io.File(s"$sinkDir/lead_xref").exists)
@@ -250,13 +249,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two failures: the first in table order is thrown, the other suppressed
     val first = new IllegalStateException("lead_assignment down")
     val last = new IllegalArgumentException("lead down")
-    val e2 = intercept[IllegalStateException](
-      run(Map("lead_assignment" -> first, "lead" -> last), new Pipeline.WatermarkStore(tmp()), tmp()))
+    val e2 = intercept[IllegalStateException](Pipeline.settle(
+      run(Map("lead_assignment" -> first, "lead" -> last), new Pipeline.WatermarkStore(tmp()), tmp())))
     assert((e2 eq first) && e2.getSuppressed.toSeq == Seq(last))
 
     // isolate-and-continue returns every table's own outcome, in order
-    val out = run(Map("lead_xref" -> down), new Pipeline.WatermarkStore(tmp()), tmp(),
-      failFast = false)
+    val out = run(Map("lead_xref" -> down), new Pipeline.WatermarkStore(tmp()), tmp())
     assert(out.map(_._1) == tables)
     assert(out.map(_._2.map(_.rowsWritten)) ==
       Seq(scala.util.Success(1L), scala.util.Failure(down), scala.util.Success(1L)))
@@ -424,6 +422,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one task of four throws after the others may have written
     val bad = good.withColumn("id",
       when(col("id") === 37L, raise_error(lit("boom"))).otherwise(col("id")))
+    // the first of 32 tasks on 4 cores throws: the job fails while other
+    // tasks are still opening their output in the staging directory
+    val early = spark.range(0, 320, 1, 32).selectExpr("id", "cast(id % 3 AS STRING) AS p")
+      .withColumn("id", when(col("id") === 3L, raise_error(lit("boom"))).otherwise(col("id")))
     val sinks: Seq[(String, String => Pipeline.Sink)] = Seq(
       "parquet" -> (d => Pipeline.ParquetSink(d)),
       "orc" -> (d => Pipeline.FileSink(d, "orc")),
@@ -432,10 +434,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = s"$base/$name"
       sinkAt(dir).append(good)
       val before = tree(dir)
-      val e = intercept[Exception](sinkAt(dir).append(bad))
-      assert(e.getMessage.contains("boom") || String.valueOf(e.getCause).contains("boom"), e)
-      assert(tree(dir) == before, name)
-      assert(stagingDirs(dir).isEmpty, name)
+      Seq(bad, early, early, early).foreach { failing =>
+        val e = intercept[Exception](sinkAt(dir).append(failing))
+        assert(e.getMessage.contains("boom") || String.valueOf(e.getCause).contains("boom"), e)
+        // a killed task still running would have laid out its directories by now
+        Thread.sleep(300)
+        assert(tree(dir) == before, name)
+        assert(stagingDirs(dir).isEmpty, name)
+      }
       // a failed write into a target that did not exist leaves no directory
       intercept[Exception](sinkAt(s"$dir-fresh").append(bad))
       assert(!new java.io.File(s"$dir-fresh").exists, name)

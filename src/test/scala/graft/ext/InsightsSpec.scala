@@ -226,6 +226,38 @@ class InsightsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(core == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
+  test("kCore: a round cancelled mid-run leaves no checkpoint blocks registered") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // path 1-…-8 at k = 2 peels its two ends per round: four rounds
+    val path = (1L to 8L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("x", "y")
+    def pinned = sc.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    val group = "kcore-cancel"
+    val floor = sc.emptyRDD[Int].id // kCore's RDDs all get later ids
+    // kCore frees its flat pass-1 edges, then round 1 frees the start
+    // set: the second unpersist of a kCore RDD marks round 2's start,
+    // and every job of the group from then on is cancelled
+    val frees = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        if (e.rddId > floor && frees.incrementAndGet() == 2) sc.cancelJobGroupAndFutureJobs(group)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "kCore cancelled in round 2")
+    try {
+      val e = intercept[Exception](Graph.kCore(path, "x", "y", k = 2).count())
+      assert(e.getMessage.contains("cancel"), e.getMessage)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(frees.get >= 2)
+    assert(pinned.diff(before).isEmpty, "kCore left checkpoint blocks registered")
+    assert(Graph.kCore(path, "x", "y", k = 2).count() == 0) // the session still works
+  }
+
   test("bpePairCounts: hand pairs; short docs skipped; deterministic tie order") {
     import spark.implicits._
     val docs = Seq("a b a b", "b a", "x", "", null).toDF("txt")

@@ -152,6 +152,54 @@ class ZenithSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq.empty[(String, String, Long)].toDF("f", "t", "p"), "f", "t", "p", iters = 2))
     assert(e2.getMessage.contains("no transitions"))
     assert(pinned.diff(before).isEmpty, "stationaryDistribution left checkpoint blocks registered")
+    // pageRank's and personalizedPageRank's edge and degree pins, on
+    // each input their requires reject after pinning
+    val none = Seq.empty[(Long, Long)].toDF("s", "d")
+    val e3 = intercept[IllegalArgumentException](Graph.pageRank(none, "s", "d", iters = 2))
+    assert(e3.getMessage.contains("no edges"))
+    assert(pinned.diff(before).isEmpty, "pageRank (no edges) left checkpoint blocks registered")
+    // 20k nodes at the default ppm unit: 50 rank units per node, < 100
+    val path = spark.range(20000L).select(col("id").as("s"), (col("id") + 1L).as("d"))
+    val e4 = intercept[IllegalArgumentException](Graph.pageRank(path, "s", "d", iters = 2))
+    assert(e4.getMessage.contains("raise rankUnit"))
+    assert(pinned.diff(before).isEmpty, "pageRank (rankUnit) left checkpoint blocks registered")
+    val edges = Seq((1L, 2L), (2L, 1L)).toDF("s", "d")
+    val e5 = intercept[IllegalArgumentException](Graph.personalizedPageRank(
+      edges, "s", "d", Seq(7L).toDF("seed"), "seed", iters = 2))
+    assert(e5.getMessage.contains("no seed appears"))
+    assert(pinned.diff(before).isEmpty,
+      "personalizedPageRank (no seed) left checkpoint blocks registered")
+    val e6 = intercept[IllegalArgumentException](Graph.personalizedPageRank(
+      path, "s", "d", spark.range(20000L).toDF("seed"), "seed", iters = 2))
+    assert(e6.getMessage.contains("raise rankUnit"))
+    assert(pinned.diff(before).isEmpty,
+      "personalizedPageRank (rankUnit) left checkpoint blocks registered")
+  }
+
+  test("a pin declares only the partition count its blocks have; free takes only pins") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def pinned = sc.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    def pin() = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("s", "d")
+      .repartition(3, col("s")).localCheckpoint()
+    val e = intercept[IllegalStateException](Graph.declare(pin(), Seq("s"), 4, sorted = false))
+    assert(e.getMessage.contains("declared 4 partitions, materialized 3"), e.getMessage)
+    assert(pinned.diff(before).isEmpty, "a refused declaration left its pin registered")
+    val ok = Graph.declare(pin(), Seq("s"), 3, sorted = false)
+    ok.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        assert(l.outputPartitioning == HashPartitioning(l.output.take(1), 3))
+        assert(l.outputOrdering.isEmpty)
+      case p => fail(s"declared pin is rooted at ${p.nodeName}")
+    }
+    assert(ok.collect().length == 3)
+    val notPin = intercept[IllegalArgumentException](Graph.free(ok.select("s")))
+    assert(notPin.getMessage.contains("not a pin"), notPin.getMessage)
+    Graph.free(ok)
+    assert(pinned.diff(before).isEmpty, "free left the declared pin registered")
   }
 
   test("mapMrrAtK: hand-folded AP terms, no-hit and beyond-k behavior") {

@@ -608,6 +608,33 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(inc2.map(_._2.skippedEmpty) == Seq(true))
   }
 
+  test("IngestJob: a table that fails still lets every settled table print its line") {
+    val raw = tmp()
+    SyncJob.run(spark, Map("jdbc-url" -> url, "tables" -> "lead_xref", "dest" -> raw))
+    // only lead_xref has a RAW file: the other tables fail at load
+    def ingest(tables: String): (Throwable, String, String) = {
+      val (out, err) = (new java.io.ByteArrayOutputStream, new java.io.ByteArrayOutputStream)
+      val e = Console.withOut(out)(Console.withErr(err)(intercept[Throwable](IngestJob.run(spark, Map(
+        "source-dir" -> raw, "sink-dir" -> tmp(), "watermark-dir" -> tmp(), "tables" -> tables)))))
+      (e, out.toString("UTF-8"), err.toString("UTF-8"))
+    }
+    // the thrown failure then the suppressed ones (Spark attaches its
+    // own caller-stacktrace marker as a suppressed exception too)
+    def missing(e: Throwable): Seq[String] = (e +: e.getSuppressed.toSeq).map(_.getMessage)
+      .collect { case m if m.contains("PATH_NOT_FOUND") => m.split('/').last.takeWhile(_ != '.') }
+    val (e, out, err) = ingest("lead_xref,lead")
+    assert(missing(e) == Seq("lead"), e)
+    assert(out.linesIterator.toSeq ==
+      Seq("""{"job":"ingest","table":"lead_xref","rows":25,"skipped_empty":false}"""), out)
+    assert(err.contains(""""table":"lead","error":"""), err)
+    // two failures: the first in table order is thrown, the other
+    // suppressed, and the table between them still reports
+    val (e2, out2, err2) = ingest("lead_assignment,lead_xref,lead")
+    assert(missing(e2) == Seq("lead_assignment", "lead"), e2)
+    assert(out2.linesIterator.toSeq.map(_.contains(""""table":"lead_xref"""")) == Seq(true), out2)
+    assert(err2.linesIterator.count(_.contains(""""error":""")) == 2, err2)
+  }
+
   test("SyncJob and IngestJob refuse a table named twice") {
     val raw = tmp()
     val e = intercept[IllegalArgumentException](SyncJob.run(spark, Map(

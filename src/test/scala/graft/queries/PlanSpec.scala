@@ -210,10 +210,114 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
   }
 
+  /** `name`'s plan with the graph pins split past one partition: the
+    * pin sizing's per-partition floor (AQE's minPartitionSize) lowered
+    * to 1 KB, so the sf0.001 pins take the session's 4 shuffle
+    * partitions instead of the single partition their size gives.
+    */
+  private def planWithSplitPins(name: String): String = {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try planOf(name) finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Every pinned scan of a pageRank-family plan declares the pin's
+    * layout — `hashpartitioning(__src, 4)`, plus `[__src ASC]` on the
+    * edge pins — and the plan holds `exchanges` Exchanges (the figure
+    * recorded when the pins were first declared; a pin that lost its
+    * layout re-exchanges its side of every round join).
+    */
+  private def assertDeclaredPins(p: String, exchanges: Int): Unit = {
+    val scans = "(?m)^Arguments: \\[__src#\\d+, (__dst|__deg)#\\d+L?\\], .*ExistingRDD, (.*)$".r
+      .findAllMatchIn(p).map(m => (m.group(1), m.group(2))).toSeq
+    assert(scans.map(_._1).toSet == Set("__dst", "__deg"), p)
+    scans.foreach { case (pin, layout) =>
+      assert(layout.matches("hashpartitioning\\(__src#(\\d+), 4\\)" +
+        (if (pin == "__dst") ", \\[__src#\\1 ASC NULLS FIRST\\]" else "")), s"$pin pin: $layout")
+    }
+    assert("(?m)^\\(\\d+\\) Exchange$".r.findAllIn(p).size == exchanges, p)
+  }
+
   test("q123 PageRank never plans a cartesian product; rank totals broadcast back") {
     val p = planOf("q123_pagerank")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assertDeclaredPins(planWithSplitPins("q123_pagerank"), exchanges = 4)
+  }
+
+  test("q217 personalized PageRank reads its pins with no Exchange on the pinned side") {
+    assertDeclaredPins(planWithSplitPins("q217_personalized_pagerank"), exchanges = 8)
+  }
+
+  test("graph-family builds keep their Spark job counts") {
+    // recorded at sf0.001 on this suite's local[4] session, on a warm
+    // build (the first load of a table infers its schema once per JVM);
+    // a pin that costs its own stage job, or a lost convergence fold,
+    // moves them
+    val recorded = Seq(
+      "q123_pagerank" -> 8, "q217_personalized_pagerank" -> 12, "q74_dedup_clusters" -> 23,
+      "q92_cap_per_cluster" -> 23, "q64_dedup_canonical_neardup" -> 8, "q205_label_prop" -> 37,
+      "q153_bfs_khop" -> 34, "q206_weighted_sssp" -> 36, "q163_kcore" -> 25,
+      "q261_stationary_dist" -> 50, "q249_hits_rank" -> 25)
+    val got = recorded.map { case (name, _) =>
+      val q = Catalog.all.find(_.name == name).get
+      q.build(spark, dir)
+      name -> org.apache.spark.JobCount(spark.sparkContext)(q.build(spark, dir))._2
+    }
+    assert(got == recorded)
+  }
+
+  test("q123 pins leave AQE on for a query running beside it on the same session") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.functions.col
+    val q = Catalog.all.find(_.name == "q123_pagerank").get
+    def pagerank() = q.build(spark, dir).collect().map(_.toString).sorted.toSeq
+    // AQE-dependent: adaptive planning coalesces this shuffle's reads
+    def grouped() = spark.range(0L, 20000L, 1L, 8).groupBy((col("id") % 7L).as("k")).count()
+    val expected = pagerank()
+    val expectedGrouped = grouped().collect().map(_.toString).sorted.toSeq
+    // every SQL execution that starts with an Exchange in its plan must
+    // plan adaptively; a session-wide AQE flip shows up here whichever
+    // thread's execution starts inside the window
+    def exchanges(p: SparkPlanInfo): Boolean =
+      p.nodeName.contains("Exchange") || p.children.exists(exchanges)
+    val nonAdaptive = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.sparkPlanInfo.nodeName != "AdaptiveSparkPlan" && exchanges(s.sparkPlanInfo) =>
+          nonAdaptive.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      // JobCount drains the listener bus once the block returns
+      org.apache.spark.JobCount(spark.sparkContext) {
+        val graph = pool.submit(() => pagerank())
+        val beside = pool.submit(() => {
+          var runs = 0
+          while (runs < 3 || !graph.isDone) {
+            val df = grouped()
+            assert(df.collect().map(_.toString).sorted.toSeq == expectedGrouped)
+            assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+            runs += 1
+          }
+          runs
+        })
+        assert(graph.get == expected)
+        assert(beside.get >= 3)
+      }
+    } finally {
+      pool.shutdown()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(nonAdaptive.isEmpty, nonAdaptive.toArray.mkString("\n---\n"))
   }
 
   test("q249 HITS build stays within 3 Spark jobs per half-round plus set-up") {
