@@ -57,4 +57,9 @@ object GraftSession {
       // storage/GC pressure into later queries. Default is 30min —
       // far longer than a whole bench run.
       .config("spark.cleaner.periodicGC.interval", "1min")
+      // the `file` scheme sets permissions in-process instead of forking
+      // a `chmod` per written file and directory (see NioLocalFileSystem),
+      // through FileSystem and FileContext (streaming checkpoints) alike
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 }

@@ -6,131 +6,112 @@ import org.apache.spark.sql.types._
 
 /** Schema-conformance operators. Same observable behavior as the
   * reference's rename/pad/transform/metadata/reorder/validate chain
-  * (ingest.py:652-700, 759-778, 445-473), but each stage is ONE `select`
-  * over composed expressions — the plans stay one Project node deep
-  * instead of one per column, which is the difference between a 100 ms
-  * and a multi-second analysis phase at 101 columns, and keeps
-  * whole-stage codegen fused at any scale.
+  * (ingest.py:652-700, 759-778, 445-473), built from composed column
+  * expressions so the plan stays a few `Project` nodes deep instead of
+  * one per column: the difference between a 100 ms and a multi-second
+  * analysis phase at 101 columns, and whole-stage codegen stays fused.
   *
-  * The stages still stack as several `Project`s, and a filter on the
-  * conformed frame is inlined through all of them, so a stage that only
-  * restates its input is not free (see the [[Cleanse]] header). The
-  * reference's identity stages are left out: see [[cleanInvalidTimestamps]]
-  * and [[finalSweep]].
+  * [[conform]] is three `select`s, not one per reference stage. Each
+  * `select` is analyzed eagerly, so every stage costs driver time in
+  * proportion to its width, and a filter on the conformed frame is
+  * inlined through all of them by substitution (see the [[Cleanse]]
+  * header). The boundaries sit where a rule reads its input more than
+  * once: the clamp and the final sweep each read the conformed column
+  * two or three times, so they read it as a column reference. The
+  * reference's identity stages are left out: see [[conform]].
   */
 object Conform {
 
-  /** Case-insensitive rename per mapping + pad missing target columns as
-    * typed nulls (ingest.py:652-670). Unmapped source columns pass
-    * through untouched (dropped later by [[reorder]], as in the
-    * reference).
+  /** Each RAW column under its target name — case-insensitive rename per
+    * mapping (ingest.py:652-662); unmapped columns keep their name — then
+    * every target-schema field the RAW frame lacks as a typed null
+    * (ingest.py:664-670). The presence check is case-INSENSITIVE: an
+    * unmapped source column that matches a target field in different
+    * case must count as present, or the pad would create a duplicate
+    * that Spark's case-insensitive resolver rejects as ambiguous. (The
+    * reference's `not in df.columns` check, ingest.py:664, shares the
+    * case-sensitivity bug this avoids — intent over letter.)
     */
-  def renameAndPad(df: DataFrame, table: String): DataFrame = {
+  private def renamedAndPadded(df: DataFrame, table: String): Seq[(String, Column, DataType)] = {
     val mapping = TableSchemas.columnMappings(table)
-    val schema = TableSchemas.schemas(table)
-    val renamed = df.columns.toSeq.map { c =>
-      mapping.get(c.toLowerCase) match {
-        case Some(target) => col(c).as(target)
-        case None => col(c)
-      }
-    }
-    // presence check is case-INSENSITIVE: an unmapped source column that
-    // matches a target field in different case must count as present, or
-    // the pad would create a duplicate that Spark's case-insensitive
-    // resolver later rejects as ambiguous. (The reference's `not in
-    // df.columns` check, ingest.py:664, shares the case-sensitivity bug
-    // this avoids — intent over letter.)
-    val present = df.columns.map(c => mapping.getOrElse(c.toLowerCase, c).toLowerCase).toSet
-    val padding = schema.fields.toSeq.collect {
+    val renamed = df.schema.fields.toSeq.map(f =>
+      (mapping.getOrElse(f.name.toLowerCase, f.name), col(f.name), f.dataType))
+    val present = renamed.map(_._1.toLowerCase).toSet
+    renamed ++ TableSchemas.schemas(table).fields.toSeq.collect {
       case f if !present.contains(f.name.toLowerCase) =>
-        lit(null).cast(f.dataType).as(f.name)
+        (f.name, lit(null).cast(f.dataType), f.dataType)
     }
-    df.select(renamed ++ padding: _*)
   }
 
-  /** Default ETL_* timestamps to the clock (ingest.py:507-536). The
-    * reference also nulls out "garbage" in every timestamp-typed column;
-    * that is an identity here: a timestamp's string form is at least 19
-    * characters and holds digits, so [[Cleanse.garbageTemporal]] never
-    * holds for it, and a null stays null.
+  /** Rename + pad as one `select`. Unmapped source columns pass through
+    * ([[conform]] drops them, as the reference's reorder does).
     */
-  def cleanInvalidTimestamps(df: DataFrame, clock: Column): DataFrame = {
-    val exprs = df.schema.fields.toSeq.map {
-      case f if f.dataType == TimestampType && f.name.startsWith("ETL_") =>
-        Cleanse.defaultEtlTimestamp(col(f.name), clock).as(f.name)
-      case f => col(f.name)
-    }
-    df.select(exprs: _*)
-  }
+  def renameAndPad(df: DataFrame, table: String): DataFrame =
+    df.select(renamedAndPadded(df, table).map { case (n, c, _) => c.as(n) }: _*)
 
-  /** Per-type conform of every target-schema column (ingest.py:672-679):
-    * clean timestamps first, then the dispatch table. Non-schema columns
-    * pass through (the reference's loop leaves them in place too).
+  /** ETL metadata values (ingest.py:681-700), cast to their schema types. */
+  private def metadata(clock: Column): Map[String, Column] = Map(
+    "ETL_CREATED_DATE" -> clock,
+    "ETL_LAST_UPDATE_DATE" -> clock,
+    "CREATED_BY" -> lit("ETL_PROCESS"),
+    "TO_PROCESS" -> lit(true),
+    "EDW_EXTERNAL_SOURCE_SYSTEM" -> lit("LeadCustodyRepository"))
+
+  /** The full conformance chain for one table (ingest.py:702-778, steps
+    * 1-7), load and write excluded, in three `select`s:
+    *
+    *  1. per target field in schema order (ingest.py:759-760, which also
+    *     drops unmapped columns): the ETL metadata value
+    *     (ingest.py:681-700), or the renamed/padded RAW column with an
+    *     ETL_* timestamp defaulted to the clock (ingest.py:507-536) and
+    *     the per-type conform (ingest.py:672-679), whose JSON arm is the
+    *     METADATA passthrough (ingest.py:744-753) as well;
+    *  2. the future-date clamp on the capped columns (ingest.py:734-742),
+    *     only for a table that has them;
+    *  3. the final timestamp sweep (ingest.py:762-778).
+    *
+    * The reference also nulls "garbage" in every timestamp-typed column
+    * before the conform and again before the sweep. Both are identities:
+    * a timestamp's string form is at least 19 characters and holds
+    * digits, so [[Cleanse.garbageTemporal]] never holds for it, and a
+    * null stays null. Its second ETL_* default, null → clock, is the
+    * sweep's null arm already.
     */
-  def transformColumns(df: DataFrame, table: String, clock: Column): DataFrame = {
+  def conform(df: DataFrame, table: String, clock: Column = Cleanse.now()): DataFrame = {
     val schema = TableSchemas.schemas(table)
     val json = TableSchemas.jsonColumns(table)
-    val boolStr = TableSchemas.booleanStringColumns
     val byName = schema.fields.map(f => f.name -> f).toMap
-    val cleaned = cleanInvalidTimestamps(df, clock)
-    val exprs = cleaned.schema.fields.toSeq.map { f =>
-      byName.get(f.name) match {
-        case Some(target) => Cleanse.conformExpr(col(f.name), target, json, boolStr)
-        case None => col(f.name)
+    val meta = metadata(clock)
+    // a rule keys on a column's exact name, as each reference stage does;
+    // the reorder resolves a target field case-insensitively
+    val sources = renamedAndPadded(df, table).filterNot { case (n, _, _) => meta.contains(n) }
+    val conformed = df.select(schema.fields.toSeq.map { f =>
+      meta.get(f.name) match {
+        case Some(v) => v.cast(f.dataType).as(f.name)
+        case None =>
+          val matches = sources.filter(_._1.equalsIgnoreCase(f.name))
+          require(matches.size == 1,
+            s"conform: target column ${f.name} is ambiguous: ${matches.map(_._1).mkString(", ")}")
+          val (n, c, t) = matches.head
+          val etl = if (t == TimestampType && n.startsWith("ETL_")) Cleanse.defaultEtlTimestamp(c, clock) else c
+          byName.get(n).fold(etl.as(n))(target =>
+            Cleanse.conformExpr(etl, target, json, TableSchemas.booleanStringColumns))
       }
-    }
-    cleaned.select(exprs: _*)
-  }
-
-  /** ETL metadata columns, cast to their schema types (ingest.py:681-700). */
-  def addMetadata(df: DataFrame, table: String, clock: Column): DataFrame = {
-    val schema = TableSchemas.schemas(table)
-    def typed(name: String, v: Column): Column = v.cast(schema(name).dataType).as(name)
-    val meta = Map(
-      "ETL_CREATED_DATE" -> clock,
-      "ETL_LAST_UPDATE_DATE" -> clock,
-      "CREATED_BY" -> lit("ETL_PROCESS"),
-      "TO_PROCESS" -> lit(true),
-      "EDW_EXTERNAL_SOURCE_SYSTEM" -> lit("LeadCustodyRepository"))
-    val kept = df.columns.toSeq.collect { case c if !meta.contains(c) => col(c) }
-    df.select(kept ++ meta.map { case (n, v) => typed(n, v) }: _*)
-  }
-
-  /** lead_assignment special handling: future-date clamp on 6 columns +
-    * METADATA JSON passthrough (ingest.py:734-753).
-    */
-  def specialHandling(df: DataFrame, table: String, clock: Column): DataFrame = {
+    }: _*)
     val capped = TableSchemas.futureCappedColumns(table).toSet
-    val json = TableSchemas.jsonColumns(table)
-    if (capped.isEmpty && json.isEmpty) return df
-    val exprs = df.columns.toSeq.map {
-      case c if capped.contains(c) => Cleanse.clampFuture(col(c), clock).as(c)
-      case c if json.contains(c) => Cleanse.jsonPassthrough(col(c)).as(c)
-      case c => col(c)
-    }
-    df.select(exprs: _*)
-  }
-
-  /** Column reorder to exact target-schema order — also drops any
-    * unmapped passthrough columns (ingest.py:759-760).
-    */
-  def reorder(df: DataFrame, table: String): DataFrame =
-    df.select(TableSchemas.schemas(table).fields.toSeq.map(f => col(f.name)): _*)
-
-  /** Final timestamp sanity sweep after reorder (ingest.py:762-778). The
-    * reference runs [[cleanInvalidTimestamps]] first; its only effect,
-    * null ETL_* → clock, is the ETL_* sweep's null arm already.
-    */
-  def finalSweep(df: DataFrame, table: String, clock: Column): DataFrame = {
-    val schema = TableSchemas.schemas(table)
-    val exprs = df.schema.fields.toSeq.map { f =>
-      schema.find(_.name == f.name) match {
+    val clamped =
+      if (capped.isEmpty) conformed
+      else conformed.select(conformed.columns.toSeq.map {
+        case c if capped.contains(c) => Cleanse.clampFuture(col(c), clock).as(c)
+        case c => col(c)
+      }: _*)
+    clamped.select(clamped.columns.toSeq.map { c =>
+      byName.get(c) match {
         case Some(t) if t.dataType.isInstanceOf[TimestampType] =>
-          Cleanse.finalTimestampSweep(col(f.name), f.name.startsWith("ETL_"), clock).as(f.name)
-        case _ => col(f.name)
+          Cleanse.finalTimestampSweep(col(c), c.startsWith("ETL_"), clock).as(c)
+        case _ => col(c)
       }
-    }
-    df.select(exprs: _*)
+    }: _*)
   }
 
   /** Presence + type-class validation; throws with ALL errors listed
@@ -151,17 +132,6 @@ object Conform {
     if (errors.nonEmpty)
       throw new IllegalArgumentException(
         "DataFrame validation failed with errors:\n" + errors.mkString("\n"))
-  }
-
-  /** The full conformance chain for one table (ingest.py:702-778, steps
-    * 1-7), load and write excluded.
-    */
-  def conform(df: DataFrame, table: String, clock: Column = Cleanse.now()): DataFrame = {
-    val renamed = renameAndPad(df, table)
-    val transformed = transformColumns(renamed, table, clock)
-    val special = specialHandling(transformed, table, clock)
-    val withMeta = addMetadata(special, table, clock)
-    finalSweep(reorder(withMeta, table), table, clock)
   }
 
   /** One schema change detected by [[schemaDiff]]: `change` is

@@ -512,7 +512,7 @@ final class SnapshotStore(root: String,
               else stagePartitioned(df, parts, effective, mapping._1, bloomCol)
             if (skipEmpty && e.forall(f => SnapshotStore.parquetRows(
                 new org.apache.hadoop.fs.Path(rootPath.resolve(f.path).toString),
-                SnapshotStore.hadoopConf) == 0L)) {
+                df.sparkSession.sparkContext.hadoopConfiguration) == 0L)) {
               // data/<uuid>/...: the staging directory of this append
               e.map(f => Paths.get(f.path).subpath(0, 2)).distinct.foreach(d =>
                 org.apache.hadoop.fs.FileUtil.fullyDelete(rootPath.resolve(d).toFile))
@@ -3614,8 +3614,7 @@ final class SnapshotStore(root: String,
       conf: org.apache.hadoop.conf.Configuration): Map[String, (Long, Long)] = {
     if (columns.isEmpty) return Map.empty
     val wanted = columns.toSet
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = SnapshotStore.openParquet(p, conf)
     try {
       val ranges = r.getFooter.getBlocks.asScala.flatMap { block =>
         block.getColumns.asScala
@@ -3655,14 +3654,15 @@ final class SnapshotStore(root: String,
     * are attributed per file: a row group whose `file` column statistics
     * have min = max belongs to that one file (footer only); a sidecar
     * part with a mixed row group has its `file` column read (one short
-    * string per tombstone).
+    * string per tombstone). A caller holding a session passes its
+    * `hadoopConfiguration` as `conf`.
     */
-  def footerRowCount(asOfVersion: Option[Long] = None): Long = {
+  def footerRowCount(asOfVersion: Option[Long] = None,
+      conf: org.apache.hadoop.conf.Configuration = SnapshotStore.hadoopConf): Long = {
     val v = asOfVersion.orElse(latestVersion).getOrElse(
       throw new IllegalArgumentException(
         s"SnapshotStore.footerRowCount: no committed versions at $root"))
     val m = readFullManifest(v)
-    val conf = SnapshotStore.hadoopConf
     def abs(rel: String): Path = rootPath.resolve(rel).normalize
     val rows = m.entries.map(e => SnapshotStore.parquetRows(
       new org.apache.hadoop.fs.Path(abs(e.path).toString), conf)).sum
@@ -3689,8 +3689,7 @@ final class SnapshotStore(root: String,
     }
     parts.flatMap { part =>
       val hp = new org.apache.hadoop.fs.Path(part.toString)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = SnapshotStore.openParquet(hp, conf)
       val single = try r.getFooter.getBlocks.asScala.toSeq.map { block =>
         block.getColumns.asScala.find(_.getPath.toDotString == "file")
           .map(_.getStatistics).collect {
@@ -4197,18 +4196,30 @@ final class ConcurrentCommitException(msg: String, val retryable: Boolean = true
 
 object SnapshotStore {
 
-  /** Hadoop configuration of the driver-side footer reads: the store is
-    * local/NFS only, so the defaults serve every store in the JVM.
+  /** Hadoop configuration of the driver-side footer reads where no
+    * session is at hand: the store is local/NFS only, so the defaults
+    * serve every store in the JVM. It ignores a session's `spark.hadoop.*`
+    * settings, so a caller holding a session passes that session's
+    * `hadoopConfiguration` instead.
     */
   private[etl] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** A parquet file opened for its footer. The read options come from
+    * `conf`: parquet's default options build a fresh `Configuration`,
+    * parsing `core-default.xml`, on every open.
+    */
+  private[etl] def openParquet(p: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
 
   /** The record count a parquet file's footer holds: one footer read, no
     * data page.
     */
   private[etl] def parquetRows(p: org.apache.hadoop.fs.Path,
       conf: org.apache.hadoop.conf.Configuration): Long = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    val r = openParquet(p, conf)
     try r.getRecordCount finally r.close()
   }
 

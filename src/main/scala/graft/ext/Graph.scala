@@ -974,6 +974,9 @@ object Graph {
     var lbl = bidir.select(col("s").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint(false)
+    // the label generations this call holds, freed on a throw; on
+    // success the last one is the result's own pin
+    var live = Set(lbl)
     try {
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
       for (_ <- 1 to rounds) {
@@ -986,12 +989,15 @@ object Graph {
           .filter(col("__rn") === 1)
           .select(col("id"), col("lbl"))
           .localCheckpoint(false)
+        live += next
         next.count() // materialize before freeing the round it reads
         free(lbl)
+        live -= lbl
         lbl = next
       }
+      live = Set.empty
       lbl.select(col("id").as("node"), col("lbl").as("community"))
-    } finally free(bidir)
+    } finally free((live + bidir).toSeq: _*)
   }
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala WWW'02: the

@@ -189,7 +189,7 @@ object SyncJob {
           val store = new graft.etl.SnapshotStore(s"$dest/$table")
           val v = store.commitOverwrite(df) // the ONLY Spark extraction
           log += Right(s"""{"job":"sync","table":"$table","snapshot_version":$v}""")
-          store.footerRowCount(Some(v))
+          store.footerRowCount(Some(v), spark.sparkContext.hadoopConfiguration)
         } else {
           val out = s"$dest/$table.$fmt"
           df.write.mode("overwrite").options(Pipeline.writeOptions(fmt))
@@ -318,7 +318,7 @@ object CompactJob {
       val v = store.compactLatest(spark, parts, conf.get("cluster-by"), zorder)
       conf.get("vacuum-keep").map(_.toInt).foreach(k =>
         store.vacuum(k, conf.getOrElse("vacuum-min-age-ms", "0").toLong))
-      val rows = store.footerRowCount()
+      val rows = store.footerRowCount(conf = spark.sparkContext.hadoopConfiguration)
       println(s"""{"job":"compact","snapshot":true,"src_bytes":$bytes,""" +
         s""""out_files":$parts,"version":$v,"rows":$rows}""")
       return (rows, parts)

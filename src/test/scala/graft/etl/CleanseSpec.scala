@@ -288,8 +288,10 @@ class CleanseSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (got, want) =
         try {
           val clock = graft.functions.RunTimestamp.column(clockAt)
-          (Conform.conform(raw, table, clock).collect(),
-            ReferenceConform.conform(raw, table, clock).collect())
+          val (fused, stacked) =
+            (Conform.conform(raw, table, clock), ReferenceConform.conform(raw, table, clock))
+          assert(fused.schema == stacked.schema, table)
+          (fused.collect(), stacked.collect())
         } finally LenientParse.clockOverride = None
       def bag(rs: Array[Row]) = rs.groupBy(identity).view.mapValues(_.length).toMap
       val (g, w) = (bag(got), bag(want))
@@ -339,9 +341,11 @@ class CleanseSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 }
 
-/** The timestamp conform as the reference stacks it (ingest.py:507-536,
-  * 552-570, 762-778): every stage, identities included. The oracle for
-  * [[Conform.conform]], which leaves the identities out.
+/** The conform chain as the reference stacks it (ingest.py:507-536,
+  * 552-570, 652-778): every stage its own `select`, identities included,
+  * each stage's body kept here so that the oracle for [[Conform.conform]]
+  * (which fuses the stages and leaves the identities out) does not move
+  * with it. Only the per-column rules of [[Cleanse]] are shared.
   */
 private object ReferenceConform {
   import org.apache.spark.sql.Column
@@ -425,11 +429,56 @@ private object ReferenceConform {
     cleaned.select(exprs: _*)
   }
 
+  def renameAndPad(df: DataFrame, table: String): DataFrame = {
+    val mapping = TableSchemas.columnMappings(table)
+    val schema = TableSchemas.schemas(table)
+    val renamed = df.columns.toSeq.map { c =>
+      mapping.get(c.toLowerCase) match {
+        case Some(target) => col(c).as(target)
+        case None => col(c)
+      }
+    }
+    val present = df.columns.map(c => mapping.getOrElse(c.toLowerCase, c).toLowerCase).toSet
+    val padding = schema.fields.toSeq.collect {
+      case f if !present.contains(f.name.toLowerCase) =>
+        lit(null).cast(f.dataType).as(f.name)
+    }
+    df.select(renamed ++ padding: _*)
+  }
+
+  def specialHandling(df: DataFrame, table: String, clock: Column): DataFrame = {
+    val capped = TableSchemas.futureCappedColumns(table).toSet
+    val json = TableSchemas.jsonColumns(table)
+    if (capped.isEmpty && json.isEmpty) return df
+    val exprs = df.columns.toSeq.map {
+      case c if capped.contains(c) => Cleanse.clampFuture(col(c), clock).as(c)
+      case c if json.contains(c) => Cleanse.jsonPassthrough(col(c)).as(c)
+      case c => col(c)
+    }
+    df.select(exprs: _*)
+  }
+
+  def addMetadata(df: DataFrame, table: String, clock: Column): DataFrame = {
+    val schema = TableSchemas.schemas(table)
+    def typed(name: String, v: Column): Column = v.cast(schema(name).dataType).as(name)
+    val meta = Map(
+      "ETL_CREATED_DATE" -> clock,
+      "ETL_LAST_UPDATE_DATE" -> clock,
+      "CREATED_BY" -> lit("ETL_PROCESS"),
+      "TO_PROCESS" -> lit(true),
+      "EDW_EXTERNAL_SOURCE_SYSTEM" -> lit("LeadCustodyRepository"))
+    val kept = df.columns.toSeq.collect { case c if !meta.contains(c) => col(c) }
+    df.select(kept ++ meta.map { case (n, v) => typed(n, v) }: _*)
+  }
+
+  def reorder(df: DataFrame, table: String): DataFrame =
+    df.select(TableSchemas.schemas(table).fields.toSeq.map(f => col(f.name)): _*)
+
   def conform(df: DataFrame, table: String, clock: Column): DataFrame = {
-    val renamed = Conform.renameAndPad(df, table)
+    val renamed = renameAndPad(df, table)
     val transformed = transformColumns(renamed, table, clock)
-    val special = Conform.specialHandling(transformed, table, clock)
-    val withMeta = Conform.addMetadata(special, table, clock)
-    finalSweep(Conform.reorder(withMeta, table), table, clock)
+    val special = specialHandling(transformed, table, clock)
+    val withMeta = addMetadata(special, table, clock)
+    finalSweep(reorder(withMeta, table), table, clock)
   }
 }

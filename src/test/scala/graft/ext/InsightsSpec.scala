@@ -258,6 +258,39 @@ class InsightsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Graph.kCore(path, "x", "y", k = 2).count() == 0) // the session still works
   }
 
+  test("labelPropagation: a round cancelled mid-run leaves no checkpoint blocks registered") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // two triangles joined by a bridge, four rounds
+    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
+      .toDF("x", "y")
+    def pinned = sc.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    val group = "lpa-cancel"
+    val floor = sc.emptyRDD[Int].id // labelPropagation's RDDs all get later ids
+    // the edge pin frees its flat pass-1 edges, then round 1 frees the
+    // start labels: the second unpersist marks round 2's start, and
+    // every job of the group from then on is cancelled
+    val frees = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        if (e.rddId > floor && frees.incrementAndGet() == 2) sc.cancelJobGroupAndFutureJobs(group)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "labelPropagation cancelled in round 2")
+    try {
+      val e = intercept[Exception](Graph.labelPropagation(g, "x", "y", rounds = 4).count())
+      assert(e.getMessage.contains("cancel"), e.getMessage)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(frees.get >= 2)
+    assert(pinned.diff(before).isEmpty, "labelPropagation left checkpoint blocks registered")
+    assert(Graph.labelPropagation(g, "x", "y", rounds = 4).count() == 6) // the session still works
+  }
+
   test("bpePairCounts: hand pairs; short docs skipped; deterministic tie order") {
     import spark.implicits._
     val docs = Seq("a b a b", "b a", "x", "", null).toDF("txt")

@@ -893,6 +893,17 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally conn.close()
   }
 
+  /** Three rows of each cycle table modified now. */
+  private def churn(): Unit = {
+    val now = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+    val conn = DriverManager.getConnection(cycleUrl)
+    try cycleTables.foreach { case (t, _) =>
+      conn.createStatement().executeUpdate(
+        s"UPDATE $t SET modifydate = '$now' WHERE ${cycleKey(t)} IN ('$t-1', '$t-2', '$t-3')")
+    } finally conn.close()
+  }
+
   /** One cron cycle: Sync into the snapshot RAW zone, then incremental Ingest. */
   private def cronCycle(raw: String, staged: String, wm: String)
       : (Seq[(String, Long, Long)], Seq[(String, graft.etl.Pipeline.Report)]) = {
@@ -926,20 +937,24 @@ class JobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (synced0, ingested0) = cronCycle(raw, staged, wm) // the full load
     assert(synced0.map(_._3) == cycleTables.map(_._2.toLong))
     assert(ingested0.map(_._2.rowsWritten) == cycleTables.map(_._2.toLong))
-    // churn: three rows of each table modified now
-    val now = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
-      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
-    val conn = DriverManager.getConnection(cycleUrl)
-    try cycleTables.foreach { case (t, _) =>
-      conn.createStatement().executeUpdate(
-        s"UPDATE $t SET modifydate = '$now' WHERE ${cycleKey(t)} IN ('$t-1', '$t-2', '$t-3')")
-    } finally conn.close()
+    churn()
     val ((synced, ingested), jobs) =
       org.apache.spark.JobCount(spark.sparkContext)(cronCycle(raw, staged, wm))
     assert(synced.map(_._3) == cycleTables.map(_._2.toLong))
     assert(ingested.map(_._2.rowsWritten) == Seq(3L, 3L, 3L))
     // one extraction per table, one write per table: no count or probe job
     assert(jobs <= 6, s"the cycle ran $jobs Spark jobs")
+  }
+
+  test("a Sync + incremental Ingest cron cycle starts no OS process") {
+    val (raw, staged, wm) = (tmp(), tmp(), tmp())
+    cronCycle(raw, staged, wm) // the full load
+    churn()
+    // without libhadoop, Hadoop's own `file` scheme forks a chmod for
+    // every file and directory it creates: about 100 per cycle
+    val ((_, ingested), started) = graft.ProcessStarts(cronCycle(raw, staged, wm))
+    assert(ingested.map(_._2.rowsWritten) == Seq(3L, 3L, 3L))
+    assert(started.isEmpty, s"${started.size} processes: ${started.take(5).mkString("; ")}")
   }
 
   test("SyncJob: a manifest pointing at fewer rows than the source count is a count drift") {
