@@ -96,7 +96,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     ext.injectFunction((
       FunctionIdentifier("graft_array_sum"),
-      info("graft_array_sum", "graft_array_sum(v) - left-fold sum of a float/double array"),
+      info("graft_array_sum",
+        "graft_array_sum(v) - left-fold sum of a float/double array, exact bigint sum of an int one"),
       (args: Seq[Expression]) => ArraySum(args(0))))
 
     ext.injectFunction((

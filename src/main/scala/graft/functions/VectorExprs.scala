@@ -224,37 +224,46 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
 
 /** Sum of an array<float|double> as a 0.0-seeded left fold in element
   * order — the compiled replacement for the CodegenFallback HOF
-  * `aggregate(transform(v, cast), 0.0, _+_)`. Null when the array or any
-  * element is null (matching the HOF's null propagation).
+  * `aggregate(transform(v, cast), 0.0, _+_)`; an array<int> sums exactly
+  * into a bigint (`aggregate(v, 0L, (a, x) => a + x)`). Null when the
+  * array or any element is null (matching the HOF's null propagation).
   */
 case class ArraySum(child: Expression) extends UnaryExpression {
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+  @transient private lazy val elementType: DataType =
+    child.dataType.asInstanceOf[ArrayType].elementType
 
-  @transient private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def dataType: DataType = child.dataType match {
+    case ArrayType(IntegerType, _) => LongType
+    case _ => DoubleType
+  }
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
+      case ArrayType(FloatType | DoubleType | IntegerType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"array_sum requires array<float|double>, got $other")
+          s"array_sum requires array<float|double|int>, got $other")
     }
 
   override protected def nullSafeEval(input: Any): Any = {
     val ad = input.asInstanceOf[ArrayData]
     val n = ad.numElements()
     var sum = 0.0
+    var longSum = 0L
     var j = 0
     while (j < n) {
       if (ad.isNullAt(j)) return null
-      sum += (if (isFloat) ad.getFloat(j).toDouble else ad.getDouble(j))
+      elementType match {
+        case IntegerType => longSum += ad.getInt(j)
+        case FloatType => sum += ad.getFloat(j).toDouble
+        case _ => sum += ad.getDouble(j)
+      }
       j += 1
     }
-    sum
+    if (elementType == IntegerType) longSum else sum
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -262,10 +271,14 @@ case class ArraySum(child: Expression) extends UnaryExpression {
       val n = ctx.freshName("n")
       val sum = ctx.freshName("sum")
       val j = ctx.freshName("j")
-      val getter = if (isFloat) s"(double) $c.getFloat($j)" else s"$c.getDouble($j)"
+      val (acc, getter) = elementType match {
+        case IntegerType => ("long", s"$c.getInt($j)")
+        case FloatType => ("double", s"(double) $c.getFloat($j)")
+        case _ => ("double", s"$c.getDouble($j)")
+      }
       s"""
         int $n = $c.numElements();
-        double $sum = 0.0;
+        $acc $sum = 0;
         for (int $j = 0; $j < $n; $j++) {
           if ($c.isNullAt($j)) { ${ev.isNull} = true; break; }
           $sum += $getter;

@@ -4,10 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftExprBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow,
+  TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** Pure-JVM decoder for RIFF/WAVE PCM audio — the audio sibling of
@@ -108,7 +108,7 @@ case class WavDecode(child: Expression) extends UnaryExpression {
           sampleRate, channels, bits, out.length,
           // zero-boxing wrap for the PCM sample array (same GC story
           // as the video frame grays)
-          org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)))
+          UnsafeArrayData.fromPrimitiveArray(out)))
       }
       pos = body + size.toInt + (size.toInt & 1) // WORD-aligned chunks
     }
@@ -138,7 +138,7 @@ case class WavDecode(child: Expression) extends UnaryExpression {
   * audio near-dup. Cells with no source sample (n < nW) read 0.
   */
 case class AmplitudeEnvelope(first: Expression, second: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression {
 
   override def left: Expression = first
   override def right: Expression = second
@@ -191,6 +191,207 @@ case class AmplitudeEnvelope(first: Expression, second: Expression)
     copy(first = newLeft, second = newRight)
 }
 
+/** (samples array<int>, bits) → struct(peak, energy, clip_count,
+  * zero_crossings), all bigint, in one pass over the samples: peak is
+  * max |sᵢ| (0 on an empty clip), energy Σ sᵢ², clip_count the samples
+  * at or beyond the rails (32767 / −32768 at 16 bits, 127 / −128 at any
+  * other width), zero_crossings the adjacent pairs whose signs differ
+  * (negative vs not; 0 when n < 2). Null when the array holds a null.
+  */
+case class PcmStats(first: Expression, second: Expression) extends BinaryExpression {
+
+  override def left: Expression = first
+  override def right: Expression = second
+  override def dataType: DataType = StructType(
+    Seq("peak", "energy", "clip_count", "zero_crossings")
+      .map(StructField(_, LongType, nullable = false)))
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (first.dataType, second.dataType) match {
+      case (ArrayType(IntegerType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"pcm_stats requires (array<int>, int), got $other")
+    }
+
+  /** Public so codegen can call it. */
+  def stats(ad: ArrayData, bits: Int): InternalRow = {
+    if (AudioKernels.hasNull(ad)) return null
+    val s = ad.toIntArray()
+    val (hi, lo) = if (bits == 16) (32767, -32768) else (127, -128)
+    var peak = 0L
+    var energy = 0L
+    var clips = 0L
+    var crossings = 0L
+    var i = 0
+    while (i < s.length) {
+      val v = s(i).toLong
+      peak = math.max(peak, math.abs(v))
+      energy += v * v
+      if (v >= hi || v <= lo) clips += 1L
+      if (i > 0 && (s(i - 1) < 0) != (v < 0)) crossings += 1L
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](peak, energy, clips, crossings))
+  }
+
+  override protected def nullSafeEval(s: Any, b: Any): Any =
+    stats(s.asInstanceOf[ArrayData], b.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pcmStats", this, classOf[PcmStats].getName)
+    nullSafeCodeGen(ctx, ev, (s, b) => s"""
+      ${ev.value} = $ref.stats($s, $b);
+      if (${ev.value} == null) { ${ev.isNull} = true; }
+    """)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PcmStats =
+    copy(first = newLeft, second = newRight)
+}
+
+/** (samples array<int>, minLag, maxLag) → struct(r bigint, lag int): the
+  * autocorrelation peak over lags L = minLag, minLag + 1, …, maxLag,
+  * where r_L = Σᵢ sᵢ·sᵢ₊L is summed exactly in a long over the n − L
+  * overlapping pairs (0 when L ≥ n). A lag replaces the best so far only
+  * when its r is strictly greater, starting from (Long.MinValue, 0), so
+  * the smallest of tied lags wins. One O(n·L) loop of multiply-adds.
+  * Null when minLag < 0 or the array holds a null.
+  */
+case class AutocorrPeak(samples: Expression, minLag: Expression, maxLag: Expression)
+    extends TernaryExpression {
+
+  override def first: Expression = samples
+  override def second: Expression = minLag
+  override def third: Expression = maxLag
+  override def dataType: DataType = StructType(Seq(
+    StructField("r", LongType, nullable = false),
+    StructField("lag", IntegerType, nullable = false)))
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (samples.dataType, minLag.dataType, maxLag.dataType) match {
+      case (ArrayType(IntegerType, _), IntegerType, IntegerType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"autocorr_peak requires (array<int>, int, int), got $other")
+    }
+
+  /** Public so codegen can call it. */
+  def peak(ad: ArrayData, lo: Int, hi: Int): InternalRow = {
+    if (lo < 0 || AudioKernels.hasNull(ad)) return null
+    val s = ad.toIntArray()
+    val n = s.length
+    var bestR = Long.MinValue
+    var bestLag = 0
+    // every lag past max(lo, n) has no pairs: r = 0 cannot beat that lag's 0
+    val last = math.min(hi.toLong, math.max(lo, n).toLong)
+    var lag = lo.toLong
+    while (lag <= last) {
+      val l = lag.toInt
+      var r = 0L
+      var i = 0
+      while (i < n - l) {
+        r += s(i).toLong * s(i + l)
+        i += 1
+      }
+      if (r > bestR) { bestR = r; bestLag = l }
+      lag += 1
+    }
+    new GenericInternalRow(Array[Any](bestR, bestLag))
+  }
+
+  override protected def nullSafeEval(s: Any, lo: Any, hi: Any): Any =
+    peak(s.asInstanceOf[ArrayData], lo.asInstanceOf[Int], hi.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("autocorrPeak", this, classOf[AutocorrPeak].getName)
+    nullSafeCodeGen(ctx, ev, (s, lo, hi) => s"""
+      ${ev.value} = $ref.peak($s, $lo, $hi);
+      if (${ev.value} == null) { ${ev.isNull} = true; }
+    """)
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): AutocorrPeak =
+    copy(samples = newFirst, minLag = newSecond, maxLag = newThird)
+}
+
+/** (samples array<int>, srcRate, dstRate) → array<int>: linear
+  * resampling on the exact rational grid. Output sample j sits at source
+  * position j·src/dst: idx = j·src div dst, rem = j·src mod dst,
+  * out[j] = a + (b − a)·rem div dst with a = s[idx] and b = s[idx + 1]
+  * clamped to the last sample, the division truncating toward zero.
+  * n_out = (n_in − 1)·dst div src + 1, so the last output lands on the
+  * last input; an empty clip resamples to an empty array. Null when a
+  * rate is below 1, the array holds a null, or the output would not fit
+  * in an array.
+  */
+case class Resample(samples: Expression, srcRate: Expression, dstRate: Expression)
+    extends TernaryExpression {
+
+  override def first: Expression = samples
+  override def second: Expression = srcRate
+  override def third: Expression = dstRate
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (samples.dataType, srcRate.dataType, dstRate.dataType) match {
+      case (ArrayType(IntegerType, _), IntegerType, IntegerType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"resample requires (array<int>, int, int), got $other")
+    }
+
+  /** Public so codegen can call it. */
+  def resample(ad: ArrayData, src: Int, dst: Int): ArrayData = {
+    if (src < 1 || dst < 1 || AudioKernels.hasNull(ad)) return null
+    val s = ad.toIntArray()
+    val n = s.length
+    val nOut = if (n == 0) 0L else (n - 1).toLong * dst / src + 1
+    if (nOut > org.apache.spark.unsafe.array.ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH) return null
+    val out = new Array[Int](nOut.toInt)
+    var j = 0
+    while (j < out.length) {
+      val pos = j.toLong * src
+      val idx = (pos / dst).toInt
+      val a = s(idx)
+      val b = s(math.min(idx + 1, n - 1))
+      out(j) = a + ((b.toLong - a) * (pos % dst) / dst).toInt
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override protected def nullSafeEval(s: Any, src: Any, dst: Any): Any =
+    resample(s.asInstanceOf[ArrayData], src.asInstanceOf[Int], dst.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("resample", this, classOf[Resample].getName)
+    nullSafeCodeGen(ctx, ev, (s, src, dst) => s"""
+      ${ev.value} = $ref.resample($s, $src, $dst);
+      if (${ev.value} == null) { ${ev.isNull} = true; }
+    """)
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): Resample =
+    copy(samples = newFirst, srcRate = newSecond, dstRate = newThird)
+}
+
+private object AudioKernels {
+  def hasNull(ad: ArrayData): Boolean = {
+    var i = 0
+    while (i < ad.numElements()) {
+      if (ad.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+}
+
 /** Column-API wrappers for the audio expressions. */
 object AudioFunctions {
   def wavDecode(bytes: Column): Column =
@@ -199,4 +400,13 @@ object AudioFunctions {
     GraftExprBridge.column(AmplitudeEnvelope(
       GraftExprBridge.expression(samples),
       GraftExprBridge.expression(nWindows)))
+  def pcmStats(samples: Column, bits: Column): Column =
+    GraftExprBridge.column(PcmStats(
+      GraftExprBridge.expression(samples), GraftExprBridge.expression(bits)))
+  def autocorrPeak(samples: Column, minLag: Column, maxLag: Column): Column =
+    GraftExprBridge.column(AutocorrPeak(GraftExprBridge.expression(samples),
+      GraftExprBridge.expression(minLag), GraftExprBridge.expression(maxLag)))
+  def resample(samples: Column, srcRate: Column, dstRate: Column): Column =
+    GraftExprBridge.column(Resample(GraftExprBridge.expression(samples),
+      GraftExprBridge.expression(srcRate), GraftExprBridge.expression(dstRate)))
 }

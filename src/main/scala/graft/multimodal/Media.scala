@@ -185,17 +185,6 @@ object Media {
       body: Column => Column): Column =
     explode(transform(filter(array(once), keep), body))
 
-  /** TRUE integral division (Catalyst IntegralDivide == SQL `div`,
-    * truncating toward zero like DuckDB `//`) — Column `/` on longs is
-    * double division, whose exactness would silently depend on operand
-    * magnitude staying below 2^53.
-    */
-  private def ldiv(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        org.apache.spark.sql.GraftExprBridge.expression(a.cast("long")),
-        org.apache.spark.sql.GraftExprBridge.expression(b.cast("long"))))
-
   /** Unified image decode over mixed-container payloads: raw PNM (PGM
     * "P5"/PPM "P6") through the byte-exact [[graft.functions.PnmDecode]]
     * scan, everything else (PNG/JPEG/BMP/GIF) through the JDK-builtin
@@ -272,7 +261,8 @@ object Media {
     * detector), and zero crossings (the coarse pitch/noisiness
     * proxy). Undecodable payloads drop out (decode failure is data).
     *
-    * Everything after the decode is array HOFs over the samples —
+    * After the decode, one compiled pass over the samples
+    * ([[graft.functions.PcmStats]]) yields the four sample statistics —
     * scan-stage codegen, zero shuffle at any scale; energy peaks at
     * 2²² samples · 32768² ≈ 2⁵² — inside a long by construction of
     * the decoder's bomb guard.
@@ -280,10 +270,8 @@ object Media {
   def audioStats(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
     import graft.functions.AudioFunctions._
     // identity bindOnce: decode + null-drop inside the generator (one
-    // evaluation, pushdown-proof), the per-sample statistics downstream
-    // over the generated struct's fields exactly as before — moving
-    // them INTO the lambda body measured SLOWER (interpreted lambda
-    // body vs the mixed codegen/HOF projection Spark builds here)
+    // evaluation, pushdown-proof), the statistics downstream over the
+    // generated struct's fields
     df.select(col(idCol).as("media_id"),
         bindOnce(wavDecode(col(bytesCol).cast("binary")), _.isNotNull)(
           identity).as("__wav"))
@@ -292,38 +280,29 @@ object Media {
         col("__wav.channels").as("channels"),
         col("__wav.bits").as("bits"),
         col("__wav.n_samples").cast("long").as("n_samples"),
-        col("__wav.samples").as("__s"))
-      .withColumn("__hi", when(col("bits") === 16, 32767).otherwise(127))
-      .withColumn("__lo", when(col("bits") === 16, -32768).otherwise(-128))
+        pcmStats(col("__wav.samples"), col("__wav.bits")).as("__st"))
       .select(col("media_id"), col("sample_rate"), col("channels"), col("bits"),
         col("n_samples"),
         expr("n_samples * 1000L div sample_rate").as("duration_ms"),
-        coalesce(array_max(transform(col("__s"),
-          x => when(x < 0, -x).otherwise(x))).cast("long"), lit(0L)).as("peak"),
-        aggregate(col("__s"), lit(0L),
-          (acc, x) => acc + x.cast("long") * x.cast("long")).as("energy"),
-        size(filter(col("__s"),
-          x => x >= col("__hi") || x <= col("__lo"))).cast("long").as("clip_count"),
-        when(col("n_samples") < 2L, lit(0L)).otherwise(
-          size(filter(sequence(lit(1), col("n_samples").cast("int") - 1),
-            i => (element_at(col("__s"), i) < 0) =!=
-              (element_at(col("__s"), i + 1) < 0))).cast("long"))
-          .as("zero_crossings"))
+        col("__st.peak").as("peak"),
+        col("__st.energy").as("energy"),
+        col("__st.clip_count").as("clip_count"),
+        col("__st.zero_crossings").as("zero_crossings"))
   }
 
   /** REAL integer PCM resampling — the standard audio-prep stage
-    * (convert everything to one target rate before featurization),
-    * previously a documented stub: linear interpolation on the exact
-    * rational grid, pure integer arithmetic so any engine replays it
-    * bit-for-bit. Output sample j sits at source position
-    * j·src/dst: idx = (j·src) div dst, rem = (j·src) mod dst,
-    * out[j] = s[idx] + (s[idx+1] − s[idx])·rem div dst (truncating
-    * toward zero on both Spark `div` and DuckDB `//`);
-    * n_out = (n_in − 1)·dst div src + 1, so the last output lands
-    * exactly on the last input. Works for up- and down-sampling.
-    * Everything is scan-stage HOF column algebra over the decoded
-    * raster — no new expression, no shuffle, no allocation beyond the
-    * output array.
+    * (convert everything to one target rate before featurization):
+    * linear interpolation on the exact rational grid, pure integer
+    * arithmetic so any engine replays it bit-for-bit. Output sample j
+    * sits at source position j·src/dst: idx = (j·src) div dst,
+    * rem = (j·src) mod dst, out[j] = s[idx] + (s[idx+1] − s[idx])·rem
+    * div dst (truncating toward zero on both Spark `div` and DuckDB
+    * `//`); n_out = (n_in − 1)·dst div src + 1, so the last output lands
+    * exactly on the last input. Works for up- and down-sampling. The
+    * grid is the compiled [[graft.functions.Resample]] kernel over the
+    * decoded raster, and the summary reads the output array with
+    * compiled expressions — no shuffle, no allocation beyond the output
+    * array.
     *
     * Output: (media_id, src_rate, n_in, n_out, sum_out, min_out,
     * max_out) — the exact integer summary of the resampled signal
@@ -333,9 +312,9 @@ object Media {
   def audioResample(
       df: DataFrame, idCol: String, bytesCol: String, dstRate: Int): DataFrame = {
     import graft.functions.AudioFunctions._
+    import graft.functions.VectorFunctions.arraySum
     require(dstRate >= 1, s"audioResample: dstRate >= 1, got $dstRate")
-    // identity bindOnce, resample + aggregates downstream (see
-    // audioStats for why the work stays OUT of the lambda body)
+    // identity bindOnce, resample + aggregates downstream
     df.select(col(idCol).as("media_id"),
         bindOnce(wavDecode(col(bytesCol).cast("binary")),
           w => w.isNotNull && w.getField("n_samples") >= 1)(
@@ -347,7 +326,7 @@ object Media {
           .as("__r"))
       .select(col("media_id"), col("src_rate"), col("n_in"),
         size(col("__r")).cast("long").as("n_out"),
-        aggregate(col("__r"), lit(0L), (a, x) => a + x.cast("long")).as("sum_out"),
+        arraySum(col("__r")).as("sum_out"),
         array_min(col("__r")).cast("long").as("min_out"),
         array_max(col("__r")).cast("long").as("max_out"))
   }
@@ -356,20 +335,8 @@ object Media {
     * at `dstRate` given the source rate column. See [[audioResample]]
     * for the exact integer contract.
     */
-  def resampleExpr(samples: Column, srcRate: Column, dstRate: Int): Column = {
-    val s = samples
-    val nIn = size(s)
-    // j ranges over 0 .. (n_in-1)*dst div src
-    val lastJ = ldiv((nIn - 1).cast("long") * dstRate, srcRate.cast("long"))
-    transform(sequence(lit(0L), lastJ.cast("long")), { j =>
-      val posNum = j * srcRate.cast("long")
-      val idx = ldiv(posNum, lit(dstRate)).cast("int")
-      val rem = posNum % dstRate
-      val a = element_at(s, idx + 1)
-      val b = element_at(s, least(idx + 2, nIn))
-      (a + ldiv((b - a).cast("long") * rem, lit(dstRate)).cast("int")).cast("int")
-    })
-  }
+  def resampleExpr(samples: Column, srcRate: Column, dstRate: Int): Column =
+    graft.functions.AudioFunctions.resample(samples, srcRate, lit(dstRate))
 
   /** Audio near-duplicate pairs: decode (WavDecode) → 64-window
     * amplitude envelope ([[graft.functions.AmplitudeEnvelope]] — the
@@ -403,11 +370,11 @@ object Media {
     * The audio QA feature behind voiced/unvoiced screens and
     * duplicate-speaker heuristics.
     *
-    * All integer, all array HOFs after the scan-stage decode — the
-    * O(n·L) work (n ≤ 2²² by the decoder's bomb guard, L bounded by
-    * `maxLag` ≤ 2048) runs inside the scan task, no shuffle. Clips
-    * shorter than maxLag+2 samples drop out (no meaningful lag
-    * range), as do undecodables.
+    * All integer: after the scan-stage decode, one compiled kernel
+    * ([[graft.functions.AutocorrPeak]]) runs the O(n·L) work (n ≤ 2²²
+    * by the decoder's bomb guard, L bounded by `maxLag` ≤ 2048) inside
+    * the scan task, no shuffle. Clips shorter than maxLag+2 samples drop
+    * out (no meaningful lag range), as do undecodables.
     */
   def audioPitch(
       df: DataFrame,
@@ -418,26 +385,14 @@ object Media {
     require(minLag >= 1 && maxLag > minLag && maxLag <= 2048,
       s"audioPitch: need 1 <= minLag < maxLag <= 2048, got ($minLag, $maxLag)")
     import graft.functions.AudioFunctions._
-    val lagCorr = transform(sequence(lit(minLag), lit(maxLag)), l =>
-      struct(
-        aggregate(sequence(lit(1), col("__a.__n") - l), lit(0L),
-          (acc, i) => acc +
-            element_at(col("__a.__s"), i).cast("long") *
-            element_at(col("__a.__s"), i + l).cast("long")).as("r"),
-        l.as("lag")))
     df.select(col(idCol).as("media_id"),
         bindOnce(wavDecode(col(bytesCol).cast("binary")),
-          w => w.isNotNull && w.getField("n_samples") >= maxLag + 2)(w =>
-          struct(
-            w.getField("sample_rate").as("sample_rate"),
-            w.getField("n_samples").as("__n"),
-            w.getField("samples").as("__s"))).as("__a"))
-      .withColumn("__best",
-        aggregate(lagCorr, struct(lit(Long.MinValue).as("r"), lit(0).as("lag")),
-          (best, x) => when(x.getField("r") > best.getField("r"), x).otherwise(best)))
+          w => w.isNotNull && w.getField("n_samples") >= maxLag + 2)(
+          identity).as("__wav"))
+      .withColumn("__best", autocorrPeak(col("__wav.samples"), lit(minLag), lit(maxLag)))
       .select(col("media_id"),
         col("__best.lag").as("period"),
-        expr("CAST(__a.sample_rate AS BIGINT) div __best.lag").as("f0_hz"),
+        expr("CAST(__wav.sample_rate AS BIGINT) div __best.lag").as("f0_hz"),
         col("__best.r").as("peak_corr"))
   }
 

@@ -500,7 +500,8 @@ object EventStreams {
     *
     * Thresholds evaluate on the SAME integer formulas as the batch
     * [[graft.multimodal.Media.audioStats]] (duration = n·10³ div
-    * rate; clip share = clips·10⁶ div n), so the stream's verdict for
+    * rate; clip share = clips·10⁶ div n, the clips counted by the same
+    * [[graft.functions.PcmStats]] kernel), so the stream's verdict for
     * any clip equals the batch screen's — the twin contract. State is
     * one Boolean per media_id for re-delivery dedup (NoTimeout:
     * admission decisions must not expire), exactly the
@@ -517,16 +518,14 @@ object EventStreams {
     val scored = clips
       .select(col(idCol).cast("long").as("media_id"),
         wavDecode(col(bytesCol).cast("binary")).as("__wav"))
-      .withColumn("__hi", when(col("__wav.bits") === 16, 32767).otherwise(127))
-      .withColumn("__lo", when(col("__wav.bits") === 16, -32768).otherwise(-128))
       .select(col("media_id"),
         col("__wav").isNotNull.as("__ok"),
         coalesce(expr("CAST(__wav.n_samples AS BIGINT) * 1000L div __wav.sample_rate"),
           lit(0L)).as("duration_ms"),
         coalesce(
           when(col("__wav.n_samples") > 0,
-            size(filter(col("__wav.samples"),
-              x => x >= col("__hi") || x <= col("__lo"))).cast("long") * lit(1000000L)),
+            pcmStats(col("__wav.samples"), col("__wav.bits")).getField("clip_count") *
+              lit(1000000L)),
           lit(0L)).as("__clips_x1m"),
         coalesce(col("__wav.n_samples").cast("long"), lit(0L)).as("__n"))
       .select(col("media_id"), col("__ok"), col("duration_ms"),

@@ -118,6 +118,11 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT graft_array_sum(CAST(NULL AS ARRAY<DOUBLE>)) AS a, " +
         "graft_array_sum(array(1.0D, CAST(NULL AS DOUBLE))) AS b").collect().head
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
+    // an int array sums exactly into a bigint, past the int range
+    val ints = spark.sql(
+      "SELECT graft_array_sum(array(2147483647, 2147483647, -5)) AS a, " +
+        "graft_array_sum(array(1, CAST(NULL AS INT))) AS b").collect().head
+    assert(ints.getLong(0) == 2L * Int.MaxValue - 5 && ints.isNullAt(1))
   }
 
   test("SignLshBuckets matches a scala reference over the same hyperplanes") {

@@ -1026,4 +1026,237 @@ class MediaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.forall(r => r.getAs[Int]("width") == 32 &&
       r.getAs[Int]("n_frames") == 2 && r.getAs[Int]("n_keyframes") == 1))
   }
+
+  /** Seeded clips over the audio kernels' edge cases: 8- and 16-bit with
+    * samples on the rails, n = 0, 1, 2, maxLag+1, maxLag+2 and up to 600,
+    * constant clips (all zero: every lag ties), at four source rates.
+    */
+  private val kernelMaxLag = 64
+  private val kernelRates = Seq(1, 7, 8000, 44100)
+  private lazy val kernelClips: Seq[(Long, Int, Array[Byte])] = {
+    val rng = new scala.util.Random(20261020L)
+    var id = 0L
+    for {
+      bits <- Seq(8, 16)
+      rate <- kernelRates
+      samples <- {
+        val (lo, hi) = if (bits == 16) (-32768, 32767) else (-128, 127)
+        def noise(n: Int) = Seq.fill(n)(rng.nextInt(6) match {
+          case 0 => hi
+          case 1 => lo
+          case 2 => 0
+          case _ => lo + rng.nextInt(hi - lo + 1)
+        })
+        Seq(0, 1, 2, kernelMaxLag + 1, kernelMaxLag + 2, 3 + rng.nextInt(598), 600).map(noise) ++
+          Seq(Seq.fill(kernelMaxLag + 2)(0), Seq.fill(300)(0), Seq.fill(300)(hi),
+            Seq.fill(kernelMaxLag + 2)(lo))
+      }
+    } yield { id += 1; (id, rate, wav(samples, rate = rate, bits = bits)) }
+  }
+
+  private def kernelFrame(rates: Seq[Int]) = {
+    import spark.implicits._
+    kernelClips.filter(c => rates.contains(c._2)).map(c => (c._1, c._3)).toDF("id", "b")
+  }
+
+  private def sameRows(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame) = {
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)))
+    val (g, w) = (got.collect().map(_.toSeq).sortBy(_.toString), want.collect().map(_.toSeq).sortBy(_.toString))
+    assert(g.nonEmpty && g.toSeq == w.toSeq, s"${g.length} vs ${w.length} rows")
+  }
+
+  test("audioStats' kernel equals the lambda formulation on seeded 8/16-bit clips") {
+    val df = kernelFrame(kernelRates)
+    sameRows(Media.audioStats(df, "id", "b"), ReferenceAudio.audioStats(df, "id", "b"))
+  }
+
+  test("audioPitch's kernel equals the lambda formulation, ties to the smallest lag") {
+    val df = kernelFrame(kernelRates)
+    for ((lo, hi) <- Seq((16, kernelMaxLag), (1, 8)))
+      sameRows(Media.audioPitch(df, "id", "b", lo, hi),
+        ReferenceAudio.audioPitch(df, "id", "b", lo, hi))
+    // the all-zero clips tie on every lag: the first one wins
+    val zero = Media.audioPitch(df, "id", "b", 16, kernelMaxLag).filter("peak_corr = 0").collect()
+    assert(zero.nonEmpty && zero.forall(_.getInt(1) == 16), zero.toSeq)
+  }
+
+  test("audioResample's kernel equals the lambda formulation up, down and at equal rates") {
+    for (src <- kernelRates) {
+      val df = kernelFrame(Seq(src))
+      for (dst <- Seq(math.max(1, src / 5), src - src / 3, src, src + src / 2 + 1).distinct)
+        sameRows(Media.audioResample(df, "id", "b", dst),
+          ReferenceAudio.audioResample(df, "id", "b", dst))
+    }
+  }
+
+  test("the audio kernels' interpreted eval equals their generated code") {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+    import graft.functions.{AutocorrPeak, PcmStats, Resample}
+    def same(e: Expression) = {
+      val generated = GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty)
+      val want = CatalystTypeConverters.convertToScala(e.eval(InternalRow.empty), e.dataType)
+      assert(CatalystTypeConverters.convertToScala(generated.get(0, e.dataType), e.dataType) == want,
+        s"$e: $want")
+      want
+    }
+    val rng = new scala.util.Random(7L)
+    val arrays = Seq(0, 1, 2, 3, 65, 66, 600).map(n => Seq.fill(n)(rng.nextInt(65536) - 32768)) ++
+      Seq(Seq.fill(70)(0), Seq.fill(70)(-128))
+    for (a <- arrays) {
+      val s = Literal.create(a, ArrayType(IntegerType, containsNull = false))
+      for (bits <- Seq(8, 16)) same(PcmStats(s, Literal(bits)))
+      for ((lo, hi) <- Seq((16, 64), (1, 8), (0, 3), (5, 1000), (3, 2))) same(AutocorrPeak(s, Literal(lo), Literal(hi)))
+      for (src <- Seq(1, 7, 8000, 44100); dst <- Seq(1, 3, 7, 6000, 8000, 48000) if dst <= 7 * src)
+        same(Resample(s, Literal(src), Literal(dst)))
+    }
+    // a null element, a negative lag and a zero rate read null on both paths
+    val withNull = Literal.create(Seq(1, null, 3), ArrayType(IntegerType, containsNull = true))
+    assert(same(PcmStats(withNull, Literal(16))) == null)
+    assert(same(AutocorrPeak(withNull, Literal(1), Literal(2))) == null)
+    assert(same(Resample(withNull, Literal(8000), Literal(6000))) == null)
+    val one = Literal.create(Seq(1, 2, 3), ArrayType(IntegerType, containsNull = false))
+    assert(same(AutocorrPeak(one, Literal(-1), Literal(2))) == null)
+    assert(same(Resample(one, Literal(0), Literal(6000))) == null)
+  }
+
+  test("the audio operators plan no lambda beyond bindOnce's one-element wrappers") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform,
+      CreateArray, HigherOrderFunction}
+    import spark.implicits._
+    val df = spark.sparkContext.parallelize(Seq((1L, wav(Seq.fill(100)(5))))).toDF("id", "b")
+    def hofs(d: org.apache.spark.sql.DataFrame) =
+      graft.CodegenFallbacks(d).collect { case h: HigherOrderFunction => h }
+    // the helper sees the lambdas the kernels replaced
+    assert(hofs(ReferenceAudio.audioPitch(df, "id", "b", 16, 64)).exists(_.isInstanceOf[ArrayAggregate]))
+    for ((name, d) <- Seq(
+        "audioPitch" -> Media.audioPitch(df, "id", "b", 16, 64),
+        "audioResample" -> Media.audioResample(df, "id", "b", 6000),
+        "audioStats" -> Media.audioStats(df, "id", "b"))) {
+      val found = hofs(d)
+      assert(found.size == 2, s"$name: $found")
+      assert(found.forall {
+        case ArrayFilter(CreateArray(Seq(_), _), _) => true
+        case ArrayTransform(ArrayFilter(CreateArray(Seq(_), _), _), _) => true
+        case _ => false
+      }, s"$name: $found")
+    }
+  }
+}
+
+/** The audio operators as lambda (higher-order function) column algebra,
+  * kept verbatim as the reference for the compiled kernels that replaced
+  * them in [[Media]]: [[graft.functions.PcmStats]],
+  * [[graft.functions.AutocorrPeak]] and [[graft.functions.Resample]].
+  */
+private object ReferenceAudio {
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  private def bindOnce(once: Column, keep: Column => Column)(
+      body: Column => Column): Column =
+    explode(transform(filter(array(once), keep), body))
+
+  private def ldiv(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftExprBridge.column(
+      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+        org.apache.spark.sql.GraftExprBridge.expression(a.cast("long")),
+        org.apache.spark.sql.GraftExprBridge.expression(b.cast("long"))))
+
+  def audioStats(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
+    import graft.functions.AudioFunctions._
+    df.select(col(idCol).as("media_id"),
+        bindOnce(wavDecode(col(bytesCol).cast("binary")), _.isNotNull)(
+          identity).as("__wav"))
+      .select(col("media_id"),
+        col("__wav.sample_rate").as("sample_rate"),
+        col("__wav.channels").as("channels"),
+        col("__wav.bits").as("bits"),
+        col("__wav.n_samples").cast("long").as("n_samples"),
+        col("__wav.samples").as("__s"))
+      .withColumn("__hi", when(col("bits") === 16, 32767).otherwise(127))
+      .withColumn("__lo", when(col("bits") === 16, -32768).otherwise(-128))
+      .select(col("media_id"), col("sample_rate"), col("channels"), col("bits"),
+        col("n_samples"),
+        expr("n_samples * 1000L div sample_rate").as("duration_ms"),
+        coalesce(array_max(transform(col("__s"),
+          x => when(x < 0, -x).otherwise(x))).cast("long"), lit(0L)).as("peak"),
+        aggregate(col("__s"), lit(0L),
+          (acc, x) => acc + x.cast("long") * x.cast("long")).as("energy"),
+        size(filter(col("__s"),
+          x => x >= col("__hi") || x <= col("__lo"))).cast("long").as("clip_count"),
+        when(col("n_samples") < 2L, lit(0L)).otherwise(
+          size(filter(sequence(lit(1), col("n_samples").cast("int") - 1),
+            i => (element_at(col("__s"), i) < 0) =!=
+              (element_at(col("__s"), i + 1) < 0))).cast("long"))
+          .as("zero_crossings"))
+  }
+
+  def audioResample(
+      df: DataFrame, idCol: String, bytesCol: String, dstRate: Int): DataFrame = {
+    import graft.functions.AudioFunctions._
+    require(dstRate >= 1, s"audioResample: dstRate >= 1, got $dstRate")
+    df.select(col(idCol).as("media_id"),
+        bindOnce(wavDecode(col(bytesCol).cast("binary")),
+          w => w.isNotNull && w.getField("n_samples") >= 1)(
+          identity).as("__wav"))
+      .select(col("media_id"),
+        col("__wav.sample_rate").as("src_rate"),
+        col("__wav.n_samples").cast("long").as("n_in"),
+        resampleExpr(col("__wav.samples"), col("__wav.sample_rate"), dstRate)
+          .as("__r"))
+      .select(col("media_id"), col("src_rate"), col("n_in"),
+        size(col("__r")).cast("long").as("n_out"),
+        aggregate(col("__r"), lit(0L), (a, x) => a + x.cast("long")).as("sum_out"),
+        array_min(col("__r")).cast("long").as("min_out"),
+        array_max(col("__r")).cast("long").as("max_out"))
+  }
+
+  def resampleExpr(samples: Column, srcRate: Column, dstRate: Int): Column = {
+    val s = samples
+    val nIn = size(s)
+    // j ranges over 0 .. (n_in-1)*dst div src
+    val lastJ = ldiv((nIn - 1).cast("long") * dstRate, srcRate.cast("long"))
+    transform(sequence(lit(0L), lastJ.cast("long")), { j =>
+      val posNum = j * srcRate.cast("long")
+      val idx = ldiv(posNum, lit(dstRate)).cast("int")
+      val rem = posNum % dstRate
+      val a = element_at(s, idx + 1)
+      val b = element_at(s, least(idx + 2, nIn))
+      (a + ldiv((b - a).cast("long") * rem, lit(dstRate)).cast("int")).cast("int")
+    })
+  }
+
+  def audioPitch(
+      df: DataFrame,
+      idCol: String,
+      bytesCol: String,
+      minLag: Int,
+      maxLag: Int): DataFrame = {
+    require(minLag >= 1 && maxLag > minLag && maxLag <= 2048,
+      s"audioPitch: need 1 <= minLag < maxLag <= 2048, got ($minLag, $maxLag)")
+    import graft.functions.AudioFunctions._
+    val lagCorr = transform(sequence(lit(minLag), lit(maxLag)), l =>
+      struct(
+        aggregate(sequence(lit(1), col("__a.__n") - l), lit(0L),
+          (acc, i) => acc +
+            element_at(col("__a.__s"), i).cast("long") *
+            element_at(col("__a.__s"), i + l).cast("long")).as("r"),
+        l.as("lag")))
+    df.select(col(idCol).as("media_id"),
+        bindOnce(wavDecode(col(bytesCol).cast("binary")),
+          w => w.isNotNull && w.getField("n_samples") >= maxLag + 2)(w =>
+          struct(
+            w.getField("sample_rate").as("sample_rate"),
+            w.getField("n_samples").as("__n"),
+            w.getField("samples").as("__s"))).as("__a"))
+      .withColumn("__best",
+        aggregate(lagCorr, struct(lit(Long.MinValue).as("r"), lit(0).as("lag")),
+          (best, x) => when(x.getField("r") > best.getField("r"), x).otherwise(best)))
+      .select(col("media_id"),
+        col("__best.lag").as("period"),
+        expr("CAST(__a.sample_rate AS BIGINT) div __best.lag").as("f0_hz"),
+        col("__best.r").as("peak_corr"))
+  }
 }
