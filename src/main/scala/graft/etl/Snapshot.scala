@@ -3600,10 +3600,6 @@ final class SnapshotStore(root: String,
       stagedBytes(rel))
   }
 
-  private def footerMinMax(p: org.apache.hadoop.fs.Path, column: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[(Long, Long)] =
-    footerStatsMulti(p, Seq(column), conf).get(column)
-
   /** Min/max of several integer-physical columns from ONE metadata-only
     * footer read — the multi-column variant behind comma-list stats
     * properties. Columns missing, non-integer, or all-null are simply

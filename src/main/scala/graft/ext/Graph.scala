@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, GraftStreamBridge}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftStreamBridge}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -34,14 +35,11 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Pin a STATIC relation of an iterative operator: materialized,
-    * hash-partitioned on `keys` and sorted by them within each
-    * partition, with that layout DECLARED on the returned frame (see
-    * [[declare]]), so a per-round join or aggregate keyed the same way
-    * reads the pin with no Exchange and no Sort. The pin is its frame:
-    * [[free]] it when it does not back the returned frame (otherwise
-    * the ContextCleaner + the session's 1min periodic GC reclaim it,
-    * the standing checkpoint-block contract).
+  /** Pin a STATIC relation of an iterative operator in scope `p`:
+    * materialized, hash-partitioned on `keys` and sorted by them within
+    * each partition, with that layout DECLARED on the returned frame
+    * (see [[declare]]), so a per-round join or aggregate keyed the same
+    * way reads the pin with no Exchange and no Sort.
     *
     * Two passes, both planned as the session plans everything else.
     * Pass 1 materializes the relation once and reads its real stored
@@ -51,14 +49,14 @@ object Graph {
     * co-partitioned per-round join must match the pin's partitioning
     * exactly, so AQE can never coalesce those round stages — a pin at
     * raw shuffle.partitions forced 3×32-task stages per round over an
-    * 0.4 MB sf0.1 graph (ProbeJobs: round wall ~0.5 s of pure task
-    * overhead, 2× the un-pinned shape). Deriving the count from the
-    * measured size — one partition per advisoryPartitionSizeInBytes,
-    * the same target AQE coalesces to — keeps rounds at the task
-    * count the data warrants at ANY scale, capped at
-    * shuffle.partitions (the per-deploy knob). The declared SORT lets
-    * per-round sort-merge joins read the pinned side with no Sort
-    * either (the bucketed+sorted-table shape); partitioning alone
+    * 0.4 MB sf0.1 graph (a per-job listener probe: round wall ~0.5 s
+    * of pure task overhead, 2× the un-pinned shape). Deriving the count
+    * from the measured size — one partition per
+    * advisoryPartitionSizeInBytes, the same target AQE coalesces to —
+    * keeps rounds at the task count the data warrants at ANY scale,
+    * capped at shuffle.partitions (the per-deploy knob). The declared
+    * SORT lets per-round sort-merge joins read the pinned side with no
+    * Sort either (the bucketed+sorted-table shape); partitioning alone
     * measured 20-50% slower (q205/q153) — it traded the round's
     * Exchange for an edge-sized per-round SortExec.
     *
@@ -68,10 +66,10 @@ object Graph {
     * job that reads the pin — one Spark job for the pass, as an eager
     * checkpoint of a shuffle-free plan would be.
     */
-  private[ext] def pinByKey(df: DataFrame, keys: String*): DataFrame = {
+  private[ext] def pinByKey(p: Pins, df: DataFrame, keys: String*): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val flat = df.localCheckpoint(eager = true)
+    val flat = p.pin(df, eager = true)
     val flatId = root(flat).rdd.id
     val bytes = sc.getRDDStorageInfo
       .filter(_.id == flatId).map(i => i.memSize + i.diskSize).sum
@@ -87,10 +85,10 @@ object Graph {
       math.min(advisory, bytes / math.max(1, sc.defaultParallelism)))
     val n = math.max(1L, math.min(maxN.toLong, (bytes + target - 1) / target)).toInt
     val k = keys.map(col)
-    // the sized pin replaces the flat one, which goes on every exit path
-    try declare(flat.repartition(n, k: _*).sortWithinPartitions(k: _*).localCheckpoint(eager = false),
+    val sized = declare(p.pin(flat.repartition(n, k: _*).sortWithinPartitions(k: _*)),
       keys, n, sorted = true)
-    finally free(flat)
+    p.free(flat) // the sized pin replaces the flat one
+    sized
   }
 
   /** The static relations of [[pageRank]] and [[personalizedPageRank]]:
@@ -98,15 +96,14 @@ object Graph {
     * degree aggregate reads the pinned edges with no Exchange, so its
     * blocks keep the edges' partitions; it is pinned with that layout
     * declared (unsorted: a hash aggregate emits no order) and feeds two
-    * joins per round plus the rank init. Both back the caller's result.
+    * joins per round plus the rank init.
     */
   private def pinEdgesAndDegrees(
-      edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
-    val e = pinByKey(
+      p: Pins, edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
+    val e = pinByKey(p,
       edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst")).distinct(), "__src")
-    try (e, declare(e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")).localCheckpoint(),
+    (e, declare(p.pin(e.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), eager = true),
       Seq("__src"), root(e).rdd.getNumPartitions, sorted = false))
-    catch { case t: Throwable => free(e); throw t }
   }
 
   /** Re-root a checkpointed `pin` under the layout of the plan that
@@ -117,8 +114,8 @@ object Graph {
     * instead of read back from the executed plan, and no session conf
     * is touched. A declaration the blocks do not honour would let a
     * keyed join pair rows from different partitions, so the RDD's
-    * partition count must equal `n`; a mismatch frees the pin and
-    * fails. The one exception is an EMPTY pin: adaptive planning
+    * partition count must equal `n`; a mismatch fails (and the
+    * [[withPins]] scope holding the pin frees it). The one exception is an EMPTY pin: adaptive planning
     * replaces an empty relation by a zero-partition scan, which has no
     * layout to declare, so it is returned as it is.
     */
@@ -126,11 +123,9 @@ object Graph {
     val l = root(pin)
     val got = l.rdd.getNumPartitions
     if (got == 0) pin
-    else if (got != n) {
-      free(pin)
-      throw new IllegalStateException(
-        s"pin on ${keys.mkString(", ")}: declared $n partitions, materialized $got")
-    } else {
+    else if (got != n) throw new IllegalStateException(
+      s"pin on ${keys.mkString(", ")}: declared $n partitions, materialized $got")
+    else {
       val attrs = keys.map(k => l.output.find(_.name == k).get)
       val partitioning = if (n == 1) SinglePartition else HashPartitioning(attrs, n)
       val ordering = if (sorted) attrs.map(SortOrder(_, Ascending)) else Nil
@@ -141,18 +136,76 @@ object Graph {
     }
   }
 
-  /** Drop pins' blocks now rather than when a driver GC proves their
-    * RDDs unreachable. A pin is a frame whose logical root is a
-    * checkpoint's LogicalRDD — what `localCheckpoint`, [[pinByKey]] and
-    * [[declare]] return — and its blocks are that root's RDD; any other
-    * frame is refused.
-    */
-  private[ext] def free(pins: DataFrame*): Unit = pins.foreach(root(_).rdd.unpersist(false))
-
   private def root(pin: DataFrame): LogicalRDD = pin.queryExecution.logical match {
     case l: LogicalRDD => l
     case p => throw new IllegalArgumentException(
       s"not a pin: the frame's logical root is ${p.nodeName}, not a LogicalRDD")
+  }
+
+  /** The pins one call of an iterative operator holds. Every iterative
+    * operator takes its checkpoints through one of these (see
+    * [[withPins]]), and the scope keeps the one rule they share: every
+    * pin is freed on every exit path, exceptions and cancellations
+    * included, except the pins that back the returned frame. A local
+    * checkpoint's blocks are otherwise freed only once a driver GC
+    * proves its RDD unreachable, which on a big heap can be never.
+    *
+    *  - `pin(df)` checkpoints `df` LAZILY and holds the pin; its blocks
+    *    materialize inside the first job that reads it.
+    *    `pin(df, eager = true)` then runs that job at once, as one RDD
+    *    action on the held pin: the job an eager `localCheckpoint` runs,
+    *    without its gap (when an eager checkpoint's own job fails, no
+    *    frame comes back to free, and its RDD stays registered until a
+    *    driver GC).
+    *  - `hold(pin)` holds a frame that already is a pin. [[hits]]'s
+    *    half-rounds are the one eager `localCheckpoint` left, because
+    *    `Dataset.observe` reports only from the checkpoint's own SQL
+    *    execution; a failed half-round job there keeps the gap.
+    *  - `free(pins*)` drops pins now, once every job that reads them has
+    *    run.
+    *  - `keep(pins*)` marks the pins that back the returned frame.
+    *
+    * When the body returns, [[withPins]] frees every held pin that is
+    * not kept; when it throws, every held pin. A pin is a frame whose
+    * logical root is a checkpoint's LogicalRDD (what `localCheckpoint`,
+    * `pin` and [[declare]] return), and any other frame is refused. It
+    * is tracked by that root's RDD, so a [[declare]]d re-rooting of a
+    * held pin is that pin.
+    * The scope knows only the frames handed to it: it diffs no global
+    * RDD registry and touches no session conf.
+    */
+  private[ext] final class Pins private[Graph] () {
+    private val held = scala.collection.mutable.LinkedHashSet.empty[RDD[_]]
+    private val backing = scala.collection.mutable.Set.empty[RDD[_]]
+
+    def pin(df: DataFrame, eager: Boolean = false): DataFrame = {
+      val ck = hold(df.localCheckpoint(eager = false))
+      val rdd = root(ck).rdd
+      // an eager checkpoint's job covers the partitions it lacks: none
+      // when adaptive planning emptied the relation to zero partitions
+      if (eager && rdd.getNumPartitions > 0) rdd.count()
+      ck
+    }
+
+    def hold(pin: DataFrame): DataFrame = { held += root(pin).rdd; pin }
+
+    def free(pins: DataFrame*): Unit = pins.map(root(_).rdd).foreach { rdd =>
+      rdd.unpersist(false)
+      held -= rdd
+    }
+
+    def keep(pins: DataFrame*): Unit = backing ++= pins.map(root(_).rdd)
+
+    private[Graph] def release(all: Boolean): Unit =
+      held.foreach(rdd => if (all || !backing(rdd)) rdd.unpersist(false))
+  }
+
+  /** Run `body` in a fresh [[Pins]] scope. */
+  private[ext] def withPins[T](body: Pins => T): T = {
+    val p = new Pins
+    val out = try body(p) catch { case t: Throwable => p.release(all = true); throw t }
+    p.release(all = false)
+    out
   }
 
   /** A byte-size session conf, parsed as Spark parses it: a leading `-`
@@ -174,70 +227,46 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxIter: Int = 25): DataFrame = {
-    // localCheckpoint blocks are freed by the ContextCleaner only
-    // after a DRIVER GC proves the RDD unreachable — on a big heap that
-    // can be "never", so each superseded round's blocks are unpersisted
-    // EXPLICITLY the moment the next round is materialized. The
-    // checkpoints are LAZY: the blocks materialize at the round's
-    // count() action.
+      maxIter: Int = 25): DataFrame = withPins { p =>
     val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
     // undirected: keep both orientations so one join propagates both
     // ways; pinned CO-PARTITIONED on the round join key so each round
     // exchanges only the node-sized label state, never the edges
-    val bidir = pinByKey(
+    val bidir = pinByKey(p,
       e.union(e.select(col("d").as("s"), col("s").as("d")))
         .filter(col("s") =!= col("d"))
         .distinct(), "s")
     // Initial labels fold the first relax in: comp = min(id, neighbors).
     // The plain id-labeled start would spend a whole round reaching this.
-    var lbl = bidir.groupBy(col("s").as("id"))
-      .agg(least(min(col("d")), col("s")).as("comp"))
-      .localCheckpoint(false)
-    // every label generation currently pinned — pins leave this set
-    // ONLY via free(), so a mid-round failure (e.g. the count()
-    // aborting after the new round's checkpoint registered) still
-    // frees everything in the finally
-    var live = Set(lbl)
+    var lbl = p.pin(bidir.groupBy(col("s").as("id"))
+      .agg(least(min(col("d")), col("s")).as("comp")))
     var iter = 0
     var changed = 1L
-    var converged = false
-    try {
-      while (changed > 0 && iter < maxIter) {
-        val offers = bidir
-          .join(lbl.withColumnRenamed("id", "s"), "s")
-          .select(col("d").as("id"), col("comp"), lit(null).cast("long").as("__old"))
-        // __old rides the round through (exactly one lbl row per id, so
-        // max-ignoring-nulls recovers it) — convergence is then a filter
-        // on the checkpointed output, not a second join against lbl
-        val relaxed = lbl.select(col("id"), col("comp"), col("comp").as("__old"))
-          .union(offers)
-          .groupBy("id").agg(min("comp").as("comp"), max("__old").as("__old"))
-        // every comp value is itself a node id, so the jump join is total
-        val jumped = relaxed // truncate lineage: consumed twice
-          .join(
-            relaxed.select(col("id").as("comp"), col("comp").as("__cc")),
-            Seq("comp"))
-          .select(col("id"), col("__cc").as("comp"), col("__old"))
-          .localCheckpoint(false)
-        live += jumped
-        changed = jumped.filter(col("comp") =!= col("__old")).count()
-        free(lbl) // previous round fully consumed — drop its blocks now
-        live -= lbl
-        lbl = jumped
-        iter += 1
-      }
-      require(changed == 0,
-        s"connectedComponents: no fixpoint after $maxIter rounds (graph diameter > 2^$maxIter?)")
-      converged = true
-      lbl.select("id", "comp")
-    } finally {
-      // explicit-free invariant holds on error paths too: the edge
-      // relation is always done with; label-generation blocks are kept
-      // only when they back the returned fixpoint
-      free(bidir)
-      if (!converged) free(live.toSeq: _*)
+    while (changed > 0 && iter < maxIter) {
+      val offers = bidir
+        .join(lbl.withColumnRenamed("id", "s"), "s")
+        .select(col("d").as("id"), col("comp"), lit(null).cast("long").as("__old"))
+      // __old rides the round through (exactly one lbl row per id, so
+      // max-ignoring-nulls recovers it) — convergence is then a filter
+      // on the checkpointed output, not a second join against lbl
+      val relaxed = lbl.select(col("id"), col("comp"), col("comp").as("__old"))
+        .union(offers)
+        .groupBy("id").agg(min("comp").as("comp"), max("__old").as("__old"))
+      // every comp value is itself a node id, so the jump join is total
+      val jumped = p.pin(relaxed
+        .join(
+          relaxed.select(col("id").as("comp"), col("comp").as("__cc")),
+          Seq("comp"))
+        .select(col("id"), col("__cc").as("comp"), col("__old")))
+      changed = jumped.filter(col("comp") =!= col("__old")).count()
+      p.free(lbl) // previous round fully consumed — drop its blocks now
+      lbl = jumped
+      iter += 1
     }
+    require(changed == 0,
+      s"connectedComponents: no fixpoint after $maxIter rounds (graph diameter > 2^$maxIter?)")
+    p.keep(lbl)
+    lbl.select("id", "comp")
   }
 
   /** Damped PageRank over an edge list, a FIXED number of iterations,
@@ -272,11 +301,10 @@ object Graph {
     * relation is locally checkpointed ONCE and re-read each iteration
     * — without that every iteration would recompute the whole
     * upstream edge derivation (joins, distinct) from scratch, iters×
-    * over. The blocks are freed by the ContextCleaner once the result
-    * is unreachable (GraftSession runs periodic driver GC for exactly
-    * this). Driver-side actions: the checkpoint materialization and
-    * the node COUNT (a scalar, same contract as
-    * [[connectedComponents]]'s convergence count).
+    * over. Those pins back the returned frame (see [[withPins]]).
+    * Driver-side actions: the checkpoint materialization and the node
+    * COUNT (a scalar, same contract as [[connectedComponents]]'s
+    * convergence count). The rounds are [[rankRounds]].
     */
   def pageRank(
       edges: DataFrame,
@@ -285,58 +313,75 @@ object Graph {
       iters: Int,
       dampPpm: Long = 850000L,
       rankUnit: Long = 1000000L): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"pageRank: iters in [1,50], got $iters")
-    require(dampPpm >= 0L && dampPpm <= 1000000L,
-      s"pageRank: dampPpm in [0, 1e6], got $dampPpm")
-    require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L &&
-      rankUnit <= 1000000000000L,
-      s"pageRank: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
-    // static relations pinned CO-PARTITIONED on the per-round join key
-    // (see [[pinEdgesAndDegrees]]): each of the `iters` rounds then
-    // exchanges only the node-sized rank state, never the edge relation
-    // (guide-§2.4 shape — the edge Exchange used to run every round)
-    val (e, deg) = pinEdgesAndDegrees(edges, srcCol, dstCol)
-    // Each round adds 3 joins to the rank lineage; at iters=50 an
-    // uncheckpointed chain would nest a 150-join analyzer tree and a
-    // task retry would recompute the whole history. Cadence checkpoint:
-    // every 5 rounds truncate the lineage (materialized by an explicit
-    // count) and free the superseded round's blocks — the same
-    // explicit-free invariant as connectedComponents. The final round's
-    // blocks are kept: they back the returned (lazy) relation, as do e
-    // and deg, so those are freed only when the call throws.
-    var cks = Vector.empty[DataFrame] // live cadence checkpoints, oldest first
-    try {
+    requireRankArgs("pageRank", iters, dampPpm, rankUnit)
+    withPins { p =>
+      val (e, deg) = pinEdgesAndDegrees(p, edges, srcCol, dstCol)
       val n = deg.count()
       require(n > 0, "pageRank: no edges")
-      require(rankUnit / n >= 100L,
-        s"pageRank: rankUnit=$rankUnit gives only ${rankUnit / n} units of rank per node " +
-          s"for $n nodes (need >= 100, or floor-truncation silently decays every rank " +
-          "toward 0); raise rankUnit (e.g. 10^9 for graphs past ~10^4 nodes)")
-      var r = deg.select(col("__src").as("node"), lit(rankUnit / n).as("rank_ppm"))
-      val baseR = (rankUnit / 1000000L * (1000000L - dampPpm)) / n
-      for (i <- 1 to iters) {
-        val inflow = e
-          .join(r.withColumnRenamed("node", "__src"), "__src")
-          .join(deg, "__src")
-          .select(col("__dst"), expr("rank_ppm div __deg").as("__c"))
-          .groupBy(col("__dst"))
-          .agg(sum(col("__c")).as("__s"))
-        r = deg.select(col("__src").as("node"))
-          .join(inflow.withColumnRenamed("__dst", "node"), Seq("node"), "left")
-          .select(col("node"),
-            (lit(baseR) + expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L"))
-              .as("rank_ppm"))
-        if (i % 5 == 0 && i < iters) {
-          cks :+= r.localCheckpoint(false)
-          r = cks.last
-          r.count()
-          if (cks.size > 1) { free(cks.head); cks = cks.tail }
-        }
-      }
-      r
-    } catch {
-      case t: Throwable => free(Seq(e, deg) ++ cks: _*); throw t
+      requireRankUnit("pageRank", rankUnit, n, "node")
+      rankRounds(p, e, deg,
+        deg.select(col("__src").as("node"), lit(rankUnit / n).as("rank_ppm")),
+        lit((rankUnit / 1000000L * (1000000L - dampPpm)) / n), None, iters, dampPpm)
     }
+  }
+
+  private def requireRankArgs(op: String, iters: Int, dampPpm: Long, rankUnit: Long): Unit = {
+    require(iters >= 1 && iters <= 50, s"$op: iters in [1,50], got $iters")
+    require(dampPpm >= 0L && dampPpm <= 1000000L, s"$op: dampPpm in [0, 1e6], got $dampPpm")
+    // the restart term floors rankUnit/1e6 FIRST, so a rankUnit below
+    // 1e6 (or not a multiple of it) silently zeroes it and all rank
+    // mass decays to 0 over the rounds
+    require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L && rankUnit <= 1000000000000L,
+      s"$op: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
+  }
+
+  /** The resolution bound of [[pageRank]]: `rankUnit` shared by `n`
+    * holders of the initial mass must leave each ≥ 100 units. */
+  private def requireRankUnit(op: String, rankUnit: Long, n: Long, holder: String): Unit =
+    require(rankUnit / n >= 100L,
+      s"$op: rankUnit=$rankUnit gives only ${rankUnit / n} units of rank per $holder " +
+        s"for $n ${holder}s (need >= 100, or floor-truncation silently decays every rank " +
+        "toward 0); raise rankUnit (e.g. 10^9 for graphs past ~10^4 nodes)")
+
+  /** The round loop of [[pageRank]] and [[personalizedPageRank]], from
+    * the initial ranks `r0` (node, rank_ppm) over the pinned edges `e`
+    * and out-degrees `deg`: per round, inflow = Σ rank div out-degree
+    * per destination, and rank = `restart` + dampPpm · inflow div 10⁶.
+    * `restart` may read `__seed`, the mark `gate` left-joins onto the
+    * nodes. Each round adds 3 joins to the rank lineage; at iters = 50
+    * an uncheckpointed chain would nest a 150-join analyzer tree and a
+    * task retry would recompute the whole history, so every 5 rounds
+    * the ranks are pinned (materialized by a count) and the superseded
+    * cadence pin freed. The last cadence pin, `e` and `deg` back the
+    * returned (lazy) relation.
+    */
+  private def rankRounds(
+      p: Pins, e: DataFrame, deg: DataFrame, r0: DataFrame,
+      restart: Column, gate: Option[DataFrame], iters: Int, dampPpm: Long): DataFrame = {
+    var r = r0
+    var cadence = Option.empty[DataFrame]
+    for (i <- 1 to iters) {
+      val inflow = e
+        .join(r.withColumnRenamed("node", "__src"), "__src")
+        .join(deg, "__src")
+        .select(col("__dst"), expr("rank_ppm div __deg").as("__c"))
+        .groupBy(col("__dst"))
+        .agg(sum(col("__c")).as("__s"))
+      val nodes = deg.select(col("__src").as("node"))
+        .join(inflow.withColumnRenamed("__dst", "node"), Seq("node"), "left")
+      r = gate.fold(nodes)(nodes.join(_, Seq("node"), "left"))
+        .select(col("node"),
+          (restart + expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L")).as("rank_ppm"))
+      if (i % 5 == 0 && i < iters) {
+        val ck = p.pin(r)
+        ck.count()
+        p.free(cadence.toSeq: _*)
+        cadence = Some(ck)
+        r = ck
+      }
+    }
+    p.keep(Seq(e, deg) ++ cadence: _*)
+    r
   }
 
   /** HITS hubs & authorities (Kleinberg JACM'99): mutual-reinforcement
@@ -378,8 +423,8 @@ object Graph {
     * side) it is a plain join, and every half-round re-shuffles the
     * edges — the price of dropping the per-key edge pins, which cost
     * two eager pins and a conf flip on every call at catalog sizes.
-    * Only the last two half-round checkpoints stay live (they back the
-    * returned frame); every pin is freed on every exit path.
+    * Only the last two half-round checkpoints stay live: they back
+    * the returned frame.
     */
   def hits(
       edges: DataFrame,
@@ -391,54 +436,50 @@ object Graph {
     val dec = DecimalType(38, 0)
     val spark = edges.sparkSession
     val bcastBytes = confBytes(spark, "spark.sql.autoBroadcastJoinThreshold", "10MB")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct()
-      .localCheckpoint(false)
-    var live = Vector.empty[DataFrame] // half-round checkpoints, oldest first
-    // eager-checkpoint a raw (node, __r) aggregate; returns it ℓ∞-
-    // normalized to ppm as `as`, and its row count
-    def half(raw: DataFrame, as: String): (DataFrame, Long) = {
-      val obs = new org.apache.spark.sql.Observation()
-      val ck = raw.observe(obs, max(col("__r")).as("mx"), count(lit(1)).as("n"))
-        .localCheckpoint(eager = true)
-      live :+= ck
-      if (live.size > 2) { free(live.head); live = live.tail }
-      val m = obs.get
-      val mx = Option(m("mx")).fold("NULL")(_.asInstanceOf[java.math.BigDecimal].toPlainString)
-      (ck.select(col("node"),
-        expr(s"CAST(__r * 1000000 div CAST($mx AS DECIMAL(38,0)) AS BIGINT)").as(as)),
-        m("n").asInstanceOf[Long])
-    }
-    // one half-round: `state` (node-keyed, `rows` rows) joins the
-    // edges on `on`, its `score` sums per `by` node
-    def step(state: DataFrame, rows: Long, on: String, by: String,
-        score: String, as: String): (DataFrame, Long) = {
-      val keyed = state.withColumnRenamed("node", on)
-      val side = if (rows * keyed.schema.defaultSize <= bcastBytes) broadcast(keyed) else keyed
-      half(e.join(side, on)
-        .groupBy(col(by).as("node")).agg(sum(col(score).cast(dec)).as("__r")), as)
-    }
-    var ok = false
-    try {
+    withPins { p =>
+      val e = p.pin(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).distinct())
+      // a half-round's pin, its scores ℓ∞-normalized to ppm, its rows
+      case class Half(pin: DataFrame, scores: DataFrame, rows: Long)
+      // eager-checkpoint a raw (node, __r) aggregate, normalized as `as`
+      def half(raw: DataFrame, as: String): Half = {
+        val obs = new org.apache.spark.sql.Observation()
+        val ck = p.hold(raw.observe(obs, max(col("__r")).as("mx"), count(lit(1)).as("n"))
+          .localCheckpoint(eager = true))
+        val m = obs.get
+        val mx = Option(m("mx")).fold("NULL")(_.asInstanceOf[java.math.BigDecimal].toPlainString)
+        Half(ck, ck.select(col("node"),
+          expr(s"CAST(__r * 1000000 div CAST($mx AS DECIMAL(38,0)) AS BIGINT)").as(as)),
+          m("n").asInstanceOf[Long])
+      }
+      // one half-round: the `state` scores join the edges on `on`, its
+      // `score` sums per `by` node
+      def step(state: Half, on: String, by: String, score: String, as: String): Half = {
+        val keyed = state.scores.withColumnRenamed("node", on)
+        val side =
+          if (state.rows * keyed.schema.defaultSize <= bcastBytes) broadcast(keyed) else keyed
+        half(e.join(side, on)
+          .groupBy(col(by).as("node")).agg(sum(col(score).cast(dec)).as("__r")), as)
+      }
       // a destination reached only by null sources has a null sum: it
       // counts toward the emptiness check but is no authority
-      val (a1, nA) = half(e.groupBy(col("__d").as("node"))
+      val a1 = half(e.groupBy(col("__d").as("node"))
         .agg(sum(when(col("__s").isNotNull, lit(1000000L)).cast(dec)).as("__r")), "a")
-      require(nA > 0, "hits: no edges")
-      var auth = a1.filter(col("a").isNotNull)
-      var (hub, nH) = step(auth, nA, "__d", "__s", "a", "h")
+      require(a1.rows > 0, "hits: no edges")
+      var auth = a1.copy(scores = a1.scores.filter(col("a").isNotNull))
+      var hub = step(auth, "__d", "__s", "a", "h")
+      // a half-round reads only the one before it; the last two back
+      // the returned frame
       for (_ <- 2 to iters) {
-        val (a, na) = step(hub, nH, "__s", "__d", "h", "a")
-        val (h, nh) = step(a, na, "__d", "__s", "a", "h")
-        auth = a; hub = h; nH = nh
+        val a = step(hub, "__s", "__d", "h", "a")
+        p.free(auth.pin)
+        val h = step(a, "__d", "__s", "a", "h")
+        p.free(hub.pin)
+        auth = a; hub = h
       }
-      ok = true
-      auth.select(lit("auth").as("side"), col("node"), col("a").as("score_ppm"))
+      p.keep(auth.pin, hub.pin)
+      auth.scores.select(lit("auth").as("side"), col("node"), col("a").as("score_ppm"))
         .unionByName(
-          hub.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
-    } finally {
-      // the returned frame reads only the last two half-rounds' blocks
-      free(e)
-      if (!ok) free(live: _*)
+          hub.scores.select(lit("hub").as("side"), col("node"), col("h").as("score_ppm")))
     }
   }
 
@@ -463,8 +504,7 @@ object Graph {
     * Scale: the gated transition relation is checkpointed once
     * (iters consumers); each round is one keyed join + one aggregate
     * on a |states|²-bounded relation, state is one row per state. The
-    * superseded round's blocks are freed one round later, and every
-    * pin is freed on every exit path, exceptions included.
+    * superseded round's blocks are freed one round later.
     */
   def stationaryDistribution(
       trans: DataFrame,
@@ -475,30 +515,22 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"stationaryDistribution: iters in [1,50], got $iters")
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    // pins leave these sets only via free: `pins` never back the
-    // result, `kept` (states + the live round) do unless a call throws
-    var pins = Set.empty[DataFrame]
-    var kept = Set.empty[DataFrame]
-    var ok = false
-    try {
+    withPins { p =>
       // the projected transition relation feeds THREE chains before the
       // rounds start (states' distinct, the known-state gate, and the
       // dangling anti-join reads the gate again) — unpinned, the whole
       // upstream derivation (for q261: a window over the events corpus)
       // re-executed per consumer; pin it once (the q37 multi-consumer
       // shape), freed with the transition pin after the rounds
-      val t0 = trans.select(col(fromCol).cast("string").as("__f"),
-          col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p"))
-        .localCheckpoint(false)
-      pins += t0
+      val t0 = p.pin(trans.select(col(fromCol).cast("string").as("__f"),
+        col(toCol).cast("string").as("__t"), col(probPpbCol).cast("long").as("__p")))
       // states = every from-state; transitions gated to known states;
       // a state whose every outgoing edge leaves the chain (dangling
       // after the gate) gets an implicit self-loop so its mass persists
       // instead of annihilating the normalizer — the pageRank dangling-
       // node treatment. Blocks stay live for the returned lazy relation
       // (the pageRank contract).
-      val states = t0.select(col("__f").as("state")).distinct().localCheckpoint(false)
-      kept += states
+      val states = p.pin(t0.select(col("__f").as("state")).distinct())
       val gated = t0.join(states.select(col("state").as("__t")), Seq("__t"))
       val dangling = states
         .join(gated.select(col("__f").as("state")).distinct(), Seq("state"), "left_anti")
@@ -506,35 +538,27 @@ object Graph {
           lit(1000000000L).as("__p"))
       // pinned on the per-round join key: rounds read co-partitioned
       // transition blocks, shuffle only state-sized rows
-      val e = pinByKey(gated.unionByName(dangling), "__f")
-      pins += e
+      val e = pinByKey(p, gated.unionByName(dangling), "__f")
       require(e.count() > 0, "stationaryDistribution: no transitions between known states")
       var pi = states.withColumn("pi_ppm", lit(1000000L))
       var prev = Option.empty[DataFrame]
       for (i <- 1 to iters) {
-        val raw = e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
+        val raw = p.pin(e.join(pi.withColumnRenamed("state", "__f"), Seq("__f"))
           .groupBy(col("__t").as("state"))
           .agg(expr("CAST(sum(CAST(pi_ppm AS DECIMAL(38,0)) * __p) div 1000000000 AS BIGINT)")
-            .as("__r"))
-          .localCheckpoint(false)
-        kept += raw
+            .as("__r")))
         raw.count()
         pi = raw
           .crossJoin(broadcast(raw.agg(sum(col("__r").cast(dec)).as("__s"))))
           .select(col("state"), expr("CAST(__r * 1000000 div __s AS BIGINT)").as("pi_ppm"))
-        free(prev.toSeq: _*)
-        kept --= prev
+        p.free(prev.toSeq: _*)
         prev = Some(raw)
       }
-      ok = true
+      // the result reads states + the final round's blocks, never the
+      // transition pin or the t0 projection
+      p.keep(states +: prev.toSeq: _*)
       states.join(pi, Seq("state"), "left")
         .select(col("state"), coalesce(col("pi_ppm"), lit(0L)).as("pi_ppm"))
-    } finally {
-      // every round is materialized by now on success; the result reads
-      // states + the final round's blocks, never the transition pin or
-      // the t0 projection
-      free(pins.toSeq: _*)
-      if (!ok) free(kept.toSeq: _*)
     }
   }
 
@@ -611,21 +635,33 @@ object Graph {
       rightCol: String,
       maxDegree: Int): DataFrame = {
     require(maxDegree >= 2, s"bipartiteProject: maxDegree >= 2 required, got $maxDegree")
+    sharedPairs(cappedEdges(edges, leftCol, rightCol, maxDegree), "weight")
+  }
+
+  /** The distinct (`__l`, `__r`) edges whose left node has at most
+    * `maxDegree` right neighbors: the universe of [[bipartiteProject]]
+    * and [[cooccurrenceCosine]]. Pinned, because it feeds BOTH sides of
+    * the pair self-join (and the per-item counts) — the multi-consumer
+    * shape that otherwise replays the scan+distinct+degree-join chain
+    * per consumer and read bimodally in the bench (the q147 pattern).
+    */
+  private def cappedEdges(
+      edges: DataFrame, leftCol: String, rightCol: String, maxDegree: Int): DataFrame = {
     val e = edges.select(col(leftCol).as("__l"), col(rightCol).as("__r")).distinct()
     val deg = e.groupBy(col("__l")).agg(count(lit(1)).as("__d"))
-    // `kept` feeds BOTH sides of the pair self-join below — the
-    // two-consumer shape that otherwise replays the scan+distinct+
-    // degree-join chain twice and read bimodally in the bench (the
-    // q147 pattern). Pin it so consumers replay blocks, not lineage.
-    val kept = e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
+    e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
       .select(col("__l"), col("__r"))
       .localCheckpoint(false)
-    kept.select(col("__l"), col("__r").as("a"))
-      .join(kept.select(col("__l"), col("__r").as("b")), Seq("__l"))
+  }
+
+  /** Right-node pairs (a < b) of `capped` sharing a left node,
+    * counted as `as`. */
+  private def sharedPairs(capped: DataFrame, as: String): DataFrame =
+    capped.select(col("__l"), col("__r").as("a"))
+      .join(capped.select(col("__l"), col("__r").as("b")), Seq("__l"))
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("weight"))
-  }
+      .agg(count(lit(1)).as(as))
 
   /** Triangle census of an undirected graph: one row with node, edge,
     * wedge, and triangle counts plus the global clustering coefficient
@@ -650,33 +686,8 @@ object Graph {
     * 1-row aggregates (broadcast, not a driver collect).
     */
   def triangleCount(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // localCheckpoint (lazy): e feeds the degree groupBy, both
-    // orientation joins, the closing-edge join, and the edge-count
-    // aggregate; oriented feeds BOTH sides of the wedge self-join.
-    // Without pinning, pressure-evicted shuffle blocks re-run the
-    // dedup/degree chain up to 4× (the round-9 3.2× bench reading).
-    val e = edges
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
-      .select(least(col(aCol), col(bCol)).as("u"), greatest(col(aCol), col(bCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-    val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-    // orient: u<v always, so (d_u, u) < (d_v, v) reduces to d_u <= d_v
-    val oriented = e
-      .join(deg.select(col("id").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("id").as("v"), col("d").as("dv")), Seq("v"))
-      .select(
-        when(col("du") <= col("dv"), col("u")).otherwise(col("v")).as("s"),
-        when(col("du") <= col("dv"), col("v")).otherwise(col("u")).as("t"))
-      .localCheckpoint(false)
-    val wedges = oriented.select(col("s"), col("t").as("b"))
-      .join(oriented.select(col("s"), col("t").as("c")), Seq("s"))
-      .filter(col("b") < col("c"))
-    val tri = wedges
-      .join(e, least(col("b"), col("c")) === col("u") &&
-        greatest(col("b"), col("c")) === col("v"))
-      .agg(count(lit(1)).as("n_triangles"))
+    val (e, deg, closed) = closedWedges(edges, aCol, bCol, "d")
+    val tri = closed.agg(count(lit(1)).as("n_triangles"))
     val degAgg = deg.agg(
       count(lit(1)).as("n_nodes"),
       sum(expr("d * (d - 1L) div 2L")).as("n_wedges"))
@@ -686,6 +697,42 @@ object Graph {
         when(col("n_wedges") > 0L,
           lit(3.0) * col("n_triangles").cast("double") / col("n_wedges").cast("double"))
           .as("global_cc"))
+  }
+
+  /** The degree-oriented wedge enumeration of [[triangleCount]] and
+    * [[clusteringCoefficient]]: `e`, the distinct edges (u < v); `deg`,
+    * each node's degree as (id, `degCol`); and every triangle ONCE, as
+    * a wedge (s, b, c) from its minimum-(degree, id) corner s joined
+    * with its closing edge (u, v).
+    *
+    * localCheckpoint (lazy): e feeds the degree groupBy, both
+    * orientation joins, the closing-edge join, and the edge-count
+    * aggregate; oriented feeds BOTH sides of the wedge self-join.
+    * Without pinning, pressure-evicted shuffle blocks re-run the
+    * dedup/degree chain up to 4× (the round-9 3.2× bench reading).
+    */
+  private def closedWedges(edges: DataFrame, aCol: String, bCol: String,
+      degCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = edges
+      .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
+      .select(least(col(aCol), col(bCol)).as("u"), greatest(col(aCol), col(bCol)).as("v"))
+      .distinct()
+      .localCheckpoint(false)
+    val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as(degCol))
+    // orient: u<v always, so (d_u, u) < (d_v, v) reduces to d_u <= d_v
+    val oriented = e
+      .join(deg.select(col("id").as("u"), col(degCol).as("du")), Seq("u"))
+      .join(deg.select(col("id").as("v"), col(degCol).as("dv")), Seq("v"))
+      .select(
+        when(col("du") <= col("dv"), col("u")).otherwise(col("v")).as("s"),
+        when(col("du") <= col("dv"), col("v")).otherwise(col("u")).as("t"))
+      .localCheckpoint(false)
+    val wedges = oriented.select(col("s"), col("t").as("b"))
+      .join(oriented.select(col("s"), col("t").as("c")), Seq("s"))
+      .filter(col("b") < col("c"))
+    (e, deg, wedges.join(e, least(col("b"), col("c")) === col("u") &&
+      greatest(col("b"), col("c")) === col("v")))
   }
 
   /** LOCAL clustering coefficient: per node — degree, incident-triangle
@@ -705,28 +752,8 @@ object Graph {
     * null cc, matching the global null-on-no-wedges convention.
     */
   def clusteringCoefficient(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // Same pinning rationale as [[triangleCount]]: e and oriented are
-    // multi-consumer relations in the wedge/closing joins.
-    val e = edges
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
-      .select(least(col(aCol), col(bCol)).as("u"), greatest(col(aCol), col(bCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-    val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("degree"))
-    val oriented = e
-      .join(deg.select(col("id").as("u"), col("degree").as("du")), Seq("u"))
-      .join(deg.select(col("id").as("v"), col("degree").as("dv")), Seq("v"))
-      .select(
-        when(col("du") <= col("dv"), col("u")).otherwise(col("v")).as("s"),
-        when(col("du") <= col("dv"), col("v")).otherwise(col("u")).as("t"))
-      .localCheckpoint(false)
-    val wedges = oriented.select(col("s"), col("t").as("b"))
-      .join(oriented.select(col("s"), col("t").as("c")), Seq("s"))
-      .filter(col("b") < col("c"))
-    val triCorners = wedges
-      .join(e, least(col("b"), col("c")) === col("u") &&
-        greatest(col("b"), col("c")) === col("v"))
+    val (_, deg, closed) = closedWedges(edges, aCol, bCol, "degree")
+    val triCorners = closed
       .select(explode(array(col("s"), col("b"), col("c"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("triangles"))
     deg.join(triCorners, Seq("id"), "left")
@@ -753,10 +780,9 @@ object Graph {
     * cheap on a 100 TB graph where the FULL transitive closure would
     * not be.
     *
-    * Both the frontier and the settled set are locally checkpointed
-    * per round with explicit unpersist of superseded blocks (the
-    * [[connectedComponents]] discipline): each round's plan references
-    * the previous round twice (expansion + anti-join), so an
+    * Both the frontier and the settled set are pinned per round and
+    * the superseded ones freed: each round's plan references the
+    * previous round twice (expansion + anti-join), so an
     * uncheckpointed lineage doubles per hop.
     */
   def bfsDistances(
@@ -768,53 +794,38 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30,
       s"bfsDistances: maxHops in [1, 30] required, got $maxHops")
-    val e = edges.filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).as("u"), col(bCol).as("v"))
-    val bidir = pinByKey(
-      e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct(), "u")
-    var frontier = seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull).distinct()
-      .localCheckpoint(false)
-    var dist = frontier.select(col("id"), lit(0).as("dist")).localCheckpoint(false)
-    var live = Set(bidir, frontier, dist)
-    var returned = false
-    try {
+    withPins { p =>
+      val e = edges.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+        .select(col(aCol).as("u"), col(bCol).as("v"))
+      val bidir = pinByKey(p,
+        e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+          .filter(col("u") =!= col("v")).distinct(), "u")
+      var frontier = p.pin(
+        seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull).distinct())
+      var dist = p.pin(frontier.select(col("id"), lit(0).as("dist")))
+      // ONE action per round: the new dist union stays a LAZY pin — its
+      // blocks materialize inside the NEXT round's frontier count (whose
+      // anti-join reads it), so the previous round's frontier and dist
+      // are freed after that count; the final round's dist gets one
+      // settling count after the loop, before its inputs free
+      var prev = Seq.empty[DataFrame]
       var h = 1
       var frontierSize = 1L
-      // ONE action per round: the new dist union stays a LAZY
-      // checkpoint — its blocks materialize inside the NEXT round's
-      // frontier count (whose anti-join reads it), so the settle
-      // count the loop used to pay per round is gone. Frees defer one
-      // round (round i−2's state drops after round i's count proves
-      // round i−1's dist materialized); the final round's dist gets
-      // one settling count after the loop, before its inputs free.
-      var stale = Set.empty[DataFrame]
       while (h <= maxHops && frontierSize > 0) {
-        val next = frontier.join(bidir, frontier("id") === bidir("u"))
+        val next = p.pin(frontier.join(bidir, frontier("id") === bidir("u"))
           .select(col("v").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-          .localCheckpoint(false)
-        live += next
+          .join(dist, Seq("id"), "left_anti"))
         frontierSize = next.count() // materializes the round (and dist)
-        free(stale.toSeq: _*)
-        live --= stale
-        val nd = dist.unionAll(next.select(col("id"), lit(h).as("dist"))).localCheckpoint(false)
-        live += nd
-        stale = Set(frontier, dist)
+        p.free(prev: _*)
+        prev = Seq(frontier, dist)
+        dist = p.pin(dist.unionAll(next.select(col("id"), lit(h).as("dist"))))
         frontier = next
-        dist = nd
         h += 1
       }
       dist.count() // settle the final lazy union before its inputs free
-      free(stale.toSeq: _*)
-      live --= stale
-      returned = true
+      p.free(prev: _*)
+      p.keep(dist)
       dist
-    } finally {
-      // the returned frame's blocks (dist) stay live; everything
-      // superseded or auxiliary is freed here — and on an abort no
-      // frame escapes, so dist goes too
-      free((if (returned) live - dist else live).toSeq: _*)
     }
   }
 
@@ -844,20 +855,9 @@ object Graph {
       minCo: Long = 2L): DataFrame = {
     require(minCo >= 1, s"cooccurrenceCosine: minCo >= 1 required, got $minCo")
     require(maxDegree >= 2, s"cooccurrenceCosine: maxDegree >= 2 required, got $maxDegree")
-    val e = edges.select(col(basketCol).as("__l"), col(itemCol).as("__r")).distinct()
-    val deg = e.groupBy(col("__l")).agg(count(lit(1)).as("__d"))
-    // `kept` has THREE consumers (both self-join sides + the per-item
-    // counts) — pin it once instead of replaying the chain three times.
-    val kept = e.join(deg.filter(col("__d") <= maxDegree), Seq("__l"))
-      .select(col("__l"), col("__r"))
-      .localCheckpoint(false)
-    val pairs = kept.select(col("__l"), col("__r").as("a"))
-      .join(kept.select(col("__l"), col("__r").as("b")), Seq("__l"))
-      .filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("co"))
-      .filter(col("co") >= minCo)
-    val n = kept.groupBy(col("__r").as("__item")).agg(count(lit(1)).as("__n"))
+    val capped = cappedEdges(edges, basketCol, itemCol, maxDegree)
+    val pairs = sharedPairs(capped, "co").filter(col("co") >= minCo)
+    val n = capped.groupBy(col("__r").as("__item")).agg(count(lit(1)).as("__n"))
     pairs
       .join(n.select(col("__item").as("a"), col("__n").as("__na")), Seq("a"))
       .join(n.select(col("__item").as("b"), col("__n").as("__nb")), Seq("b"))
@@ -882,18 +882,15 @@ object Graph {
     * Each round is two keyed shuffles — a semi-join of the edge list
     * against the active set on BOTH endpoints, then a degree
     * aggregate — and the active relation (one row per surviving node)
-    * is localCheckpoint'd per round with the previous round's blocks
-    * freed explicitly, the [[connectedComponents]] pattern. Rounds
-    * stop at stability or `maxRounds`, whichever first; a stable set
-    * is a fixpoint of the round function, so early exit returns
-    * exactly what running all `maxRounds` rounds would. Peeling
-    * removes at least one node per non-stable round, but in practice
-    * collapses in a handful of rounds: each round removes the ENTIRE
-    * current shell, not one node. The only driver-side value is the
-    * per-round surviving-node count. Every pin is freed on every exit
-    * path, a failed or cancelled round included. Self-loops are
-    * ignored; edges are undirected; nodes with no edges are never in
-    * any core (k >= 1).
+    * is pinned per round and the previous round's freed. Rounds stop
+    * at stability; a set still shrinking after `maxRounds` rounds is
+    * not a k-core, so the call then FAILS rather than return it.
+    * Peeling removes at least one node per non-stable round, but in
+    * practice collapses in a handful of rounds: each round removes the
+    * ENTIRE current shell, not one node. The only driver-side value is
+    * the per-round surviving-node count. Self-loops are ignored; edges
+    * are undirected; nodes with no edges are never in any core
+    * (k >= 1).
     */
   def kCore(
       edges: DataFrame,
@@ -903,42 +900,40 @@ object Graph {
       maxRounds: Int = 20): DataFrame = {
     require(k >= 1, s"kCore: k >= 1 required, got $k")
     require(maxRounds >= 1, s"kCore: maxRounds >= 1 required, got $maxRounds")
-    val e = edges
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-    val bidir = pinByKey(
-      e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct(), "u")
-    var active = bidir.select(col("u").as("node")).distinct().localCheckpoint(false)
-    // the result is its own eager checkpoint, so every pin this call
-    // registers — held here until freed — goes on every exit path
-    var live = Set(bidir, active)
-    try {
+    withPins { p =>
+      val e = edges
+        .filter(col(aCol).isNotNull && col(bCol).isNotNull && col(aCol) =!= col(bCol))
+        .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
+      val bidir = pinByKey(p,
+        e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct(), "u")
+      var active = p.pin(bidir.select(col("u").as("node")).distinct())
       var n = active.count()
       var rounds = 0
       var stable = false
       while (rounds < maxRounds && !stable) {
-        val next = bidir
+        val next = p.pin(bidir
           .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
           .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
           .groupBy(col("u").as("node")).agg(count(lit(1)).as("__d"))
           .filter(col("__d") >= k)
-          .select(col("node"))
-          .localCheckpoint(false)
-        live += next
+          .select(col("node")))
         val m = next.count()
-        free(active)
-        live -= active
+        p.free(active)
         active = next
         stable = m == n
         n = m
         rounds += 1
       }
-      bidir
+      require(stable, s"kCore: the $k-core did not settle in $maxRounds rounds " +
+        s"($n nodes left); raise maxRounds")
+      // the result is its own pin
+      val core = p.pin(bidir
         .join(active.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(active.select(col("node").as("v")), Seq("v"), "left_semi")
-        .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
-        .localCheckpoint()
-    } finally free(live.toSeq: _*)
+        .groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree")), eager = true)
+      p.keep(core)
+      core
+    }
   }
 
   /** Synchronous label-propagation community detection (Raghavan,
@@ -954,9 +949,9 @@ object Graph {
     *
     * Scale: per round, one keyed join (neighbor labels) + one
     * (node, label)-counted aggregate + one per-node argmax window —
-    * all edge-bound; label state is node-bound and checkpoint+freed
-    * per round (the CC discipline). Round count is a small constant,
-    * not data-dependent.
+    * all edge-bound; label state is node-bound, pinned per round and
+    * the previous round's freed. Round count is a small constant, not
+    * data-dependent.
     */
   def labelPropagation(
       edges: DataFrame,
@@ -965,39 +960,32 @@ object Graph {
       rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1 && rounds <= 64, s"labelPropagation: 1 <= rounds <= 64, got $rounds")
-    val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
-    // pinned on the round join key (the CC co-partition shape)
-    val bidir = pinByKey(
-      e.union(e.select(col("d").as("s"), col("s").as("d")))
-        .filter(col("s") =!= col("d"))
-        .distinct(), "d")
-    var lbl = bidir.select(col("s").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(false)
-    // the label generations this call holds, freed on a throw; on
-    // success the last one is the result's own pin
-    var live = Set(lbl)
-    try {
+    withPins { p =>
+      val e = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
+      // pinned on the round join key (the CC co-partition shape)
+      val bidir = pinByKey(p,
+        e.union(e.select(col("d").as("s"), col("s").as("d")))
+          .filter(col("s") =!= col("d"))
+          .distinct(), "d")
+      var lbl = p.pin(bidir.select(col("s").as("id")).distinct()
+        .select(col("id"), col("id").as("lbl")))
       val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("lbl"))
       for (_ <- 1 to rounds) {
-        val next = bidir
+        val next = p.pin(bidir
           .join(lbl.withColumnRenamed("id", "d"), "d")
           .select(col("s").as("id"), col("lbl"))
           .groupBy(col("id"), col("lbl"))
           .agg(count(lit(1)).as("c"))
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
-          .select(col("id"), col("lbl"))
-          .localCheckpoint(false)
-        live += next
+          .select(col("id"), col("lbl")))
         next.count() // materialize before freeing the round it reads
-        free(lbl)
-        live -= lbl
+        p.free(lbl)
         lbl = next
       }
-      live = Set.empty
+      p.keep(lbl)
       lbl.select(col("id").as("node"), col("lbl").as("community"))
-    } finally free((live + bidir).toSeq: _*)
+    }
   }
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala WWW'02: the
@@ -1024,57 +1012,22 @@ object Graph {
       iters: Int,
       dampPpm: Long = 850000L,
       rankUnit: Long = 1000000L): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"personalizedPageRank: iters in [1,50], got $iters")
-    require(dampPpm >= 0L && dampPpm <= 1000000L,
-      s"personalizedPageRank: dampPpm in [0, 1e6], got $dampPpm")
-    // Same contract as pageRank: baseS floors rankUnit/1e6 FIRST, so a
-    // rankUnit below 1e6 (or not a multiple of it) silently zeroes the
-    // restart term and all rank mass decays to 0 over iterations.
-    require(rankUnit >= 1000000L && rankUnit % 1000000L == 0L &&
-      rankUnit <= 1000000000000L,
-      s"personalizedPageRank: rankUnit must be a multiple of 1e6 in [1e6, 1e12], got $rankUnit")
-    // co-partitioned static relations — the pageRank pin shape
-    val (e, deg) = pinEdgesAndDegrees(edges, srcCol, dstCol)
-    var cks = Vector.empty[DataFrame] // live cadence checkpoints, oldest first
-    try {
+    requireRankArgs("personalizedPageRank", iters, dampPpm, rankUnit)
+    withPins { p =>
+      val (e, deg) = pinEdgesAndDegrees(p, edges, srcCol, dstCol)
       val sd = seeds.select(col(seedCol).as("__src")).distinct()
         .join(deg.select(col("__src")), Seq("__src"), "left_semi")
       val nSeeds = sd.count()
       require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
-      require(rankUnit / nSeeds >= 100L,
-        s"personalizedPageRank: rankUnit=$rankUnit gives only ${rankUnit / nSeeds} units " +
-          s"per seed for $nSeeds seeds (need >= 100); raise rankUnit")
+      requireRankUnit("personalizedPageRank", rankUnit, nSeeds, "seed")
       val seedMark = broadcast(sd.select(col("__src").as("node"), lit(1L).as("__seed")))
-      val baseS = (rankUnit / 1000000L * (1000000L - dampPpm)) / nSeeds
-      var r = deg.select(col("__src").as("node"))
+      def onSeeds(v: Long) = when(col("__seed").isNotNull, lit(v)).otherwise(lit(0L))
+      val r0 = deg.select(col("__src").as("node"))
         .join(seedMark, Seq("node"), "left")
-        .select(col("node"),
-          when(col("__seed").isNotNull, lit(rankUnit / nSeeds)).otherwise(lit(0L))
-            .as("rank_ppm"))
-      for (i <- 1 to iters) {
-        val inflow = e
-          .join(r.withColumnRenamed("node", "__src"), "__src")
-          .join(deg, "__src")
-          .select(col("__dst"), expr("rank_ppm div __deg").as("__c"))
-          .groupBy(col("__dst"))
-          .agg(sum(col("__c")).as("__s"))
-        r = deg.select(col("__src").as("node"))
-          .join(inflow.withColumnRenamed("__dst", "node"), Seq("node"), "left")
-          .join(seedMark, Seq("node"), "left")
-          .select(col("node"),
-            (when(col("__seed").isNotNull, lit(baseS)).otherwise(lit(0L)) +
-              expr(s"${dampPpm}L * coalesce(__s, 0L) div 1000000L"))
-              .as("rank_ppm"))
-        if (i % 5 == 0 && i < iters) {
-          cks :+= r.localCheckpoint(false)
-          r = cks.last
-          r.count()
-          if (cks.size > 1) { free(cks.head); cks = cks.tail }
-        }
-      }
-      r
-    } catch {
-      case t: Throwable => free(Seq(e, deg) ++ cks: _*); throw t
+        .select(col("node"), onSeeds(rankUnit / nSeeds).as("rank_ppm"))
+      rankRounds(p, e, deg, r0,
+        onSeeds((rankUnit / 1000000L * (1000000L - dampPpm)) / nSeeds), Some(seedMark),
+        iters, dampPpm)
     }
   }
 
@@ -1099,9 +1052,9 @@ object Graph {
     * Scale: per round one keyed join (frontier × adjacency, edge-
     * degree-bound), one min-aggregate keyed on the node, one left join
     * against the settled map to keep only improvements. Frontier and
-    * dist are localCheckpoint'd per round with superseded blocks freed
-    * (the [[connectedComponents]] discipline); the only driver values
-    * are the per-round frontier counts that drive early exit.
+    * dist are pinned per round and the superseded ones freed; the only
+    * driver values are the per-round frontier counts that drive early
+    * exit.
     */
   def weightedShortestPaths(
       edges: DataFrame,
@@ -1113,58 +1066,44 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30,
       s"weightedShortestPaths: maxHops in [1, 30] required, got $maxHops")
-    val e0 = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull && col(weightCol).isNotNull)
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-    val adj = pinByKey(
-      e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"), col("w")))
-        .filter(col("u") =!= col("v"))
-        .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), "u")
-    var dist = seeds.select(col(seedCol).cast("long").as("id")).filter(col("id").isNotNull)
-      .distinct().select(col("id"), lit(0L).as("dist"))
-      .localCheckpoint(false)
-    var frontier = dist.localCheckpoint(false)
-    var live = Set(adj, dist, frontier)
-    var returned = false
-    try {
+    withPins { p =>
+      val e0 = edges
+        .filter(col(srcCol).isNotNull && col(dstCol).isNotNull && col(weightCol).isNotNull)
+        .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
+          col(weightCol).cast("long").as("w"))
+      val adj = pinByKey(p,
+        e0.unionAll(e0.select(col("v").as("u"), col("u").as("v"), col("w")))
+          .filter(col("u") =!= col("v"))
+          .groupBy(col("u"), col("v")).agg(min(col("w")).as("w")), "u")
+      var dist = p.pin(
+        seeds.select(col(seedCol).cast("long").as("id")).filter(col("id").isNotNull)
+          .distinct().select(col("id"), lit(0L).as("dist")))
+      var frontier = p.pin(dist)
+      // one action per round, as in bfsDistances: the new dist stays a
+      // lazy pin, materialized by the next round's improved.count()
+      var prev = Seq.empty[DataFrame]
       var h = 1
       var frontierSize = 1L
-      // one action per round — the bfsDistances lazy-dist discipline
-      // (see there): the new dist stays lazy, materialized by the next
-      // round's improved.count(); frees defer one round
-      var stale = Set.empty[DataFrame]
       while (h <= maxHops && frontierSize > 0) {
         val relaxed = frontier.join(adj, frontier("id") === adj("u"))
           .select(col("v").as("id"), (col("dist") + col("w")).as("__cand"))
           .groupBy(col("id")).agg(min(col("__cand")).as("__cand"))
-        val improved = relaxed.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left")
-          .filter(col("__old").isNull || col("__cand") < col("__old"))
-          .select(col("id"), col("__cand").as("dist"))
-          .localCheckpoint(false)
-        live += improved
+        val improved = p.pin(
+          relaxed.join(dist.withColumnRenamed("dist", "__old"), Seq("id"), "left")
+            .filter(col("__old").isNull || col("__cand") < col("__old"))
+            .select(col("id"), col("__cand").as("dist")))
         frontierSize = improved.count() // materializes the round (and dist)
-        free(stale.toSeq: _*)
-        live --= stale
-        val nd = dist.join(improved.select(col("id")), Seq("id"), "left_anti")
-          .unionAll(improved)
-          .localCheckpoint(false)
-        live += nd
-        stale = Set(frontier, dist)
+        p.free(prev: _*)
+        prev = Seq(frontier, dist)
+        dist = p.pin(dist.join(improved.select(col("id")), Seq("id"), "left_anti")
+          .unionAll(improved))
         frontier = improved
-        dist = nd
         h += 1
       }
       dist.count() // settle the final lazy union before its inputs free
-      free(stale.toSeq: _*)
-      live --= stale
-      returned = true
+      p.free(prev: _*)
+      p.keep(dist)
       dist.select(col("id").as("node"), col("dist"))
-    } finally {
-      // On success the returned frame's blocks stay live; on an abort
-      // no frame escapes, so the current dist checkpoint is freed too
-      // (otherwise its blocks leak on the failure path).
-      free((if (returned) live - dist else live).toSeq: _*)
     }
   }
 

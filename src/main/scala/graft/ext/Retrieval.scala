@@ -213,10 +213,11 @@ object Retrieval {
     // →3-gram-explode chain reads (id, tf) longs, never text.
     // spread the doc rows BEFORE the tokenize→shingle explode: the
     // documents fixture is one small file = one scan partition, which
-    // ran the whole chain single-threaded (ProbeJobs: a 2 s one-task
-    // stage); at real scale the scan is already wide and this shuffles
-    // (id, text) rows once. byGram is likewise re-spread before the
-    // pin so the pair-explode and norm stages read wide blocks.
+    // ran the whole chain single-threaded (a per-job listener probe
+    // read a 2 s one-task stage); at real scale the scan is already
+    // wide and this shuffles (id, text) rows once. byGram is likewise
+    // re-spread before the pin so the pair-explode and norm stages
+    // read wide blocks.
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val tf = docs.filter(text.isNotNull)
       .select(id.as("__id"), text.as("__text"))

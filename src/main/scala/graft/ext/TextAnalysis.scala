@@ -21,12 +21,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "zu", "ein", "eine", "ist", "nicht", "mit"),
     "fr" -> Seq("le", "la", "de", "et", "un", "une", "est", "que", "pour", "dans"))
 
-  /** Fraction of tokens that are stopwords of `lang`. */
-  def stopwordRatio(toks: Column, lang: String): Column = {
-    val hits = size(filter(toks, t => lower(t).isin(stopwords(lang): _*)))
-    hits.cast("double") / greatest(size(toks), lit(1)).cast("double")
-  }
-
   /** Language-ID heuristic: argmax of stopword ratio across the lists
     * (compiled one-pass expression, graft.functions.LangIdExpr), "und"
     * (undetermined) when every ratio is zero. Tiebreak = max by
@@ -684,9 +678,8 @@ object TextAnalysis {
     * Scale: per round, one scan-stage pair explode + one (a, b)-keyed
     * count (map-side partial combine bounds the shuffle at distinct
     * adjacent pairs, ~vocab², not token volume) + one map-stage
-    * `replace` rewrite. Corpus state is localCheckpoint-ed per round
-    * and the superseded round's blocks freed explicitly — the
-    * [[Graph.connectedComponents]] iterative-state discipline. A
+    * `replace` rewrite. Corpus state is pinned per round
+    * ([[Graph.withPins]]) and the superseded round's blocks freed. A
     * production trainer runs this on a sampled sub-corpus (vocab
     * learning saturates long before 100 TB) and persists the merge
     * table once.
@@ -714,27 +707,26 @@ object TextAnalysis {
         "sequential full-relation rounds and is sample-scoped by contract; " +
         "train on a hashSample and encode the corpus with bpeEncode " +
         "(or raise maxTrainDocs explicitly)")
-    // The training sample usually arrives as ONE scan partition (it is
-    // sample-scoped by contract, often a single small file), which would
-    // run every round's pair-count job single-threaded. Spread it across
-    // the cluster once at checkpoint — round-robin is fine, the rounds
-    // are pure per-row maps + a global aggregate.
-    var docs = trainable.select(concat(lit(D), array_join(toks, D + D), lit(D)).as("s"))
-      .repartition(math.min(8, sc.defaultParallelism))
-      .localCheckpoint(false)
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     // One relation-wide job per round, not two: each round's best-pair
-    // collect is ALSO the action that materializes the (lazy) checkpoint
-    // of the replace from the previous round, so the separate count()
+    // collect is ALSO the action that materializes the (lazy) pin of
+    // the replace from the previous round, so the separate count()
     // pass is gone; the superseded generation's blocks are freed the
     // moment the collect proves the new generation materialized. The
     // FINAL round's replace is never consumed by anything (the merge
     // table is the output), so it is not even constructed — together
     // that is R+1 full passes over the training relation instead of
-    // 2R+1 for the same merges.
-    var pendingFree = Option.empty[org.apache.spark.sql.DataFrame]
-    try {
+    // 2R+1 for the same merges. No pin backs the result.
+    Graph.withPins { p =>
+      // The training sample usually arrives as ONE scan partition (it
+      // is sample-scoped by contract, often a single small file), which
+      // would run every round's pair-count job single-threaded. Spread
+      // it across the cluster once at the pin — round-robin is fine,
+      // the rounds are pure per-row maps + a global aggregate.
+      var docs = p.pin(trainable.select(concat(lit(D), array_join(toks, D + D), lit(D)).as("s"))
+        .repartition(math.min(8, sc.defaultParallelism)))
+      var prev = Option.empty[org.apache.spark.sql.DataFrame]
       var r = 1
       var exhausted = false
       while (r <= rounds && !exhausted) {
@@ -750,25 +742,24 @@ object TextAnalysis {
           .agg(count(lit(1)).as("n"))
           .orderBy(col("n").desc, col("a"), col("b"))
           .limit(1)
-          .collect() // materializes the current generation's checkpoint
-        Graph.free(pendingFree.toSeq: _*) // previous generation fully consumed
-        pendingFree = None
+          .collect() // materializes the current generation's pin
+        p.free(prev.toSeq: _*) // previous generation fully consumed
+        prev = None
         if (best.isEmpty) exhausted = true
         else {
           val a = best.head.getString(0)
           val b = best.head.getString(1)
           merges += ((r.toLong, a, b, a + " " + b, best.head.getLong(2)))
           if (r < rounds) {
-            pendingFree = Some(docs)
-            docs = docs.select(
+            prev = Some(docs)
+            docs = p.pin(docs.select(
               replace(col("s"),
-                lit(D + a + D + D + b + D), lit(D + a + " " + b + D)).as("s"))
-              .localCheckpoint(false)
+                lit(D + a + D + D + b + D), lit(D + a + " " + b + D)).as("s")))
           }
         }
         r += 1
       }
-    } finally Graph.free(docs +: pendingFree.toSeq: _*)
+    }
     import ss.implicits._
     merges.toSeq.toDF("round", "a", "b", "merged", "n")
   }

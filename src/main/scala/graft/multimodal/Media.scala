@@ -102,21 +102,6 @@ object Media {
         i => i * lit(everyMs)))
       .otherwise(array().cast("array<bigint>"))
 
-  /** Perceptual hashes of a binary payload column: the 8×8 box-filter
-    * luma grid ([[graft.functions.LumaGrid]]) plus the 64-bit
-    * average-hash and difference-hash over it — the integer-exact
-    * image-fingerprint pair (aHash tracks global brightness shape,
-    * dHash local gradients; dedup uses dHash, retrieval filters often
-    * want both). Scan-stage, codegen, no shuffle.
-    */
-  def perceptualHashes(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
-    import graft.functions.MediaFunctions._
-    df.select(col(idCol).as("media_id"),
-        lumaGrid(col(bytesCol).cast("binary")).as("luma"))
-      .select(col("media_id"), col("luma"),
-        aHash64(col("luma")).as("ahash"), dHash64(col("luma")).as("dhash"))
-  }
-
   /** Binary near-duplicate pairs by dHash Hamming distance — the image
     * twin of [[graft.ext.Dedup.simhashPairs]], same pigeonhole
     * bucketing: split the 64-bit dHash into maxHamming+1 disjoint

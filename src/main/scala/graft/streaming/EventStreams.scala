@@ -37,14 +37,6 @@ object EventStreams {
         col("window.start").as("win_start"),
         col("event_type"), col("n"), col("total"))
 
-  /** Sliding-window per-type event rate. */
-  def slidingCounts(events: DataFrame, windowLen: String, slide: String, delay: String): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-
   /** One user session: bounded by an inactivity gap, aggregated stats. */
   final case class Session(
       userId: Long, startTs: Timestamp, endTs: Timestamp, nEvents: Long, total: Double)

@@ -226,69 +226,122 @@ class InsightsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(core == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
-  test("kCore: a round cancelled mid-run leaves no checkpoint blocks registered") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+  test("kCore: a set still peeling after maxRounds fails instead of returning a non-core") {
     import spark.implicits._
     val sc = spark.sparkContext
-    // path 1-…-8 at k = 2 peels its two ends per round: four rounds
+    // path 1-…-8 at k = 2 peels its two ends per round: four rounds to
+    // empty, a fifth to see it stable
     val path = (1L to 8L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("x", "y")
     def pinned = sc.getPersistentRDDs.keySet.toSet
     val before = pinned
-    val group = "kcore-cancel"
-    val floor = sc.emptyRDD[Int].id // kCore's RDDs all get later ids
-    // kCore frees its flat pass-1 edges, then round 1 frees the start
-    // set: the second unpersist of a kCore RDD marks round 2's start,
-    // and every job of the group from then on is cancelled
-    val frees = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
-        if (e.rddId > floor && frees.incrementAndGet() == 2) sc.cancelJobGroupAndFutureJobs(group)
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "kCore cancelled in round 2")
-    try {
-      val e = intercept[Exception](Graph.kCore(path, "x", "y", k = 2).count())
-      assert(e.getMessage.contains("cancel"), e.getMessage)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(frees.get >= 2)
-    assert(pinned.diff(before).isEmpty, "kCore left checkpoint blocks registered")
-    assert(Graph.kCore(path, "x", "y", k = 2).count() == 0) // the session still works
+    val e = intercept[IllegalArgumentException](Graph.kCore(path, "x", "y", k = 2, maxRounds = 2))
+    assert(e.getMessage.contains("did not settle in 2 rounds (4 nodes left)"), e.getMessage)
+    assert(pinned.diff(before).isEmpty, "a kCore that did not settle left checkpoint blocks")
+    assert(Graph.kCore(path, "x", "y", k = 2, maxRounds = 5).count() == 0)
   }
 
-  test("labelPropagation: a round cancelled mid-run leaves no checkpoint blocks registered") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+  /** Small fixtures of the iterative operators, built on first use. */
+  private object fx {
+    import spark.implicits._
+    lazy val path = (1L to 8L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("x", "y")
+    lazy val weighted = path.withColumn("w", $"y" - $"x")
+    lazy val seeds = Seq(1L).toDF("id")
+    lazy val bridged = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
+      .toDF("x", "y")
+    lazy val chain = Seq(("a", "b", 500000000L), ("a", "c", 500000000L),
+      ("b", "c", 1000000000L), ("c", "a", 1000000000L)).toDF("f", "t", "p")
+    lazy val docs = Seq("a b c d a b c d", "b c d e b c", "a b a b c").toDF("txt")
+  }
+
+  /** Every iterative operator, with its result rows over a fixture and
+    * the unpersist of one of its own RDDs that falls inside a round:
+    * the first that frees a superseded round's pin (each
+    * [[Graph.pinByKey]] first frees its flat pass-1 pin).
+    */
+  private val iterative: Seq[(String, Int, Long, () => Long)] = Seq(
+    // round 1 frees the start labels: round 2 on is cancelled
+    ("connectedComponents", 2, 8L, () => Graph.connectedComponents(fx.path, "x", "y").count()),
+    // cadence pins at rounds 5, 10, 15: the round-10 pin frees the
+    // round-5 one, and rounds 11 on are cancelled
+    ("pageRank", 2, 7L, () => Graph.pageRank(fx.path, "x", "y", iters = 17).count()),
+    ("personalizedPageRank", 2, 7L, () =>
+      Graph.personalizedPageRank(fx.path, "x", "y", fx.seeds, "id", iters = 17).count()),
+    // the third half-round frees the first: the fourth on is cancelled
+    ("hits", 1, 14L, () => Graph.hits(fx.path, "x", "y", iters = 3).count()),
+    // round 2 frees round 1's ranks: round 3 on
+    ("stationaryDistribution", 2, 3L, () =>
+      Graph.stationaryDistribution(fx.chain, "f", "t", "p", iters = 4).count()),
+    // round 2's count frees the seed frontier and dist: round 3 on
+    ("bfsDistances", 2, 6L, () =>
+      Graph.bfsDistances(fx.path, "x", "y", fx.seeds, "id", maxHops = 5).count()),
+    ("weightedShortestPaths", 2, 6L, () =>
+      Graph.weightedShortestPaths(fx.weighted, "x", "y", "w", fx.seeds, "id", maxHops = 5)
+        .count()),
+    // path 1-…-8 at k = 2 peels its two ends per round, four rounds;
+    // round 1 frees the start set: round 2 on
+    ("kCore", 2, 0L, () => Graph.kCore(fx.path, "x", "y", k = 2).count()),
+    // two triangles joined by a bridge, four rounds; round 1 frees the
+    // start labels: round 2 on
+    ("labelPropagation", 2, 6L, () =>
+      Graph.labelPropagation(fx.bridged, "x", "y", rounds = 4).count()),
+    // round 2's collect frees the first corpus generation: round 3 on
+    ("bpeTrain", 1, 4L, () => TextAnalysis.bpeTrain(fx.docs, col("txt"), rounds = 4).count()))
+
+  for ((name, cancelAt, rows, run) <- iterative)
+    test(s"$name: a round cancelled mid-run leaves no checkpoint blocks registered") {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+      val sc = spark.sparkContext
+      assert(run() == rows)
+      def pinned = sc.getPersistentRDDs.keySet.toSet
+      val before = pinned
+      val group = s"$name-cancel"
+      val floor = sc.emptyRDD[Int].id // the run's RDDs all get later ids
+      // every job of the group from the `cancelAt`-th unpersist of one
+      // of the run's RDDs on is cancelled
+      val frees = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+          if (e.rddId > floor && frees.incrementAndGet() == cancelAt)
+            sc.cancelJobGroupAndFutureJobs(group)
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, s"$name cancelled mid-run")
+      try {
+        val e = intercept[Exception](run())
+        assert(e.getMessage.contains("cancel"), e.getMessage)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      assert(frees.get >= cancelAt)
+      assert(pinned.diff(before).isEmpty, s"$name left checkpoint blocks registered")
+      assert(run() == rows) // the session still works
+    }
+
+  test("an eager pin whose own job fails leaves no checkpoint blocks registered") {
     import spark.implicits._
     val sc = spark.sparkContext
-    // two triangles joined by a bridge, four rounds
-    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
-      .toDF("x", "y")
+    // one partition end to end, so the derivation after the exchange
+    // plans with no Exchange of its own: the UDF throws inside the
+    // first pin's own job, after its checkpoint RDD is registered
+    val boom = udf((x: Long) => if (x > 0L) throw new IllegalStateException("boom") else x)
+      .asNondeterministic()
+    val edges = (1L to 8L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("x", "y")
+      .repartition(1).select(boom($"x").as("x"), $"y")
     def pinned = sc.getPersistentRDDs.keySet.toSet
-    val before = pinned
-    val group = "lpa-cancel"
-    val floor = sc.emptyRDD[Int].id // labelPropagation's RDDs all get later ids
-    // the edge pin frees its flat pass-1 edges, then round 1 frees the
-    // start labels: the second unpersist marks round 2's start, and
-    // every job of the group from then on is cancelled
-    val frees = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
-        if (e.rddId > floor && frees.incrementAndGet() == 2) sc.cancelJobGroupAndFutureJobs(group)
+    val leaked = Seq[(String, () => Any)](
+      "kCore" -> (() => Graph.kCore(edges, "x", "y", k = 2)),
+      "bfsDistances" -> (() =>
+        Graph.bfsDistances(edges, "x", "y", Seq(1L).toDF("id"), "id", maxHops = 3)),
+      "pageRank" -> (() => Graph.pageRank(edges, "x", "y", iters = 3))
+    ).flatMap { case (name, run) =>
+      val before = pinned
+      val e = intercept[Exception](run())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")), s"$name: $e")
+      Some(pinned.diff(before)).filter(_.nonEmpty).map(name -> _)
     }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "labelPropagation cancelled in round 2")
-    try {
-      val e = intercept[Exception](Graph.labelPropagation(g, "x", "y", rounds = 4).count())
-      assert(e.getMessage.contains("cancel"), e.getMessage)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(frees.get >= 2)
-    assert(pinned.diff(before).isEmpty, "labelPropagation left checkpoint blocks registered")
-    assert(Graph.labelPropagation(g, "x", "y", rounds = 4).count() == 6) // the session still works
+    assert(leaked.isEmpty, s"failed pins left registered: $leaked")
   }
 
   test("bpePairCounts: hand pairs; short docs skipped; deterministic tie order") {

@@ -185,7 +185,8 @@ class ZenithSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = pinned
     def pin() = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("s", "d")
       .repartition(3, col("s")).localCheckpoint()
-    val e = intercept[IllegalStateException](Graph.declare(pin(), Seq("s"), 4, sorted = false))
+    val e = intercept[IllegalStateException](
+      Graph.withPins(p => Graph.declare(p.hold(pin()), Seq("s"), 4, sorted = false)))
     assert(e.getMessage.contains("declared 4 partitions, materialized 3"), e.getMessage)
     assert(pinned.diff(before).isEmpty, "a refused declaration left its pin registered")
     val ok = Graph.declare(pin(), Seq("s"), 3, sorted = false)
@@ -196,9 +197,11 @@ class ZenithSpec extends AnyFunSuite with BeforeAndAfterAll {
       case p => fail(s"declared pin is rooted at ${p.nodeName}")
     }
     assert(ok.collect().length == 3)
-    val notPin = intercept[IllegalArgumentException](Graph.free(ok.select("s")))
-    assert(notPin.getMessage.contains("not a pin"), notPin.getMessage)
-    Graph.free(ok)
+    Graph.withPins { p =>
+      val notPin = intercept[IllegalArgumentException](p.free(ok.select("s")))
+      assert(notPin.getMessage.contains("not a pin"), notPin.getMessage)
+      p.free(ok)
+    }
     assert(pinned.diff(before).isEmpty, "free left the declared pin registered")
   }
 

@@ -259,13 +259,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "q123_pagerank" -> 8, "q217_personalized_pagerank" -> 12, "q74_dedup_clusters" -> 23,
       "q92_cap_per_cluster" -> 23, "q64_dedup_canonical_neardup" -> 8, "q205_label_prop" -> 37,
       "q153_bfs_khop" -> 34, "q206_weighted_sssp" -> 36, "q163_kcore" -> 25,
-      "q261_stationary_dist" -> 50, "q249_hits_rank" -> 25)
-    val got = recorded.map { case (name, _) =>
+      "q261_stationary_dist" -> 50, "q249_hits_rank" -> 25, "q197_bpe_train" -> 19)
+    // each counted job's SQL execution, call site and task count, to
+    // name the job a moved count gained or lost
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties).map(_.getProperty("spark.sql.execution.id")).orNull
+        jobs.add(s"${e.jobId}@$exec " +
+          e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(s => s"${s.name}#${s.numTasks}"))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try recorded.map { case (name, _) =>
       val q = Catalog.all.find(_.name == name).get
       q.build(spark, dir)
-      name -> org.apache.spark.JobCount(spark.sparkContext)(q.build(spark, dir))._2
-    }
-    assert(got == recorded)
+      // JobCount drains the listener bus before its body starts
+      val n = org.apache.spark.JobCount(spark.sparkContext) { jobs.clear(); q.build(spark, dir) }._2
+      (name -> n, jobs.toArray.mkString(s"$name:\n  ", "\n  ", ""))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(got.map(_._1) == recorded,
+      got.filterNot(recorded contains _._1).map(_._2).mkString("\n"))
   }
 
   test("q123 pins leave AQE on for a query running beside it on the same session") {
