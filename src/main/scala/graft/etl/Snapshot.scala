@@ -224,6 +224,14 @@ final class SnapshotStore(root: String,
     }
   }
 
+  /** The latest version's full manifest, pinned for one operation `op`:
+    * `m.version` is what its publish CAS composes against. Loud when
+    * the table has no versions.
+    */
+  private def latestManifest(op: String): Manifest =
+    readFullManifest(latestVersion.getOrElse(throw new IllegalArgumentException(
+      s"SnapshotStore.$op: no committed versions at $root")))
+
   /** Full-snapshot overwrite: stage `df` as fresh immutable files, then
     * publish a manifest listing ONLY them. Returns the new version.
     * Concurrent readers of any older version are untouched. With
@@ -266,13 +274,10 @@ final class SnapshotStore(root: String,
     */
   def commitReplacePartitions(df: DataFrame,
       txn: Option[(String, Long)] = None): Long = {
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.commitReplacePartitions: no committed versions at $root " +
-        "(commitOverwrite(partitionBy=...) creates the table)"))
-    val m = readFullManifest(v)
+    val m = pinForWrite("commitReplacePartitions")
+    val v = m.version
     require(m.partCols.nonEmpty,
       s"SnapshotStore.commitReplacePartitions: version $v is not partitioned")
-    refuseIdWrites(m.schema, "commitReplacePartitions")
     requireSameColumns(m.schema, df.schema, v)
     val staged = stagePartitioned(df, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
     val touched = staged.map(e => partitionTupleOf(e.path, m.partCols, m.colMap)).toSet
@@ -601,9 +606,8 @@ final class SnapshotStore(root: String,
     require(targetFiles >= 1, s"compactLatest: targetFiles must be >= 1, got $targetFiles")
     require(zorderBy.isEmpty || clusterBy.isEmpty,
       "compactLatest: clusterBy and zorderBy are mutually exclusive")
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.compactLatest: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("compactLatest")
+    val v = m.version
     // an ID-adopted table (parquet.field.id schema metadata) converts
     // to native HERE — but only as a FULL rewrite: a partial one would
     // mix id-resolved and name-resolved files under one schema
@@ -686,9 +690,7 @@ final class SnapshotStore(root: String,
       }
     // partitioned tables re-stage hive-style: targetFiles bounds the
     // files per PARTITION (each partition directory compacts separately)
-    val staged =
-      if (m.partCols.isEmpty) stageEntries(laid, m.statsColumn, m.colMap, m.bloomColumn)
-      else stagePartitioned(laid, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
+    val staged = restage(m, laid)
     // CONFLICT GRANULARITY (the second half of optimistic concurrency —
     // Delta's protocol lets a dataChange=false rewrite commit when the
     // concurrent commits didn't touch the files it rewrote): a
@@ -763,241 +765,230 @@ final class SnapshotStore(root: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Copy-on-write MERGE (upsert) into the latest version — the
-    * composition that makes the warehouse-merge path O(changed files)
-    * instead of O(table): candidate files are pruned by their manifest
-    * stats range against the delta's OWN key range (one tiny agg over
-    * the delta), ONLY those files are rewritten through
-    * [[Merge.upsert]], and the published manifest is untouched files +
-    * rewritten files. Untouched files keep their path identity, so the
-    * change feed emits only the touched files' rows (file-set diff) and
-    * readers of older versions are unaffected.
+  /** ROW-LEVEL DML — [[mergeInto]], [[applyChanges]], [[mergeClauses]],
+    * [[deleteWhere]] and [[updateWhere]] — is one sequence; each op
+    * supplies only its validation and its row logic, and commits ONE
+    * version:
     *
-    * Pruning soundness: when the table's stats column is one of `keys`,
-    * a file whose [min,max] cannot intersect the delta's [min,max] on
-    * that column contains no row matching ANY delta key — skipping it
-    * loses nothing. Files without stats, and every file when the stats
-    * column is not a key (or the table has none), are conservatively
-    * rewritten — correct, just the honest O(table) cost the manifest
-    * stats exist to avoid.
+    *  1. PIN the latest manifest and REFUSE an ID-mode adopted table
+    *     ([[pinForWrite]]). Every later step composes against that
+    *     version, and the publish expects the next one.
+    *  2. CANDIDATES ([[Candidates]]): the files the op may touch,
+    *     pruned at the manifest — by the source's key range on the
+    *     stats column plus its bloom point set ([[keyedCandidates]]),
+    *     or by the predicate's folded stats bounds plus its bloom point
+    *     set ([[predicateCandidates]]). A file without stats is always
+    *     a candidate, so pruning may miss but never lies. The same
+    *     keep-test over the files a racer ADDED is the op's conflict
+    *     test.
+    *  3. TOMBSTONE or REWRITE:
+    *     - COPY-ON-WRITE ([[rewrite]], the default): the candidates'
+    *       live rows go through the op's row logic and the result
+    *       replaces them. O(touched files) — the right physics for bulk
+    *       changes. Untouched files keep their path identity, so the
+    *       change feed emits only touched files' rows and readers of
+    *       older versions are unaffected.
+    *     - MERGE-ON-READ ([[tombstone]], `mergeOnRead = true`): no
+    *       data file is rewritten. The matched LIVE rows' (file,
+    *       position) pairs land in one position-list sidecar
+    *       (`data/<uuid>.dv/`, an ordinary distributed parquet write —
+    *       never a driver collect), each hit file's entry gains the DV
+    *       reference, and the op's images are appended. [[read]]
+    *       anti-joins the tombstones, the change feed emits them as
+    *       honest deletes, and the next copy-on-write rewrite or
+    *       [[compactLatest]] MATERIALIZES them. A scattered 1-row
+    *       change in a 100 TB table costs O(1 sidecar), not a 1 GB file
+    *       rewrite per hit file (Delta/Iceberg's deletion-vector idea
+    *       on the manifest's terms). Stats stay conservative upper
+    *       bounds.
+    *  4. RE-STAGE the new rows under the table's layout ([[restage]]).
+    *  5. PUBLISH with CONFLICT GRANULARITY ([[publishRowOp]]): a lost
+    *     CAS rebases over racers that touched other files and added
+    *     none the conflict test flags — two partition-sharded CDC
+    *     appliers over disjoint key ranges run concurrently, the
+    *     natural sharding at 100 TB — and fails loudly otherwise.
+    */
+  private final case class Candidates(files: Seq[FileEntry],
+      conflicts: Seq[FileEntry] => Seq[FileEntry])
+
+  /** Step 1 of a data-writing op: the latest manifest, refused when
+    * the table resolves columns by parquet field id.
+    */
+  private def pinForWrite(op: String): Manifest = {
+    val m = latestManifest(op)
+    refuseIdWrites(m.schema, op)
+    m
+  }
+
+  /** Candidates of a KEYED op: when the table's primary stats column is
+    * one of `keys`, the files whose [min,max] can intersect `rows`' key
+    * range (one min/max/NULL-count job over the source) — a file whose
+    * range misses it holds no row sharing a source key. Unless
+    * `rangeOnly`, the bloom point set composes: when the source is a
+    * small point set on the bloom column, files whose filter excludes
+    * every key drop out — the unclustered-key pruning range stats
+    * cannot give.
     *
-    * Publication is CAS-pinned to the version the rewrite read, with
-    * CONFLICT GRANULARITY on a lost race ([[publishRowOp]]): when the
-    * racers were appends or row-level ops over OTHER files — every
-    * touched file still present with its pinned DV set, and no
-    * racer-added file whose stats range intersects the delta's key
-    * range — the merge REBASES onto the new latest; anything else
-    * fails loudly (blind rebase could resurrect rows a racer changed).
-    * Two partition-sharded CDC appliers over disjoint key ranges
-    * therefore run concurrently — the natural sharding at 100 TB.
-    *
-    * MERGE-ON-READ (`mergeOnRead = true`): no candidate file is
-    * rewritten. The matched LIVE target rows (null-safe key equality —
-    * the same grouping [[Merge.upsert]]'s window applies) are
-    * tombstoned through one position-list DV sidecar and the WHOLE
-    * delta lands as one appended file set — replaced images and fresh
-    * inserts alike. A steady CDC upsert stream then costs O(delta) per
-    * micro-batch instead of rewriting every hit file, with
-    * [[compactLatest]] materializing the tombstones on maintenance
-    * cadence. The delta must be UNIQUE per key tuple under MoR
+    * NULL keys under range pruning are refused: footer min/max never
+    * cover nulls, so a null-key target row in a pruned file would
+    * escape the op while one in a candidate would not (land null-key
+    * rows with commitAppend). `rangeOnly` (general MERGE) lets them
+    * through: a NULL source key never matches under SQL equality and
+    * flows to NOT MATCHED, which is file-independent.
+    */
+  private def keyedCandidates(op: String, m: Manifest, rows: DataFrame,
+      keys: Seq[String], rangeOnly: Boolean = false): Candidates = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
+    val inRange: FileEntry => Boolean =
+      statsParts(m.statsColumn).headOption.filter(keys.contains) match {
+        case None => _ => true
+        case Some(c) =>
+          val r = rows.agg(min(col(c)), max(col(c)),
+            count(when(col(c).isNull, lit(1)))).head()
+          require(rangeOnly || r.getLong(2) == 0L,
+            s"SnapshotStore.$op: ${r.getLong(2)} rows carry a NULL '$c' key " +
+              "— null merge keys are not supported under stats pruning")
+          if (r.isNullAt(0)) _ => false // no matchable key: reads nothing
+          else {
+            val (lo, hi) = (toStatsLong(r.get(0)), toStatsLong(r.get(1)))
+            e => e.min.zip(e.max).forall { case (mn, mx) => mx >= lo && mn <= hi }
+          }
+      }
+    val bloomHs =
+      if (rangeOnly) None
+      else m.bloomColumn.filter(keys.contains).flatMap(deltaKeyHashes(rows, _))
+    val keep = (e: FileEntry) => inRange(e) && bloomHs.forall(bloomKeep(e, _))
+    Candidates(m.entries.filter(keep), _.filter(keep))
+  }
+
+  /** Refuse a source holding two rows on one key tuple (one aggregate
+    * job over the source).
+    */
+  private def requireUniqueKeys(rows: DataFrame, keys: Seq[String],
+      message: => String): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    require(rows.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L).isEmpty, message)
+  }
+
+  /** Step 3, copy-on-write: the candidates' live rows → `rows` →
+    * re-staged; the candidates leave the manifest.
+    */
+  private def rewrite(spark: SparkSession, m: Manifest, c: Candidates,
+      txn: Option[(String, Long)])(rows: DataFrame => DataFrame): Long =
+    publishRowOp(m, c.files.map(_.path).toSet, Map.empty,
+      restage(m, rows(scan(spark, m.schema, c.files, m.partCols, m.colMap))),
+      txn, c.conflicts)
+
+  /** Step 3, merge-on-read: tombstone the candidates' live rows that
+    * `matched` keeps, then append `images(matched rows, anyHit)` when it
+    * yields a frame.
+    */
+  private def tombstone(spark: SparkSession, m: Manifest, c: Candidates,
+      txn: Option[(String, Long)])(matched: DataFrame => DataFrame,
+      images: (DataFrame, Boolean) => Option[DataFrame]): Long = {
+    import org.apache.spark.sql.functions.col
+    val rows = matched(liveWithPos(spark, m.schema, c.files, m.partCols, m.colMap))
+    val (dvRel, hitFiles) = writeDvSidecar(spark,
+      rows.select(col("__file").as("file"), col("__pos").as("pos")))
+    publishRowOp(m, Set.empty, hitFiles.map(_ -> dvRel).toMap,
+      images(rows, hitFiles.nonEmpty).fold(Seq.empty[FileEntry])(restage(m, _)),
+      txn, c.conflicts)
+  }
+
+  /** MERGE (upsert) into the latest version: every `delta` row replaces
+    * the target row sharing its key tuple, or is inserted. Candidates
+    * are pruned by the delta's key range and bloom point set
+    * ([[keyedCandidates]]; NULL keys are refused under range pruning).
+    * Copy-on-write rewrites the candidates through [[Merge.upsert]]'s
+    * single-shuffle window. Merge-on-read tombstones the matched LIVE
+    * target rows (null-safe key equality — the grouping the window
+    * applies) and appends the WHOLE delta, replaced images and fresh
+    * inserts alike: a steady CDC upsert stream then costs O(delta) per
+    * micro-batch. The delta must be UNIQUE per key tuple under MoR
     * (appending two images of one key would keep both; the CoW window
     * picks an arbitrary winner — dedup upstream with
     * [[graft.ext.Dedup.latestByKey]]), refused loudly otherwise.
     */
   def mergeInto(spark: SparkSession, delta: DataFrame, keys: Seq[String],
-      txn: Option[(String, Long)] = None, mergeOnRead: Boolean = false): Long = {
-    require(keys.nonEmpty, "SnapshotStore.mergeInto: no key columns")
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.mergeInto: no committed versions at $root"))
-    val m = readFullManifest(v)
-    refuseIdWrites(m.schema, "mergeInto")
-    require(DataType.equalsIgnoreNullability(m.schema, delta.schema),
-      s"SnapshotStore.mergeInto: delta schema ${delta.schema.simpleString} " +
-        s"must match table schema ${m.schema.simpleString}")
-    val pruneCol = statsParts(m.statsColumn).headOption.filter(keys.contains)
-    val (touched, untouched, deltaRange) = pruneCol match {
-      case Some(c) =>
-        import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-        val r = delta.agg(min(col(c)), max(col(c)),
-          count(when(col(c).isNull, lit(1)))).head()
-        // NULL merge keys are refused: footer min/max never cover
-        // nulls, so a null-key base row in a pruned file would escape
-        // the rewrite while one in a touched file would not — a
-        // nondeterministic upsert (and SQL MERGE's ON never matches
-        // null = null anyway; land null-key rows with commitAppend)
-        require(r.getLong(2) == 0L,
-          s"SnapshotStore.mergeInto: delta has ${r.getLong(2)} rows with a " +
-            s"NULL '$c' key — null merge keys are not supported")
-        if (r.isNullAt(0)) // empty delta
-          (Seq.empty[FileEntry], m.entries, None)
-        else {
-          val (lo, hi) = (toStatsLong(r.get(0)), toStatsLong(r.get(1)))
-          val (t, u) = m.entries.partition(e => (e.min, e.max) match {
-            case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-            case _ => true // no stats -> conservatively rewritten
-          })
-          (t, u, Some((lo, hi)))
-        }
-      case None => (m.entries, Seq.empty[FileEntry], None)
-    }
-    // BLOOM key-set pruning composes with the range split: when the
-    // delta is a small point set on the bloom column (scattered CDC
-    // upserts), files whose filter excludes every key drop out — the
-    // unclustered-key pruning the range stats cannot give
-    val bloomHs: Option[Set[Long]] =
-      m.bloomColumn.filter(keys.contains)
-        .flatMap(bc => deltaKeyHashes(delta, bc))
-    val touchedB = bloomHs match {
-      case Some(hs) => touched.filter(e => bloomKeep(e, hs))
-      case None => touched
-    }
-    val conflicts = composeBloomConflicts(
-      keyRangeConflicts(m.statsColumn, pruneCol, deltaRange), bloomHs)
-    if (mergeOnRead) {
-      import org.apache.spark.sql.functions.{col, count, lit}
-      require(delta.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L).isEmpty,
-        "SnapshotStore.mergeInto(mergeOnRead): multiple delta rows share a " +
-          "key tuple — appending both would keep both; dedup the delta " +
-          "first (Dedup.latestByKey)")
-      val dkeys = delta.select(keys.map(k => col(k).as(s"__d_$k")): _*)
-      val matchedRows = liveWithPos(spark, m.schema, touchedB, m.partCols, m.colMap)
-        .join(dkeys, keys.map(k => col(k) <=> col(s"__d_$k")).reduce(_ && _),
-          "left_semi")
-      val (dvRel, hitFiles) = writeDvSidecar(spark,
-        matchedRows.select(col("__file").as("file"), col("__pos").as("pos")))
-      val staged =
-        if (m.partCols.isEmpty) stageEntries(delta, m.statsColumn, m.colMap, m.bloomColumn)
-        else stagePartitioned(delta, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-      publishRowOp(m, Set.empty, hitFiles.map(_ -> dvRel).toMap, staged, txn,
-        conflicts)
-    } else {
-      val merged = Merge.upsert(scan(spark, m.schema, touchedB, m.partCols, m.colMap), delta, keys)
-      val staged =
-        if (m.partCols.isEmpty) stageEntries(merged, m.statsColumn, m.colMap, m.bloomColumn)
-        else stagePartitioned(merged, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-      publishRowOp(m, touchedB.map(_.path).toSet, Map.empty, staged, txn,
-        conflicts)
-    }
-  }
+      txn: Option[(String, Long)] = None, mergeOnRead: Boolean = false): Long =
+    keyedApply(spark, "mergeInto", delta, keys, None, txn, mergeOnRead)
 
-  /** Op-coded change apply — the CDC replication primitive: one commit
-    * applying a change batch where each row carries an op marker
-    * (`"U"` replaces/inserts the key, `"D"` removes it), the store-level
-    * twin of [[Merge.applyChangeLog]] (q125). This is what a change-FEED
-    * consumer needs that [[mergeInto]] cannot do: propagate DELETES.
-    * `changes` must be the table schema plus `opCol`, UNIQUE per key
-    * tuple (collapse multi-version batches upstream — the streaming
-    * sink does).
-    *
-    * Same physics menu as the other row-level ops, one version either
-    * way: COPY-ON-WRITE rewrites the key-range-pruned candidate files
-    * through the single-shuffle union+window apply; MERGE-ON-READ
-    * tombstones every matched live row (updates AND deletes) through
-    * one DV sidecar and appends only the `"U"` images — O(delta) per
-    * batch, zero files rewritten, the configuration a steady
-    * replication stream runs. Deleting an absent key is a no-op, as
-    * MERGE semantics require. Pruning is sound for deletes too: a file
-    * whose stats range cannot intersect the batch's key range holds no
-    * row any change (update or delete) could touch.
+  /** Op-coded change apply — the CDC replication primitive: each row
+    * carries an op marker (`"U"` replaces/inserts the key, `"D"`
+    * removes it), the store-level twin of [[Merge.applyChangeLog]]
+    * (q125). This is what a change-FEED consumer needs that
+    * [[mergeInto]] cannot do: propagate DELETES. `changes` must be the
+    * table schema plus `opCol`, UNIQUE per key tuple (collapse
+    * multi-version batches upstream — the streaming sink does).
+    * Copy-on-write rewrites the candidates through the single-shuffle
+    * union+window apply; merge-on-read tombstones every matched live
+    * row (updates AND deletes) and appends only the `"U"` images.
+    * Deleting an absent key is a no-op, as MERGE semantics require.
+    * Key-range pruning is sound for deletes too: a file whose stats
+    * range cannot intersect the batch's key range holds no row any
+    * change could touch.
     */
   def applyChanges(spark: SparkSession, changes: DataFrame, keys: Seq[String],
       opCol: String = "op", txn: Option[(String, Long)] = None,
-      mergeOnRead: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-    require(keys.nonEmpty, "SnapshotStore.applyChanges: no key columns")
-    require(changes.columns.contains(opCol),
-      s"SnapshotStore.applyChanges: changes lacks op column '$opCol'")
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.applyChanges: no committed versions at $root"))
-    val m = readFullManifest(v)
-    refuseIdWrites(m.schema, "applyChanges")
-    val dataCols = changes.schema.fields.filterNot(_.name == opCol)
-    require(DataType.equalsIgnoreNullability(
-        StructType(dataCols), m.schema),
-      s"SnapshotStore.applyChanges: changes schema (minus '$opCol') " +
-        s"${StructType(dataCols).simpleString} must match table schema " +
-        s"${m.schema.simpleString}")
-    require(changes.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L).isEmpty,
-      "SnapshotStore.applyChanges: multiple change rows share a key tuple " +
+      mergeOnRead: Boolean = false): Long =
+    keyedApply(spark, "applyChanges", changes, keys, Some(opCol), txn, mergeOnRead)
+
+  /** [[mergeInto]] (`opCol` None) and [[applyChanges]] (`opCol` Some):
+    * one keyed apply — they differ only in whether rows carry an op
+    * column. The CoW upsert needs no uniqueness job (its window picks
+    * one image per key).
+    */
+  private def keyedApply(spark: SparkSession, op: String, rows: DataFrame,
+      keys: Seq[String], opCol: Option[String], txn: Option[(String, Long)],
+      mergeOnRead: Boolean): Long = {
+    import org.apache.spark.sql.functions.col
+    require(keys.nonEmpty, s"SnapshotStore.$op: no key columns")
+    opCol.foreach(o => require(rows.columns.contains(o),
+      s"SnapshotStore.$op: changes lacks op column '$o'"))
+    val m = pinForWrite(op)
+    val data = StructType(rows.schema.fields.filterNot(f => opCol.contains(f.name)))
+    require(DataType.equalsIgnoreNullability(data, m.schema),
+      s"SnapshotStore.$op: " +
+        opCol.fold("delta schema")(o => s"changes schema (minus '$o')") +
+        s" ${data.simpleString} must match table schema ${m.schema.simpleString}")
+    if (opCol.nonEmpty) requireUniqueKeys(rows, keys,
+      s"SnapshotStore.$op: multiple change rows share a key tuple " +
         "— collapse to the final state per key first (Dedup.latestByKey)")
-    val pruneCol = statsParts(m.statsColumn).headOption.filter(keys.contains)
-    val (touched, untouched, deltaRange) = pruneCol match {
-      case Some(c) =>
-        val r = changes.agg(min(col(c)), max(col(c)),
-          count(when(col(c).isNull, lit(1)))).head()
-        require(r.getLong(2) == 0L,
-          s"SnapshotStore.applyChanges: ${r.getLong(2)} rows carry a NULL " +
-            s"'$c' key — null keys are not supported under stats pruning")
-        if (r.isNullAt(0)) (Seq.empty[FileEntry], m.entries, None)
-        else {
-          val (lo, hi) = (toStatsLong(r.get(0)), toStatsLong(r.get(1)))
-          val (t, u) = m.entries.partition(e => (e.min, e.max) match {
-            case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-            case _ => true
-          })
-          (t, u, Some((lo, hi)))
-        }
-      case None => (m.entries, Seq.empty[FileEntry], None)
-    }
-    // BLOOM key-set pruning composes with the range split: when the
-    // delta is a small point set on the bloom column (scattered CDC
-    // upserts), files whose filter excludes every key drop out — the
-    // unclustered-key pruning the range stats cannot give
-    val bloomHs: Option[Set[Long]] =
-      m.bloomColumn.filter(keys.contains)
-        .flatMap(bc => deltaKeyHashes(changes, bc))
-    val touchedB = bloomHs match {
-      case Some(hs) => touched.filter(e => bloomKeep(e, hs))
-      case None => touched
-    }
-    val conflicts = composeBloomConflicts(
-      keyRangeConflicts(m.statsColumn, pruneCol, deltaRange), bloomHs)
+    else if (mergeOnRead) requireUniqueKeys(rows, keys,
+      s"SnapshotStore.$op(mergeOnRead): multiple delta rows share a " +
+        "key tuple — appending both would keep both; dedup the delta " +
+        "first (Dedup.latestByKey)")
+    val c = keyedCandidates(op, m, rows, keys)
+    val cols = m.schema.fieldNames.toSeq.map(col)
     if (mergeOnRead) {
-      val dkeys = changes.select(keys.map(k => col(k).as(s"__d_$k")): _*)
-      val matchedRows = liveWithPos(spark, m.schema, touchedB, m.partCols, m.colMap)
-        .join(dkeys, keys.map(k => col(k) <=> col(s"__d_$k")).reduce(_ && _),
-          "left_semi")
-      val (dvRel, hitFiles) = writeDvSidecar(spark,
-        matchedRows.select(col("__file").as("file"), col("__pos").as("pos")))
-      val images = changes.filter(Merge.validatedOp(col(opCol)) === "U")
-        .select(m.schema.fieldNames.toSeq.map(col): _*)
-      val staged =
-        if (m.partCols.isEmpty) stageEntries(images, m.statsColumn, m.colMap, m.bloomColumn)
-        else stagePartitioned(images, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-      publishRowOp(m, Set.empty, hitFiles.map(_ -> dvRel).toMap, staged, txn,
-        conflicts)
-    } else {
-      val shaped = changes.select(
-        (m.schema.fieldNames.toSeq :+ opCol).map(col): _*)
-      val applied = Merge.applyChangeLog(
-        scan(spark, m.schema, touchedB, m.partCols, m.colMap), shaped, keys, opCol)
-      val staged =
-        if (m.partCols.isEmpty) stageEntries(applied, m.statsColumn, m.colMap, m.bloomColumn)
-        else stagePartitioned(applied, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-      publishRowOp(m, touchedB.map(_.path).toSet, Map.empty, staged, txn,
-        conflicts)
-    }
+      val dkeys = rows.select(keys.map(k => col(k).as(s"__d_$k")): _*)
+      val images = opCol.fold(rows)(o =>
+        rows.filter(Merge.validatedOp(col(o)) === "U").select(cols: _*))
+      tombstone(spark, m, c, txn)(
+        _.join(dkeys, keys.map(k => col(k) <=> col(s"__d_$k")).reduce(_ && _),
+          "left_semi"),
+        (_, _) => Some(images))
+    } else rewrite(spark, m, c, txn)(live => opCol match {
+      case None => Merge.upsert(live, rows, keys)
+      case Some(o) => Merge.applyChangeLog(live, rows.select(cols :+ col(o): _*), keys, o)
+    })
   }
 
   /** General MERGE — the full WHEN-clause algebra
     * (`WHEN MATCHED [AND cond] THEN UPDATE SET .../DELETE`,
     * `WHEN NOT MATCHED [AND cond] THEN INSERT ...`), first-match-wins
-    * per SQL, executed as ONE copy-on-write manifest version. This is
-    * what an op-coded CDC feed needs (`AND s.op = 'D' THEN DELETE`);
-    * the unconditional-star upsert keeps its cheaper single-shuffle
-    * path in [[mergeInto]].
+    * per SQL, executed as ONE copy-on-write version. This is what an
+    * op-coded CDC feed needs (`AND s.op = 'D' THEN DELETE`); the
+    * unconditional-star upsert keeps its cheaper single-shuffle path in
+    * [[mergeInto]].
     *
-    * Physics — the same CoW cost model as [[mergeInto]]: candidate
-    * files are pruned by the source's key range against the manifest
-    * stats (sound because every MATCHED effect is confined to rows
-    * sharing a source key; pruned files can hold none), only candidates
-    * are rewritten through one full-outer join against the source, and
-    * untouched files keep their path identity — so the change feed
-    * emits only genuinely affected rows. NULL source keys never match
-    * (SQL three-valued equality) and flow to the NOT MATCHED arm —
-    * sound under pruning, since inserts are file-independent.
+    * Candidates are pruned by the source's key RANGE only (sound
+    * because every MATCHED effect is confined to rows sharing a source
+    * key) and rewritten through one full-outer join against the source.
+    * NULL source keys never match (SQL three-valued equality) and flow
+    * to the NOT MATCHED arm — sound under pruning, since inserts are
+    * file-independent.
     *
     * Source keys must be UNIQUE per tuple: a target row matching two
     * source rows is SQL's cardinality violation — refused loudly up
@@ -1009,11 +1000,12 @@ final class SnapshotStore(root: String,
     * full-state-sync shape (source = the desired table; absent rows
     * deleted or flagged). Its effects reach target rows that share NO
     * source key, so the key-range file pruning is UNSOUND for them:
-    * when any such clause is present, EVERY file is a candidate — the
-    * honest O(table) cost full-state sync inherently carries. `UPDATE
-    * SET *` is refused there (there is no source row to star from),
-    * and conditions/values must address target columns only (`__t_`);
-    * a source reference would evaluate against NULL.
+    * when any such clause is present, EVERY file is a candidate and
+    * every racer-added file conflicts — the honest O(table) cost
+    * full-state sync inherently carries. `UPDATE SET *` is refused
+    * there (there is no source row to star from), and conditions/values
+    * must address target columns only (`__t_`); a source reference
+    * would evaluate against NULL.
     *
     * Clause conditions/values address columns through the `__t_`/`__s_`
     * prefix namespace — see [[SnapshotStore.MergeClause]].
@@ -1023,7 +1015,7 @@ final class SnapshotStore(root: String,
       notMatched: Seq[SnapshotStore.MergeClause],
       notMatchedBySource: Seq[SnapshotStore.MergeClause] = Nil,
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, not, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
     import SnapshotStore.{MergeClause, MergeDelete, MergeInsert, MergeUpdate}
     require(keys.nonEmpty, "SnapshotStore.mergeClauses: no key columns")
     matched.foreach {
@@ -1045,9 +1037,7 @@ final class SnapshotStore(root: String,
         s"SnapshotStore.mergeClauses: only UPDATE/DELETE are NOT MATCHED " +
           s"BY SOURCE actions, got $other")
     }
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.mergeClauses: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = pinForWrite("mergeClauses")
     val tableCols = m.schema.fieldNames.toSet
     keys.foreach { k =>
       require(tableCols.contains(k) && source.columns.contains(k),
@@ -1069,51 +1059,14 @@ final class SnapshotStore(root: String,
         tableCols.contains(k), s"mergeClauses: INSERT targets unknown column '$k'"))
       case _ => ()
     }
-    // SQL cardinality rule: at most one source row per key tuple
-    require(source.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L).isEmpty,
+    requireUniqueKeys(source, keys,
       "SnapshotStore.mergeClauses: multiple source rows share an ON key " +
         "tuple — SQL MERGE cardinality violation (dedup the source first)")
-    // candidate pruning by the source's key range on the stats column —
-    // UNSOUND when a NOT MATCHED BY SOURCE clause is present (its
-    // effects reach rows sharing no source key): every file is a
-    // candidate then
-    val pruneCol =
-      if (notMatchedBySource.nonEmpty) None
-      else statsParts(m.statsColumn).headOption.filter(keys.contains)
-    val (touched, untouched, sourceRange) = pruneCol match {
-      case Some(c) =>
-        val r = source.agg(min(col(c)), max(col(c))).head()
-        if (r.isNullAt(0)) // no matchable key
-          (Seq.empty[FileEntry], m.entries, None)
-        else {
-          val (lo, hi) = (toStatsLong(r.get(0)), toStatsLong(r.get(1)))
-          val (t, u) = m.entries.partition(e => (e.min, e.max) match {
-            case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-            case _ => true
-          })
-          (t, u, Some((lo, hi)))
-        }
-      case None => (m.entries, Seq.empty[FileEntry], None)
-    }
-    // NOT MATCHED [BY SOURCE] arms read/produce rows beyond the key
-    // range (an insert is file-independent but a racer-added file could
-    // carry the same key, flipping matched/not-matched) — with any
-    // NOT MATCHED clause and an unconditional key-range check only,
-    // stay conservative: rebase only over racers whose added files
-    // cannot intersect the source keys; full-state sync (pruneCol None)
-    // conflicts with every added file.
-    val conflicts = keyRangeConflicts(m.statsColumn, pruneCol, sourceRange)
-    // two-sided join under the prefix namespace
-    val t = scan(spark, m.schema, touched, m.partCols, m.colMap)
-      .select(m.schema.fieldNames.toSeq.map(n => col(n).as(s"__t_$n")): _*)
-      .withColumn("__t_ex", lit(true))
+    val c = keyedCandidates("mergeClauses", m, source,
+      if (notMatchedBySource.isEmpty) keys else Nil, rangeOnly = true)
     val s = source
       .select(source.columns.toSeq.map(n => col(n).as(s"__s_$n")): _*)
       .withColumn("__s_ex", lit(true))
-    val joined = t.join(s,
-      keys.map(k => col(s"__t_$k") === col(s"__s_$k")).reduce(_ && _),
-      "full_outer")
     val tEx = coalesce(col("__t_ex"), lit(false))
     val sEx = coalesce(col("__s_ex"), lit(false))
     // first-match-wins clause index; -1 = no clause applies
@@ -1123,11 +1076,6 @@ final class SnapshotStore(root: String,
           when(coalesce(cl.cond.getOrElse(lit(true)), lit(false)), lit(i))
             .otherwise(acc)
       }
-    val withActs = joined
-      .withColumn("__mact", when(tEx && sEx, firstMatch(matched)).otherwise(lit(-1)))
-      .withColumn("__nact", when(!tEx && sEx, firstMatch(notMatched)).otherwise(lit(-1)))
-      .withColumn("__bact", when(tEx && !sEx, firstMatch(notMatchedBySource))
-        .otherwise(lit(-1)))
     val deleteIdx = matched.zipWithIndex.collect { case (_: MergeDelete, i) => i }
     val deleteIdxB = notMatchedBySource.zipWithIndex.collect {
       case (_: MergeDelete, i) => i
@@ -1166,147 +1114,73 @@ final class SnapshotStore(root: String,
         .otherwise(insertedVal)
         .cast(f.dataType).as(f.name)
     }
-    val merged = withActs.filter(keepRow).select(outCols: _*)
-    val staged =
-      if (m.partCols.isEmpty) stageEntries(merged, m.statsColumn, m.colMap, m.bloomColumn)
-      else stagePartitioned(merged, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-    publishRowOp(m, touched.map(_.path).toSet, Map.empty, staged, txn,
-      conflicts)
-  }
-
-  /** DELETE of the rows where `predicate` is TRUE (NULL keeps the row —
-    * SQL DELETE semantics). Candidate files are pruned at the manifest
-    * by folding the predicate's conjuncts over the stats column into
-    * one [lo, hi] interval (same fold the format's FileIndex applies at
-    * planning time). Two physical strategies, CAS-pinned with rebase
-    * granularity either way ([[publishRowOp]] — racers over other
-    * files, or appends outside the predicate's stats bounds, rebase;
-    * anything that touched this op's rows fails loudly):
-    *
-    *   - COPY-ON-WRITE (default): intersecting files are rewritten with
-    *     the predicate's complement; non-intersecting files keep their
-    *     path identity. O(touched files) write — the right physics for
-    *     bulk deletes.
-    *   - MERGE-ON-READ (`mergeOnRead = true`): no data file is touched
-    *     at all. The matching rows' (file, position) pairs are written
-    *     to one position-list sidecar (`data/<uuid>.dv/`, an ordinary
-    *     distributed parquet write — never a driver collect) and each
-    *     affected file's manifest entry gains a DV reference; [[read]]
-    *     anti-joins them out at scan time, the change feed emits them
-    *     as honest deletes, and the next copy-on-write rewrite or
-    *     [[compactLatest]] MATERIALIZES and clears them. A scattered
-    *     1-row delete in a 100 TB table costs O(1 sidecar), not a 1 GB
-    *     file rewrite per hit file — the step that keeps row-level DML
-    *     usable at scale when keys aren't clustered (Delta/Iceberg's
-    *     deletion-vector idea on the manifest's terms). Stats stay
-    *     conservative upper bounds (deletes only remove rows).
-    */
-  def deleteWhere(spark: SparkSession, predicate: org.apache.spark.sql.Column,
-      mergeOnRead: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.deleteWhere: no committed versions at $root"))
-    val m = readFullManifest(v)
-    refuseIdWrites(m.schema, "deleteWhere")
-    val (touched, untouched) = predicateCandidates(spark, m, predicate)
-    val hit = coalesce(predicate, lit(false))
-    // racer-added files that the predicate's stats bounds could reach
-    // would have been candidates too — rebasing past them would miss
-    // their matching rows
-    val conflicts: Seq[FileEntry] => Seq[FileEntry] = added =>
-      predicateCandidates(spark, m.copy(entries = added), predicate)._1
-    if (mergeOnRead) {
-      val hits = liveWithPos(spark, m.schema, touched, m.partCols, m.colMap)
-        .filter(hit)
-        .select(col("__file").as("file"), col("__pos").as("pos"))
-      val (dvRel, hitFiles) = writeDvSidecar(spark, hits)
-      publishRowOp(m, Set.empty, hitFiles.map(_ -> dvRel).toMap, Nil, None,
-        conflicts)
-    } else {
-      val kept = scan(spark, m.schema, touched, m.partCols, m.colMap).filter(not(hit))
-      val staged =
-        if (m.partCols.isEmpty) stageEntries(kept, m.statsColumn, m.colMap, m.bloomColumn)
-        else stagePartitioned(kept, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-      publishRowOp(m, touched.map(_.path).toSet, Map.empty, staged, None,
-        conflicts)
+    rewrite(spark, m, c, txn) { live =>
+      // two-sided join under the prefix namespace
+      val t = live
+        .select(m.schema.fieldNames.toSeq.map(n => col(n).as(s"__t_$n")): _*)
+        .withColumn("__t_ex", lit(true))
+      t.join(s, keys.map(k => col(s"__t_$k") === col(s"__s_$k")).reduce(_ && _),
+          "full_outer")
+        .withColumn("__mact", when(tEx && sEx, firstMatch(matched)).otherwise(lit(-1)))
+        .withColumn("__nact", when(!tEx && sEx, firstMatch(notMatched)).otherwise(lit(-1)))
+        .withColumn("__bact", when(tEx && !sEx, firstMatch(notMatchedBySource))
+          .otherwise(lit(-1)))
+        .filter(keepRow).select(outCols: _*)
     }
   }
 
-  /** Copy-on-write UPDATE: rows where `predicate` is TRUE get the
-    * `assignments` applied (SQL semantics — NULL predicate leaves the
-    * row unchanged); candidate files are pruned by the predicate's
-    * folded stats bounds exactly like [[deleteWhere]], only
-    * intersecting files are rewritten, untouched files keep their path
-    * identity. Assignment values may reference any table column (they
-    * resolve against the rewritten scan). Updating a PARTITION column
-    * is supported — re-staging is hive-partitioned, so changed rows
-    * physically move to their new partition directory. CAS-pinned with
-    * [[publishRowOp]]'s rebase granularity.
+  /** DELETE of the rows where `predicate` is TRUE (NULL keeps the row —
+    * SQL DELETE semantics), candidates pruned by the predicate's folded
+    * stats bounds ([[predicateCandidates]]). Copy-on-write rewrites the
+    * candidates with the predicate's complement; merge-on-read
+    * tombstones the matching live rows and appends nothing.
+    */
+  def deleteWhere(spark: SparkSession, predicate: org.apache.spark.sql.Column,
+      mergeOnRead: Boolean = false): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    val m = pinForWrite("deleteWhere")
+    val c = predicateCandidates(spark, m, predicate)
+    val hit = coalesce(predicate, lit(false))
+    if (mergeOnRead) tombstone(spark, m, c, None)(_.filter(hit), (_, _) => None)
+    else rewrite(spark, m, c, None)(_.filter(not(hit)))
+  }
+
+  /** UPDATE: rows where `predicate` is TRUE get the `assignments`
+    * applied (SQL semantics — NULL predicate leaves the row unchanged),
+    * candidates pruned exactly like [[deleteWhere]]. Assignment values
+    * may reference any table column (they resolve against the
+    * candidates' scan). Updating a PARTITION column is supported —
+    * re-staging is hive-partitioned, so changed rows physically move to
+    * their new partition directory.
     *
-    * MERGE-ON-READ (`mergeOnRead = true`): no candidate file is
-    * rewritten. The matching LIVE rows are tombstoned through one
-    * position-list DV sidecar (exactly [[deleteWhere]]'s physics) and
-    * their post-assignment images land as ONE appended file set — a
-    * scattered 1-row update costs O(delta) instead of O(touched
-    * files), the change feed emits the honest delete(old image) +
-    * insert(new image), and the next CoW rewrite or [[compactLatest]]
-    * materializes the tombstones. Assignments must be deterministic
-    * under MoR (matched rows are scanned once for positions and once
-    * for images — a `rand()` would tombstone one row and insert a
-    * different one).
+    * Merge-on-read tombstones the matching live rows and appends their
+    * post-assignment images: the change feed emits the honest
+    * delete(old image) + insert(new image). No match commits an honest
+    * empty version (the orphan sidecar is vacuum's). Assignments must
+    * be deterministic under MoR (matched rows are scanned once for
+    * positions and once for images — a `rand()` would tombstone one row
+    * and insert a different one).
     */
   def updateWhere(spark: SparkSession, predicate: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
       mergeOnRead: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "SnapshotStore.updateWhere: no assignments")
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.updateWhere: no committed versions at $root"))
-    val m = readFullManifest(v)
-    refuseIdWrites(m.schema, "updateWhere")
+    val m = pinForWrite("updateWhere")
     assignments.keys.foreach(k => require(m.schema.fieldNames.contains(k),
       s"SnapshotStore.updateWhere: no column '$k' in ${m.schema.fieldNames.mkString(", ")}"))
-    val (touched, untouched) = predicateCandidates(spark, m, predicate)
+    val c = predicateCandidates(spark, m, predicate)
     val hit = coalesce(predicate, lit(false))
-    val conflicts: Seq[FileEntry] => Seq[FileEntry] = added =>
-      predicateCandidates(spark, m.copy(entries = added), predicate)._1
-    if (mergeOnRead) {
-      val matchedRows = liveWithPos(spark, m.schema, touched, m.partCols, m.colMap)
-        .filter(hit)
-      val (dvRel, hitFiles) = writeDvSidecar(spark,
-        matchedRows.select(col("__file").as("file"), col("__pos").as("pos")))
-      if (hitFiles.isEmpty)
-        // no match: an honest empty commit (orphan sidecar -> vacuum)
-        publishRowOp(m, Set.empty, Map.empty, Nil, None, conflicts)
-      else {
-        val images = matchedRows.select(
-          m.schema.fields.toSeq.map { f =>
-            assignments.get(f.name) match {
-              case Some(value) => value.cast(f.dataType).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*)
-        val staged =
-          if (m.partCols.isEmpty) stageEntries(images, m.statsColumn, m.colMap, m.bloomColumn)
-          else stagePartitioned(images, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-        publishRowOp(m, Set.empty, hitFiles.map(_ -> dvRel).toMap, staged,
-          None, conflicts)
-      }
-    } else {
-      val updated = scan(spark, m.schema, touched, m.partCols, m.colMap).select(
-        m.schema.fields.toSeq.map { f =>
-          assignments.get(f.name) match {
-            case Some(value) =>
-              when(hit, value.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-      val staged =
-        if (m.partCols.isEmpty) stageEntries(updated, m.statsColumn, m.colMap, m.bloomColumn)
-        else stagePartitioned(updated, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
-      publishRowOp(m, touched.map(_.path).toSet, Map.empty, staged, None,
-        conflicts)
-    }
+    // every table column, an assigned one through `assign(column, value)`
+    def assigned(assign: (String, org.apache.spark.sql.Column) => org.apache.spark.sql.Column) =
+      m.schema.fields.toSeq.map(f => assignments.get(f.name) match {
+        case Some(value) => assign(f.name, value.cast(f.dataType)).as(f.name)
+        case None => col(f.name)
+      })
+    if (mergeOnRead) tombstone(spark, m, c, None)(_.filter(hit),
+      (rows, anyHit) => Option.when(anyHit)(rows.select(assigned((_, v) => v): _*)))
+    else rewrite(spark, m, c, None)(
+      _.select(assigned((n, v) => when(hit, v).otherwise(col(n))): _*))
   }
 
   /** Spec hook: runs between a row-level op's staging (files written,
@@ -1318,13 +1192,9 @@ final class SnapshotStore(root: String,
     */
   private[etl] var onRowOpStaged: () => Unit = () => ()
 
-  /** Publish a row-level op (CoW MERGE/DELETE/UPDATE, MoR tombstone
-    * variants, op-coded applyChanges) with CONFLICT GRANULARITY — the
-    * second half of optimistic concurrency for DML, mirroring what
-    * [[compactLatest]] already does for maintenance. Without it, ANY
-    * racing commit — even an append, even DML over disjoint files —
-    * failed the op loudly, so two partition-sharded CDC appliers (the
-    * natural sharding at 100 TB) could never run concurrently.
+  /** Row-op step 5: publish with CONFLICT GRANULARITY — the second
+    * half of optimistic concurrency for DML, mirroring what
+    * [[compactLatest]] does for maintenance.
     *
     * On losing the CAS, diff the new latest against the pinned version
     * and REBASE iff all of:
@@ -1424,61 +1294,23 @@ final class SnapshotStore(root: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Added-file conflict test for KEY-range ops (merge/applyChanges):
-    * a racer-added file conflicts when its recorded interval on the
-    * prune column can intersect the op's key range — or when either
-    * side has no stats to say otherwise. With no prune column at all,
-    * every added file conflicts (the op read the whole table).
-    */
-  private def keyRangeConflicts(statsColumn: Option[String],
-      pruneCol: Option[String], range: Option[(Long, Long)])
-      : Seq[FileEntry] => Seq[FileEntry] = added =>
-    pruneCol match {
-      case None => added
-      case Some(c) => range match {
-        case None => Nil // empty source: the op could not have read anything
-        case Some((lo, hi)) =>
-          val cols = statsParts(statsColumn)
-          def interval(e: FileEntry): Option[(Long, Long)] =
-            if (cols.headOption.contains(c)) e.min.zip(e.max)
-            else e.extra.collectFirst { case (`c`, mn, mx) => (mn, mx) }
-          added.filter(e => interval(e) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true // stats-less added file: conservative conflict
-          })
-      }
-    }
-
-  /** Tighten an added-file conflict test with the BLOOM point set: a
-    * racer-added file that range-wise could hold the op's keys still
-    * cannot conflict when its filter excludes every key — finer rebase
-    * granularity for hash/unclustered sharding. A filterless added
-    * file conservatively conflicts (via the range test's own keep).
-    */
-  private def composeBloomConflicts(
-      base: Seq[FileEntry] => Seq[FileEntry],
-      bloomHs: Option[Set[Long]]): Seq[FileEntry] => Seq[FileEntry] =
-    bloomHs match {
-      case None => base
-      case Some(hs) => added => base(added).filter(e => bloomKeep(e, hs))
-    }
-
-  /** Candidate split for a predicate-driven row-level op (DELETE /
-    * UPDATE): resolve the user's Column against the table schema (a
-    * no-data analysis pass), fold its conjuncts into one [lo, hi]
-    * interval per STATS COLUMN — primary and secondary alike — and keep
-    * a file as a candidate only if EVERY recorded interval intersects.
-    * With a comma-list stats property this prunes on all clustered
-    * dimensions at once (the z-order payoff at the DML layer); files
-    * missing stats for a column conservatively survive that column's
-    * test.
+  /** Candidates of a PREDICATE op (DELETE / UPDATE): resolve the user's
+    * Column against the table schema (a no-data analysis pass), fold
+    * its conjuncts into one [lo, hi] interval per STATS COLUMN —
+    * primary and secondary alike — and keep a file only if EVERY
+    * recorded interval intersects. With a comma-list stats property
+    * this prunes on all clustered dimensions at once (the z-order
+    * payoff at the DML layer); files missing stats for a column
+    * conservatively survive that column's test. Point-set skipping on
+    * the BLOOM column composes: a scattered point delete/update skips
+    * every file whose filter says the value cannot be there. A
+    * racer-added file passing the same test would have been a
+    * candidate too — rebasing past it would miss its matching rows.
     */
   private def predicateCandidates(spark: SparkSession, m: Manifest,
-      predicate: org.apache.spark.sql.Column)
-      : (Seq[FileEntry], Seq[FileEntry]) = {
+      predicate: org.apache.spark.sql.Column): Candidates = {
     val cols = statsParts(m.statsColumn)
-    if (cols.isEmpty && m.bloomColumn.isEmpty)
-      return (m.entries, Seq.empty[FileEntry])
+    if (cols.isEmpty && m.bloomColumn.isEmpty) return Candidates(m.entries, identity)
     val probe = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], m.schema).filter(predicate)
     val conds = probe.queryExecution.analyzed.collect {
@@ -1488,21 +1320,12 @@ final class SnapshotStore(root: String,
     def intervalOf(e: FileEntry, c: String): Option[(Long, Long)] =
       if (c == cols.head) e.min.zip(e.max)
       else e.extra.collectFirst { case (`c`, mn, mx) => (mn, mx) }
-    // point-set skipping on the BLOOM column composes with the range
-    // fold: a scattered point delete/update skips every file whose
-    // filter says the value cannot be there — the unclustered-column
-    // pruning range stats cannot give
-    val bloomHs: Option[Set[Long]] =
-      m.bloomColumn.flatMap(bc => bloomHashesOf(bc, conds))
-    m.entries.partition { e =>
-      cols.forall { c =>
-        intervalOf(e, c) match {
-          case Some((mn, mx)) =>
-            val (lo, hi) = boundsByCol(c); mx >= lo && mn <= hi
-          case None => true // no stats for this column -> cannot prune on it
-        }
-      } && bloomHs.forall(hs => bloomKeep(e, hs))
-    }
+    val bloomHs = m.bloomColumn.flatMap(Bloom.pointHashes(_, conds))
+    val keep = (e: FileEntry) =>
+      cols.forall(c => intervalOf(e, c).forall { case (mn, mx) =>
+        val (lo, hi) = boundsByCol(c); mx >= lo && mn <= hi
+      }) && bloomHs.forall(bloomKeep(e, _))
+    Candidates(m.entries.filter(keep), _.filter(keep))
   }
 
   /** Fold resolved predicate conjuncts that constrain `column` into one
@@ -2060,12 +1883,12 @@ final class SnapshotStore(root: String,
     */
   private def restoreImpl(toVersion: Long, spark: Option[SparkSession]): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val cur = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.restore: no committed versions at $root"))
+    val latest = latestManifest("restore")
+    val cur = latest.version
     require(toVersion != cur,
       s"SnapshotStore.restore: version $toVersion is already current")
     val m = readFullManifest(toVersion) // loud when vacuumed
-    val constraints = readFullManifest(cur).constraints
+    val constraints = latest.constraints
     if (constraints.nonEmpty) {
       val s = spark.getOrElse(throw new IllegalArgumentException(
         s"SnapshotStore.restore: this table declares CHECK constraints " +
@@ -2097,7 +1920,7 @@ final class SnapshotStore(root: String,
       // the restored version's COLUMN MAPPING describes its schema and
       // files — it travels with them; `retired` is grow-only, so the
       // current (superset) list is kept
-      mappingOverride = Some((m.colMap, readHeader(cur).retired)))
+      mappingOverride = Some((m.colMap, latest.retired)))
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE ... SHALLOW CLONE`): birth
@@ -2343,9 +2166,7 @@ final class SnapshotStore(root: String,
     * their schema at start: a rename mid-stream needs a restart.
     */
   def renameColumn(spark: SparkSession, oldName: String, newName: String): Long = {
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.renameColumn: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("renameColumn")
     require(m.schema.fieldNames.contains(oldName),
       s"SnapshotStore.renameColumn: no column '$oldName' " +
         s"(have: ${m.schema.fieldNames.mkString(", ")})")
@@ -2359,7 +2180,7 @@ final class SnapshotStore(root: String,
     val colMap = (m.colMap - oldName) ++
       (if (phys != newName) Map(newName -> phys) else Map.empty)
     publishEntries(m.entries, renamed, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols, prev = Some(m),
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols, prev = Some(m),
       mappingOverride = Some((colMap, m.retired)))
   }
 
@@ -2371,9 +2192,7 @@ final class SnapshotStore(root: String,
     * property gates as rename.
     */
   def dropColumn(spark: SparkSession, name: String): Long = {
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.dropColumn: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("dropColumn")
     require(m.schema.fieldNames.contains(name),
       s"SnapshotStore.dropColumn: no column '$name' " +
         s"(have: ${m.schema.fieldNames.mkString(", ")})")
@@ -2383,7 +2202,7 @@ final class SnapshotStore(root: String,
     val phys = m.colMap.getOrElse(name, name)
     val narrowed = StructType(m.schema.fields.filterNot(_.name == name))
     publishEntries(m.entries, narrowed, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols, prev = Some(m),
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols, prev = Some(m),
       mappingOverride = Some((m.colMap - name, (m.retired :+ phys).distinct)))
   }
 
@@ -2405,9 +2224,7 @@ final class SnapshotStore(root: String,
   def widenColumnType(name: String,
       newType: org.apache.spark.sql.types.DataType): Long = {
     import org.apache.spark.sql.types._
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.widenColumnType: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("widenColumnType")
     val f = m.schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"SnapshotStore.widenColumnType: no column '$name' " +
@@ -2487,7 +2304,7 @@ final class SnapshotStore(root: String,
         m.entries.map(_.copy(bloom = None))
       else m.entries
     publishEntries(entriesOut, widened, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols, prev = Some(m),
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols, prev = Some(m),
       mappingOverride = Some((m.colMap, m.retired)))
   }
 
@@ -2505,9 +2322,7 @@ final class SnapshotStore(root: String,
     */
   def addColumns(newCols: StructType): Long = {
     require(newCols.fields.nonEmpty, "SnapshotStore.addColumns: no columns")
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.addColumns: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("addColumns")
     val existing = m.schema.fieldNames.map(_.toLowerCase).toSet
     newCols.fields.foreach(f => require(!existing.contains(f.name.toLowerCase),
       s"SnapshotStore.addColumns: column '${f.name}' already exists"))
@@ -2515,7 +2330,7 @@ final class SnapshotStore(root: String,
     val colMap = extendMapping(m.colMap, m.retired, m.schema,
       newCols.fieldNames.toSeq)
     publishEntries(m.entries, widened, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols, prev = Some(m),
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols, prev = Some(m),
       mappingOverride = Some((colMap, m.retired)))
   }
 
@@ -2533,20 +2348,18 @@ final class SnapshotStore(root: String,
       s"SnapshotStore.addConstraint: bad constraint name '$name'")
     require(!check.contains("\t") && !check.contains("\n"),
       "SnapshotStore.addConstraint: the CHECK text cannot contain tabs/newlines")
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.addConstraint: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("addConstraint")
     require(!m.constraints.exists(_._1 == name),
       s"SnapshotStore.addConstraint: constraint '$name' already exists")
     val expr = org.apache.spark.sql.GraftExprBridge.column(
       spark.sessionState.sqlParser.parseExpression(check))
-    val violations = read(spark, Some(v))
+    val violations = read(spark, Some(m.version))
       .filter(not(coalesce(expr, lit(true)))).count()
     require(violations == 0L,
       s"SnapshotStore.addConstraint: $violations existing rows violate " +
         s"CHECK ($check) — clean the data first")
     publishEntries(m.entries, m.schema, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols,
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols,
       constraintsOverride = Some(m.constraints :+ (name -> check)))
   }
 
@@ -2563,9 +2376,7 @@ final class SnapshotStore(root: String,
     * the index, paid only while the property is set.
     */
   def setBloomFilter(column: Option[String]): Long = {
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.setBloomFilter: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("setBloomFilter")
     column.foreach { c =>
       require(m.schema.fieldNames.contains(c),
         s"SnapshotStore.setBloomFilter: no column '$c' " +
@@ -2583,7 +2394,7 @@ final class SnapshotStore(root: String,
       if (column == m.bloomColumn) m.entries
       else m.entries.map(_.copy(bloom = None))
     publishEntries(entriesOut, m.schema, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols, prev = Some(m),
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols, prev = Some(m),
       bloomOverride = Some(column))
   }
 
@@ -2720,10 +2531,6 @@ final class SnapshotStore(root: String,
         entries.map(e => e.copy(bloom = blooms.get(e.path)))
     }
 
-  private def bloomHashesOf(column: String,
-      preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Option[Set[Long]] = Bloom.pointHashes(column, preds)
-
   /** Keep-test for one file against a pinned point set: a file with no
     * recorded filter is always kept; one with a filter survives only if
     * ANY pinned value might be in it.
@@ -2755,14 +2562,12 @@ final class SnapshotStore(root: String,
 
   /** `ALTER TABLE ... DROP CONSTRAINT name` — O(manifest). */
   def dropConstraint(name: String): Long = {
-    val v = latestVersion.getOrElse(throw new IllegalArgumentException(
-      s"SnapshotStore.dropConstraint: no committed versions at $root"))
-    val m = readFullManifest(v)
+    val m = latestManifest("dropConstraint")
     require(m.constraints.exists(_._1 == name),
       s"SnapshotStore.dropConstraint: no constraint '$name' " +
         s"(have: ${m.constraints.map(_._1).mkString(", ")})")
     publishEntries(m.entries, m.schema, m.statsColumn,
-      expectedVersion = Some(v + 1L), partCols = m.partCols,
+      expectedVersion = Some(m.version + 1L), partCols = m.partCols,
       constraintsOverride = Some(m.constraints.filterNot(_._1 == name)))
   }
 
@@ -3206,9 +3011,10 @@ final class SnapshotStore(root: String,
   /** Live rows of `entries` with `__file`/`__pos` attached: the plain
     * positioned scan when no entry carries a deletion vector, the
     * DV anti-join otherwise — the one definition of "what a MoR write
-    * may tombstone" shared by deleteWhere / updateWhere / mergeInto
-    * (a row two MoR writes both hit must be tombstoned ONCE, or the
-    * change feed would emit its delete twice).
+    * may tombstone", read by [[tombstone]] for every merge-on-read op
+    * (deleteWhere, updateWhere, mergeInto, applyChanges): a row two MoR
+    * writes both hit must be tombstoned ONCE, or the change feed would
+    * emit its delete twice.
     */
   private def liveWithPos(spark: SparkSession, schema: StructType,
       entries: Seq[FileEntry], partCols: Seq[String],
@@ -3562,6 +3368,14 @@ final class SnapshotStore(root: String,
     }
     withBlooms(df.sparkSession, entries, bloomColumn, colMap)
   }
+
+  /** Row-op step 4: stage `df` under `m`'s layout — hive-partitioned
+    * when the table is, with its stats column, column mapping and bloom
+    * property.
+    */
+  private def restage(m: Manifest, df: DataFrame): Seq[FileEntry] =
+    if (m.partCols.isEmpty) stageEntries(df, m.statsColumn, m.colMap, m.bloomColumn)
+    else stagePartitioned(df, m.partCols, m.statsColumn, m.colMap, m.bloomColumn)
 
   /** The stats property as its column list: `"a"` → Seq(a); `"a,b,c"` →
     * Seq(a, b, c). The FIRST column is the PRIMARY — the clustering /

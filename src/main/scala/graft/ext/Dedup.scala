@@ -210,6 +210,67 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** The AllPairs prefix index of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: `sh` (doc_id, shingles) pinned, `post` its
+    * postings (doc_id, __n, g), and `indexed` — each document's first
+    * |d| − ⌈t·|d|⌉ + 1 shingles (doc_id, g, __n) in rarest-first order.
+    * Unless `maxCandidatePairs <= 0`, `indexed` is a lazy
+    * localCheckpoint materialized by the candidate-space preflight: the
+    * Σ_g c_g² estimate of joining it with `probe(indexed, post)` must
+    * stay within the bound, or the op fails with `advice`.
+    */
+  private final case class PrefixIndex(sh: DataFrame, post: DataFrame,
+      indexed: DataFrame)
+
+  private def prefixIndex(op: String, docs: DataFrame, idCol: String,
+      textCol: String, shingleSize: Int, threshold: Double,
+      maxCandidatePairs: Long, advice: String)(
+      probe: (DataFrame, DataFrame) => DataFrame): PrefixIndex = {
+    // The shingle relation feeds FIVE consumers (postings→dfreq,
+    // postings→prefix join, and both verify-join sides) — without a pin
+    // each consumer re-runs tokenize+shingle-hash over the corpus text
+    // (the q171/q147 multi-consumer lesson). Pin it once: everything
+    // downstream reads 8-byte hash arrays, the text is scanned once.
+    val sh = docs.select(
+      col(idCol).as("doc_id"),
+      graft.functions.TextFunctions
+        .wordShingleHashes(col(textCol), shingleSize, TextHash.MinhashPrime).as("shingles"))
+      .localCheckpoint(false)
+    // Canonical order = rarest-first (ascending document frequency,
+    // hash as tiebreak): prefixes then hold each document's most
+    // selective shingles, so prefix-join candidates approach the true
+    // pair count instead of colliding on boilerplate shingles.
+    // __n (set size) rides along from BEFORE the explode — computing it
+    // as count().over(partitionBy(doc_id)) after the explode would cost
+    // a second window pass over the whole postings relation
+    val post = sh.select(col("doc_id"), size(col("shingles")).as("__n"),
+      explode(col("shingles")).as("g"))
+    val dfreq = post.groupBy(col("g")).agg(count(lit(1)).as("df"))
+    val tDec = lit(java.math.BigDecimal.valueOf(threshold))
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
+    val prefix = post.join(dfreq, Seq("g"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= col("__n") - ceil(tDec * col("__n")).cast("int") + 1)
+      .select(col("doc_id"), col("g"), col("__n"))
+    val indexed =
+      if (maxCandidatePairs <= 0) prefix
+      else {
+        // the preflight's job materializes the checkpointed prefix, so
+        // the candidate join re-reads blocks instead of re-running the
+        // posting window (the q37 pattern)
+        val ck = prefix.localCheckpoint(false)
+        val est = Profile.joinCardinality(ck, col("g"), probe(ck, post), col("g"))
+          .agg(sum(col("out_rows")).as("est"))
+          .head().getDecimal(0)
+        require(est == null ||
+            est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
+          s"$op: estimated candidate space $est exceeds " +
+            s"maxCandidatePairs=$maxCandidatePairs — $advice")
+        ck
+      }
+    PrefixIndex(sh, post, indexed)
+  }
+
   /** EXACT n-gram Jaccard pairs with prefix filtering (the AllPairs
     * scheme, Bayardo et al., "Scaling Up All Pairs Similarity Search",
     * WWW'07): shingle sets are 60-bit md5 hashes sorted in a global
@@ -250,49 +311,14 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.5,
       maxCandidatePairs: Long = 100000000L): DataFrame = {
-    // The shingle relation feeds FIVE consumers (postings→dfreq,
-    // postings→prefix join, and both verify-join sides) — without a pin
-    // each consumer re-runs tokenize+shingle-hash over the corpus text
-    // (the q171/q147 multi-consumer lesson). Pin it once: everything
-    // downstream reads 8-byte hash arrays, the text is scanned once.
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      graft.functions.TextFunctions
-        .wordShingleHashes(col(textCol), shingleSize, TextHash.MinhashPrime).as("shingles"))
-      .localCheckpoint(false)
-    // Canonical order = rarest-first (ascending document frequency,
-    // hash as tiebreak): prefixes then hold each document's most
-    // selective shingles, so prefix-join candidates approach the true
-    // pair count instead of colliding on boilerplate shingles.
-    // __n (set size) rides along from BEFORE the explode — computing it
-    // as count().over(partitionBy(doc_id)) after the explode would cost
-    // a second window pass over the whole postings relation
-    val post = sh.select(col("doc_id"), size(col("shingles")).as("__n"),
-      explode(col("shingles")).as("g"))
-    val dfreq = post.groupBy(col("g")).agg(count(lit(1)).as("df"))
+    val PrefixIndex(sh, _, indexed) = prefixIndex("ngramJaccardPairs", docs,
+      idCol, textCol, shingleSize, threshold, maxCandidatePairs,
+      "the verified-pair space is " +
+        "quadratic in per-cluster duplication. Collapse identical docs first " +
+        "(Dedup.exact / nearDupCanonical, the q64 composition), use " +
+        "minhashLshPairs for probabilistic recall, or raise/disable the " +
+        "bound (maxCandidatePairs <= 0) if the cost is intended")((ck, _) => ck)
     val tDec = lit(java.math.BigDecimal.valueOf(threshold))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
-    val prefix = post.join(dfreq, Seq("g"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col("__n") - ceil(tDec * col("__n")).cast("int") + 1)
-      .select(col("doc_id"), col("g"), col("__n"))
-    val indexed =
-      if (maxCandidatePairs <= 0) prefix
-      else {
-        val ck = prefix.localCheckpoint(false)
-        val est = Profile.joinCardinality(ck, col("g"), ck, col("g"))
-          .agg(sum(col("out_rows")).as("est"))
-          .head().getDecimal(0)
-        require(est == null ||
-            est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
-          s"ngramJaccardPairs: estimated candidate space $est exceeds " +
-            s"maxCandidatePairs=$maxCandidatePairs — the verified-pair space is " +
-            "quadratic in per-cluster duplication. Collapse identical docs first " +
-            "(Dedup.exact / nearDupCanonical, the q64 composition), use " +
-            "minhashLshPairs for probabilistic recall, or raise/disable the " +
-            "bound (maxCandidatePairs <= 0) if the cost is intended")
-        ck
-      }
     val cand = indexed.as("a").join(indexed.as("b"), col("a.g") === col("b.g"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       // length filter: J ≥ t ⟹ min(|A|,|B|)/max(|A|,|B|) ≥ t
@@ -337,43 +363,14 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.8,
       maxCandidatePairs: Long = 100000000L): DataFrame = {
-    // pinned for the same five-consumer reason as ngramJaccardPairs —
-    // and here `full = post` additionally rides the candidate join
-    // directly, so the unpinned chain re-tokenized the corpus per use
-    val sh = docs.select(
-      col(idCol).as("doc_id"),
-      graft.functions.TextFunctions
-        .wordShingleHashes(col(textCol), shingleSize, TextHash.MinhashPrime).as("shingles"))
-      .localCheckpoint(false)
-    val post = sh.select(col("doc_id"), size(col("shingles")).as("__n"),
-      explode(col("shingles")).as("g"))
-    val dfreq = post.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val tDec = lit(java.math.BigDecimal.valueOf(threshold))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))
-    val prefix = post.join(dfreq, Seq("g"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col("__n") - ceil(tDec * col("__n")).cast("int") + 1)
-      .select(col("doc_id"), col("g"), col("__n"))
-    val full = post
-    val indexed =
-      if (maxCandidatePairs <= 0) prefix
-      else {
-        // the preflight's job materializes the checkpointed prefix, so
-        // the candidate join re-reads blocks instead of re-running the
-        // posting window (the q37 pattern)
-        val ck = prefix.localCheckpoint(false)
-        val est = Profile.joinCardinality(ck, col("g"), full, col("g"))
-          .agg(sum(col("out_rows")).as("est"))
-          .head().getDecimal(0)
-        require(est == null ||
-            est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
-          s"containmentPairs: estimated candidate space $est exceeds " +
-            s"maxCandidatePairs=$maxCandidatePairs — prefix-side postings are " +
-            "colliding on common shingles. Collapse identical docs first " +
-            "(Dedup.exact), raise the shingle size, or disable the bound " +
-            "(maxCandidatePairs <= 0) if the cost is intended")
-        ck
-      }
+    // the contained side's prefix joins the containing side's FULL
+    // postings, so the preflight estimates prefix × postings
+    val PrefixIndex(sh, full, indexed) = prefixIndex("containmentPairs", docs,
+      idCol, textCol, shingleSize, threshold, maxCandidatePairs,
+      "prefix-side postings are " +
+        "colliding on common shingles. Collapse identical docs first " +
+        "(Dedup.exact), raise the shingle size, or disable the bound " +
+        "(maxCandidatePairs <= 0) if the cost is intended")((_, post) => post)
     val cand = indexed.as("a").join(full.as("b"),
         col("a.g") === col("b.g") &&
           (col("b.__n") > col("a.__n") ||

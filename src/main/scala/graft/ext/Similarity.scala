@@ -78,6 +78,27 @@ object Similarity {
       struct(sqDistMicro(svec, c.getField("cent_vec")).as("d"),
         c.getField("cent_id").as("cid")))).getField("cid")
 
+  /** The Lloyd's update step of every k-means trainer here, under
+    * [[kmeansCentroids]]' determinism contract: per (`groups`, `cell`,
+    * pos) the exact-decimal mean of `assigned`'s `vec` components,
+    * packed back into a pos-ordered `cent_vec` per (`groups`, `cell` as
+    * `cent_id`).
+    */
+  private def centroidUpdate(assigned: DataFrame, vec: String,
+      groups: String*): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    val g = groups.map(col)
+    assigned
+      .select(g :+ col("cell") :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+      .groupBy(g :+ col("cell") :+ col("pos"): _*)
+      .agg((sum(col("v").cast(DecimalType(38, 10))).cast("double") /
+        count(lit(1)).cast("double")).as("m"))
+      .groupBy(g :+ col("cell"): _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(g :+ col("cell").as("cent_id") :+
+        transform(col("pm"), x => x.getField("m")).as("cent_vec"): _*)
+  }
+
   /** Brute-force top-k by cosine against one query vector (itself a row
     * of `df` identified by `queryId`). The 1-row query side is
     * broadcast; the corpus is never shuffled (TakeOrderedAndProject).
@@ -136,7 +157,6 @@ object Similarity {
     */
   def kmeansCentroids(vecs: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val base = vecs.select(col(idCol).as("vid"), asDouble(col(vecCol)).as("vec"))
     var cents = base.filter(col("vid") < k)
       .select(col("vid").as("cent_id"), col("vec").as("cent_vec"))
@@ -148,15 +168,7 @@ object Similarity {
       val assigned = base.crossJoin(broadcast(centsPacked(cents)))
         .select(col("vid"), col("vec"),
           argmaxCosCell(col("vec"), col("__cents")).as("cell"))
-      cents = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg((sum(col("v").cast(DecimalType(38, 10))).cast("double") /
-          count(lit(1)).cast("double")).as("m"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cell").as("cent_id"),
-          transform(col("pm"), x => x.getField("m")).as("cent_vec"))
+      cents = centroidUpdate(assigned, "vec")
     }
     cents
   }
@@ -338,7 +350,7 @@ object Similarity {
     *
     * Scale posture: both centroid tables stay broadcast-sized (√k and
     * k rows); the corpus is never shuffled by vector — level-2
-    * training moves (ccell, fcell, pos, value) triples through
+    * training moves (coarse cell, fine cell, pos, value) triples through
     * partial-aggregating groupBys exactly like the flat trainer. At
     * 100 TB train both levels on a hash-sample
     * ([[graft.ext.Sampling.hashSample]]) and reuse the centroids.
@@ -346,7 +358,6 @@ object Similarity {
   def twoLevelCells(df: DataFrame, idCol: String, vecCol: String,
       k: Int, kmeansIters: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     require(k >= 2, s"twoLevelCells: k >= 2 required, got $k")
     val kCoarse = math.ceil(math.sqrt(k.toDouble)).toInt
     val kFine = (k + kCoarse - 1) / kCoarse
@@ -378,16 +389,8 @@ object Similarity {
           cosineSim(col("vec"), col("cent_vec")).as("__cc"))
         .withColumn("__rn", row_number().over(wf))
         .filter(col("__rn") === 1)
-        .select(col("ccell"), col("vid"), col("vec"), col("cent_id").as("fcell"))
-      fine = assigned
-        .select(col("ccell"), col("fcell"), posexplode(col("vec")).as(Seq("pos", "v")))
-        .groupBy(col("ccell"), col("fcell"), col("pos"))
-        .agg((sum(col("v").cast(DecimalType(38, 10))).cast("double") /
-          count(lit(1)).cast("double")).as("m"))
-        .groupBy(col("ccell"), col("fcell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("ccell"), col("fcell").as("cent_id"),
-          transform(col("pm"), x => x.getField("m")).as("cent_vec"))
+        .select(col("ccell"), col("vid"), col("vec"), col("cent_id").as("cell"))
+      fine = centroidUpdate(assigned, "vec", "ccell")
     }
     coarse.join(broadcast(fine), Seq("ccell"))
       .select(col("ccell"), col("vid"), col("vec"), col("cent_id"),
@@ -481,7 +484,6 @@ object Similarity {
     * old per-vid window.
     */
   private def kmeansSubCentroidsAll(subs: DataFrame, ksub: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     var cents = subs.filter(col("vid") < ksub)
       .select(col("subspace"), col("vid").as("cent_id"), col("svec").as("cent_vec"))
     for (_ <- 1 to iters) {
@@ -489,15 +491,7 @@ object Similarity {
         .join(broadcast(centsPacked(cents, "subspace")), Seq("subspace"))
         .select(col("subspace"), col("vid"), col("svec"),
           argminL2Code(col("svec"), col("__cents")).as("cell"))
-      cents = assigned
-        .select(col("subspace"), col("cell"), posexplode(col("svec")).as(Seq("pos", "v")))
-        .groupBy(col("subspace"), col("cell"), col("pos"))
-        .agg((sum(col("v").cast(DecimalType(38, 10))).cast("double") /
-          count(lit(1)).cast("double")).as("m"))
-        .groupBy(col("subspace"), col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("subspace"), col("cell").as("cent_id"),
-          transform(col("pm"), x => x.getField("m")).as("cent_vec"))
+      cents = centroidUpdate(assigned, "svec", "subspace")
     }
     cents
   }

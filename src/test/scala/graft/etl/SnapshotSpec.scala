@@ -1011,11 +1011,36 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
       statsColumn = Some("id"))
     val delta = Seq((Some(5L), "upd"), (None, "null-key"))
       .toDF("id", "v")
-    val e = intercept[IllegalArgumentException] {
-      store.mergeInto(spark, delta, Seq("id"))
+    val changes = delta.withColumn("op", lit("U"))
+    // every keyed apply refuses under key-range pruning: both upsert
+    // physics and both change-apply physics
+    val refused = Seq[(String, () => Long)](
+      "mergeInto" -> (() => store.mergeInto(spark, delta, Seq("id"))),
+      "mergeInto(mergeOnRead)" -> (() =>
+        store.mergeInto(spark, delta, Seq("id"), mergeOnRead = true)),
+      "applyChanges" -> (() => store.applyChanges(spark, changes, Seq("id"))),
+      "applyChanges(mergeOnRead)" -> (() =>
+        store.applyChanges(spark, changes, Seq("id"), mergeOnRead = true)))
+    refused.foreach { case (name, op) =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("NULL"), s"$name: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("NULL"))
     assert(store.versions == Seq(0L), "a refused merge commits nothing")
+    // general MERGE lets a NULL source key through: it never matches
+    // (SQL equality), so it takes the NOT MATCHED insert, and a source
+    // with no matchable key rewrites no file
+    import SnapshotStore.{MergeInsert, MergeUpdate}
+    val before = store.readFullManifest(0L).entries.map(_.path).toSet
+    val v1 = store.mergeClauses(spark, Seq((None: Option[Long], "null-key"))
+        .toDF("id", "v"), Seq("id"),
+      matched = Seq(MergeUpdate(None, Map.empty)),
+      notMatched = Seq(MergeInsert(None, Map.empty)))
+    val after = store.readFullManifest(v1).entries.map(_.path).toSet
+    assert(before.subsetOf(after), "no candidate file was rewritten")
+    val got = store.read(spark)
+    assert(got.count() == 101L)
+    assert(got.filter($"id".isNull).select("v").as[String].collect().toSeq ==
+      Seq("null-key"))
   }
 
   test("copy-on-write delete prunes by predicate bounds; NULL predicate rows are kept") {
@@ -2443,6 +2468,11 @@ class SnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.getMessage.contains("compactLatest"))
     assert(intercept[IllegalArgumentException] {
       store.deleteWhere(spark, $"id" === 1L)
+    }.getMessage.contains("field id"))
+    assert(intercept[IllegalArgumentException] {
+      store.mergeClauses(spark, Seq((9L, "z")).toDF("id", "v"), Seq("id"),
+        matched = Seq(SnapshotStore.MergeUpdate(None, Map.empty)),
+        notMatched = Seq(SnapshotStore.MergeInsert(None, Map.empty)))
     }.getMessage.contains("field id"))
     // a FULL compaction materializes native (ids stripped, name path);
     // a partial one would mix resolution modes — refused
